@@ -30,6 +30,30 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.queryExecution.executedPlan.toString
   }
 
+  private def hintTargets(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.analyzed.collect {
+      case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h.child
+    }
+
+  /** The s_ivf_search broadcast rule: a forced-broadcast target is
+    * probe-bounded if it carries the probe filter (vec_id < 10), or if
+    * every leaf is a driver-local table and those tables hold at most
+    * 16 rows in total (the model's seed rows, vec_id < 16). The bound
+    * is a literal on purpose: a seed set grown to corpus scale must fail
+    * this audit, not move its bound along with it.
+    */
+  private def ivfProbeBounded(
+      target: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
+    val probeFiltered =
+      """vec_id#\d+L? < (cast\()?10""".r.findFirstIn(target.toString).isDefined
+    val leaves = target.collectLeaves()
+    val localRows = leaves.collect {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l.data.size
+    }
+    val smallLocalTable = localRows.size == leaves.size && localRows.sum <= 16
+    probeFiltered || smallLocalTable
+  }
+
   test("fact-proportional joins carry no forced broadcast of the big side") {
     // q3/q5/q_part_type_revenue join lineitem against sf-proportional
     // dims (customer/orders/part): with AQE free to choose, the LOGICAL
@@ -134,21 +158,47 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"candidate generation must be the cid equi-join:\n$p")
       // the probe-cell and probe-embedding sides are bounded (probes ×
       // nprobe) and carry explicit broadcast() hints; the corpus side
-      // must never be FORCED to broadcast — every hint target in the
-      // analyzed plan must contain the probe bound (vec_id < 10).
+      // must never be FORCED to broadcast. Every hint target in the
+      // analyzed plan must be probe-bounded in one of two forms: it
+      // carries the probe filter (vec_id < 10), or it is a driver-local
+      // table of at most 16 rows in total (the probe frames built from
+      // the model's seed rows). 16 is a literal, not the program's seed
+      // constant, so growing the seed set to corpus scale fails here.
       // (Stats may still broadcast the tiny corpus at this sf — that
       // decision belongs to stats, same rule as the fact-join test.)
-      val hints = df.queryExecution.analyzed.collect {
-        case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
-      }
+      val hints = hintTargets(df)
       assert(hints.nonEmpty, s"bounded probe sides must carry hints:\n$p")
       hints.foreach { h =>
-        val txt = h.child.toString
-        assert("""vec_id#\d+L? < (cast\()?10""".r.findFirstIn(txt).isDefined,
-          s"a forced-broadcast side is not probe-bounded — corpus " +
-            s"broadcast?\n$txt")
+        assert(ivfProbeBounded(h),
+          s"a forced-broadcast side carries neither the probe filter " +
+            s"(vec_id < 10) nor is a local table of at most 16 rows " +
+            s"— corpus broadcast?\n$h")
       }
     } finally graft.queries.Similarity.releaseAllIvfModels()
+  }
+
+  test("s_ivf_search audit rule rejects corpus and over-bound local broadcasts") {
+    // the rule must still catch what the filter-only rule caught (a
+    // forced broadcast of the unfiltered corpus scan) and must not
+    // accept a local table merely for being local: a corpus collected
+    // to the driver and re-wrapped as a local frame fails on rows
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.broadcast
+    def target(df: org.apache.spark.sql.DataFrame) = {
+      val hs = hintTargets(df)
+      assert(hs.size == 1, s"expected one hint target:\n$hs")
+      hs.head
+    }
+    val corpus = target(broadcast(spark.read.parquet(s"$sf/embeddings.parquet")))
+    assert(!ivfProbeBounded(corpus),
+      s"unfiltered corpus scan must be rejected:\n$corpus")
+    val local17 = target(broadcast((0L until 17L).toDF("vec_id")))
+    assert(!ivfProbeBounded(local17),
+      s"a 17-row local frame must be rejected:\n$local17")
+    val local10 = target(broadcast((0L until 10L).toDF("vec_id")))
+    assert(ivfProbeBounded(local10),
+      s"a 10-row local frame must be accepted:\n$local10")
   }
 
   test("s_pq_search: ADC join on (m, code) with bounded broadcasts only") {
@@ -161,15 +211,13 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       // forced broadcasts: the probe-cell route (vec_id < 10) and the
       // driver-built ADC lookup table (a LocalRelation of probes×M×K
       // rows) — never the corpus code side
-      val hints = df.queryExecution.analyzed.collect {
-        case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
-      }
+      val hints = hintTargets(df)
       assert(hints.nonEmpty, s"bounded sides must carry hints:\n$p")
       hints.foreach { h =>
-        val txt = h.child.toString
+        val txt = h.toString
         val probeBounded =
           """vec_id#\d+L? < (cast\()?10""".r.findFirstIn(txt).isDefined
-        val localTable = h.child.collectLeaves().forall(
+        val localTable = h.collectLeaves().forall(
           _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
         assert(probeBounded || localTable,
           s"a forced-broadcast side is neither probe-bounded nor a " +
@@ -190,15 +238,13 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       // bounded to probes x R rows by its rank <= R filter even though
       // its lineage includes corpus scans. The corpus code side itself
       // must never carry a broadcast hint.
-      val hints = df.queryExecution.analyzed.collect {
-        case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
-      }
+      val hints = hintTargets(df)
       assert(hints.nonEmpty, s"bounded sides must carry hints:\n$p")
       hints.foreach { h =>
-        val txt = h.child.toString
+        val txt = h.toString
         val probeBounded =
           """vec_id#\d+L? < (cast\()?10""".r.findFirstIn(txt).isDefined
-        val localTable = h.child.collectLeaves().forall(
+        val localTable = h.collectLeaves().forall(
           _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
         val shortlistBounded =
           """(rank|lr)#\d+ <= 20""".r.findFirstIn(txt).isDefined
