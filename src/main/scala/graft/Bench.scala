@@ -184,9 +184,10 @@ object Bench {
   private[graft] val CertifySpreadPct = 25.0
 
   /** Bench rows are grouped into FAMILIES by name prefix (`c_*`
-    * connector, `d_*` dedup, …); the c and d families intentionally
-    * share memoized storage across their rows (connector setup tables,
-    * the near-dup pair/label frames). Everything else must leave the
+    * connector, `d_*` dedup, …); the c, d, s and t families
+    * intentionally share cached artifacts across their rows (connector
+    * setup tables, the near-dup pair/label frames, the IVF/PQ model,
+    * the BPE merges). Everything else must leave the
     * executors exactly as it found them — a leak here is ballast for
     * every later row and the prime suspect whenever an untouched plan
     * regresses round-over-round.
@@ -198,20 +199,15 @@ object Bench {
     * report what is STILL alive — the caller warns (main) or asserts
     * (BenchSpec) on the result, so a plan edit that starts leaking
     * executor storage across families is caught the round it lands.
+    *
+    * `family` no longer selects what is released: every artifact the
+    * session cached for `sfDir` goes. Each artifact is read only by
+    * rows of the family that builds it, so at a family boundary that
+    * is exactly the finished family's storage.
     */
   private[graft] def releaseFamily(spark: SparkSession, family: String,
       sfDir: String): Seq[String] = {
-    family match {
-      case "d" =>
-        graft.queries.Pipeline.releaseAllDupClusterLabels()
-        graft.queries.Dedup.releaseAllNearDupPairs()
-      case "s" =>
-        graft.queries.Similarity.releaseAllIvfModels()
-      case "c" =>
-        try graft.queries.ConnectorQ.release(spark, sfDir)
-        catch { case _: Throwable => () }
-      case _ => ()
-    }
+    graft.queries.ArtifactCache.release(spark, sfDir)
     unloadStateStores()
     leakedStorage(spark)
   }

@@ -7,8 +7,9 @@ import Tables._
   * (DSv2 catalog → GraftScan → SortMergeReader → FileStoreCommit)
   * instead of raw parquet — the surface every other query family
   * bypasses. Each fn materializes the sf `events` parquet into temp
-  * graft tables once per JVM (memoized), then returns a pure read
-  * whose result is reproducible by DuckDB SQL over the SAME parquet:
+  * graft tables once per (session, dir) ([[ArtifactCache]]), then
+  * returns a pure read whose result is reproducible by DuckDB SQL over
+  * the SAME parquet:
   *
   *  - PK merge across two commits ≙ last-write-wins by sequence
   *    (`pypaimon/pynative/tests/test_pynative_reader.py:185-208`):
@@ -27,15 +28,6 @@ import Tables._
 object ConnectorQ {
 
   final private case class Setup(ns: String, mid: Long, minUser: Long)
-
-  // Keyed by (session identity, dir) like every sibling memo
-  // (Dedup/Similarity/Curation/Pipeline): the mapping CONFIGURES the
-  // session's graft_c catalog, so a second SparkSession in the same
-  // JVM must run its own setup (its session conf has no catalog and
-  // gets its own temp warehouse), not inherit a Setup built on another
-  // session's conf.
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Setup]()
 
   /** Spark-SQL exact-cents of `value` — same expression as sqlCents. */
   private val C = "CAST(ROUND(value*100, 0) AS BIGINT)"
@@ -70,39 +62,36 @@ object ConnectorQ {
     try f finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** Drop the memoized per-dir namespace (tables + temp-warehouse
-    * bytes) so a long-lived session sweeping many dirs doesn't
-    * accumulate one warehouse's worth of graft tables per dir. The
-    * next query against the same dir re-runs setup from scratch. */
   /** Test hook: the live namespace a (session, dir) setup owns. */
   private[graft] def activeNamespace(s: SparkSession,
       dir: String): Option[String] =
-    Option(memo.get((SessionKey.id(s), dir))).map(_.ns)
+    ArtifactCache.peek[Setup](s, dir, "connector.setup").map(_.ns)
 
-  def release(s: SparkSession, dir: String): Unit =
-    Option(memo.remove((SessionKey.id(s), dir))).foreach { st =>
-      try s.sql(s"DROP NAMESPACE IF EXISTS graft_c.${st.ns} CASCADE")
-      catch { case _: Throwable => () } // already-stopped session
-      // stream checkpoints + file-sink output are keyed by ns too: a
-      // re-setup of the SAME dir rebuilds its tables with fresh
-      // snapshot ids, and a restarted stream must not resume from the
-      // dropped incarnation's offsets (or re-serve its sink files)
-      try {
-        import java.nio.file.{Files, Paths}
-        s.conf.getOption("spark.sql.catalog.graft_c.warehouse").foreach { w =>
-          val streams = Paths.get(w, "_streams")
-          if (Files.exists(streams)) {
-            // close the listing stream: one leaked directory fd per
-            // release otherwise — and release runs at every bench
-            // family boundary for the session's whole life
-            val ls = Files.list(streams)
-            try ls.filter(p => p.getFileName.toString.endsWith("_" + st.ns))
-              .forEach(p => graft.util.Fs.deleteRecursively(p))
-            finally ls.close()
-          }
-        }
-      } catch { case _: Throwable => () }
+  /** Drop a setup's namespace (tables + temp-warehouse bytes) so a
+    * long-lived session sweeping many dirs doesn't accumulate one
+    * warehouse's worth of graft tables per dir. The next query against
+    * the same dir re-runs setup from scratch. */
+  private def dropSetup(s: SparkSession)(st: Setup): Unit = {
+    try s.sql(s"DROP NAMESPACE IF EXISTS graft_c.${st.ns} CASCADE")
+    catch { case _: Throwable => () }
+    // stream checkpoints + file-sink output are keyed by ns too: a
+    // re-setup of the SAME dir rebuilds its tables with fresh
+    // snapshot ids, and a restarted stream must not resume from the
+    // dropped incarnation's offsets (or re-serve its sink files)
+    import java.nio.file.{Files, Paths}
+    s.conf.getOption("spark.sql.catalog.graft_c.warehouse").foreach { w =>
+      val streams = Paths.get(w, "_streams")
+      if (Files.exists(streams)) {
+        // close the listing stream: one leaked directory fd per
+        // release otherwise — and release runs at every bench
+        // family boundary for the session's whole life
+        val ls = Files.list(streams)
+        try ls.filter(p => p.getFileName.toString.endsWith("_" + st.ns))
+          .forEach(p => graft.util.Fs.deleteRecursively(p))
+        finally ls.close()
+      }
     }
+  }
 
   /** Guarded, failure-atomic seed of the `doc_fp` fingerprint STORE
     * (the durable PK table the ingest-dedup story hinges on): batch A
@@ -111,8 +100,8 @@ object ConnectorQ {
     * fingerprint with first_doc provenance. A half-seeded store
     * (CREATE + first INSERT ok, second INSERT thrown) must not survive
     * the guard — later runs in this JVM would silently reuse it and
-    * report zero late admissions; same contract as the setup memo's
-    * "computeIfAbsent stores nothing on throw". Shared by
+    * report zero late admissions; same contract as the artifact
+    * cache's "a build that throws stores nothing". Shared by
     * `c_dedup_ingest` and `c_stream_changelog_dedup`. Returns
     * (store table, per-doc fingerprint view).
     */
@@ -150,11 +139,11 @@ object ConnectorQ {
   }
 
   private def setup(s: SparkSession, dir: String): Setup =
-    memo.computeIfAbsent((SessionKey.id(s), dir),
-        _ => ConnectorQ.synchronized {
+    ArtifactCache(s, dir, "connector.setup", dropSetup(s))(
+        ConnectorQ.synchronized {
       if (!s.conf.getOption("spark.sql.catalog.graft_c").exists(_.nonEmpty)) {
         val wh = java.nio.file.Files.createTempDirectory("graft-qwh")
-        // release() drops namespaces, but the per-JVM warehouse root
+        // releases drop namespaces, but the per-JVM warehouse root
         // itself must not accumulate in the system temp dir across runs
         Runtime.getRuntime.addShutdownHook(new Thread(() =>
           graft.util.Fs.deleteRecursively(wh)))
@@ -163,7 +152,7 @@ object ConnectorQ {
       }
       // the session token keeps two sessions SHARING a warehouse
       // (inherited catalog conf) out of each other's tables, matching
-      // the memo key — and unlike an identity hash it is never reused
+      // the cache key — and unlike an identity hash it is never reused
       // after a session dies, so a successor can't collide into a
       // dead session's namespace
       val ns = s"c${SessionKey.shortId(s)}" +
@@ -174,7 +163,7 @@ object ConnectorQ {
 
   /** The actual table builds, failure-ATOMIC: any thrown statement
     * drops the whole namespace before rethrowing, so a later retry (the
-    * memo stores nothing on throw) re-runs against a clean slate
+    * cache stores nothing on throw) re-runs against a clean slate
     * instead of hitting TableAlreadyExists forever — the same contract
     * the guarded seed rows (c_dedup_ingest, c_api_arrow) implement.
     */

@@ -137,15 +137,6 @@ object Curation {
         s"cnt AS n_occurrences FROM best$r")
       .mkString("", " UNION ALL ", " ORDER BY round")
 
-  /** Trained BPE merge list `(round, pair, n_occurrences)`, memoized
-    * per (session, dir): `t_bpe_train` reports it, `t_bpe_encode`
-    * applies it — ONE training pass serves both, the same
-    * train-once/serve-many pattern as the IVF model memo. Driver-side
-    * constants only (BpeRounds strings); nothing to release.
-    */
-  private val bpeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Seq[(Long, String, Long)]]()
-
   /** Vocabulary-size gate between the driver merge loop and the
     * distributed rounds. Injectable so CurationSpec can force the
     * distributed branch on a small corpus and pin its equivalence to
@@ -154,13 +145,16 @@ object Curation {
     */
   @volatile private[graft] var bpeDriverGate: Long = 1000000L
 
-  /** Drop memoized merge lists (test hook: re-train after flipping
-    * [[bpeDriverGate]]; driver-side constants, nothing persisted). */
-  private[graft] def clearBpeMemo(): Unit = bpeMemo.clear()
-
+  /** Trained BPE merge list `(round, pair, n_occurrences)`, cached
+    * per (session, dir) in [[ArtifactCache]]: `t_bpe_train` reports
+    * it, `t_bpe_encode` applies it — ONE training pass serves both, the
+    * same train-once/serve-many pattern as the IVF model. Driver-side
+    * constants only (BpeRounds strings); releasing the entry drops it,
+    * so the next request trains again.
+    */
   private def bpeMerges(s: SparkSession,
       dir: String): Seq[(Long, String, Long)] =
-    bpeMemo.computeIfAbsent((SessionKey.id(s), dir), _ => {
+    ArtifactCache(s, dir, "curation.bpeMerges") {
       val base = tBalanced(s, dir, "documents")
         .select(explode(tokens).as("word"))
         .groupBy("word").agg(count(lit(1)).as("n"))
@@ -239,7 +233,7 @@ object Curation {
           merges.result()
         }
       } finally base.unpersist(blocking = false)
-    })
+    }
 
   val defs: Seq[QueryDef] = Seq(
     // Distributed BPE-merge training (Sennrich et al. 2016) — the

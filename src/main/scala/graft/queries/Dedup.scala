@@ -92,51 +92,18 @@ object Dedup {
     (0 until SpanW).map(j => if (j == 0) "toks[i]" else s"toks[i+$j]")
       .mkString(", ")
 
-  /** Cross-query memo: `d_minhash_lsh` and `d_dup_clusters` share the
-    * pair computation; within one session+dir the persisted result is
-    * computed once (pipeline-stage reuse, not a cache of query results —
-    * the pair set is a few KB).
+  /** Cross-query artifact: `d_minhash_lsh` and `d_dup_clusters` share
+    * the pair computation; within one session+dir the persisted result
+    * is computed once (pipeline-stage reuse, not a cache of query
+    * results — the pair set is a few KB). Released with the rest of
+    * the (session, dir)'s artifacts ([[ArtifactCache.release]]); the
+    * next request for the same dir simply recomputes.
     */
-  private val pairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
   def nearDupPairs(s: SparkSession, dir: String): DataFrame =
-    pairsMemo.computeIfAbsent((SessionKey.id(s), dir),
-      _ => computeNearDupPairs(s, dir))
+    ArtifactCache(s, dir, "dedup.pairs", safeUnpersist)(
+      computeNearDupPairs(s, dir))
 
-  /** Release the memoized pair frame for (session, dir): a long-lived
-    * session sweeping many corpora calls this when done with a dir, so
-    * the persisted pair RDD (the only executor storage the memo pins)
-    * doesn't accumulate across dirs. Safe to call twice; the next
-    * [[nearDupPairs]] for the same dir simply recomputes. */
-  def releaseNearDupPairs(s: SparkSession, dir: String): Unit = {
-    Option(pairsMemo.remove((SessionKey.id(s), dir)))
-      .foreach(safeUnpersist)
-    Option(estPerDocMemo.remove((SessionKey.id(s), dir)))
-      .foreach(safeUnpersist)
-  }
-
-  /** Release every memoized pair frame (session teardown). */
-  def releaseAllNearDupPairs(): Unit = {
-    Seq(pairsMemo, estPerDocMemo).foreach { m =>
-      val it = m.entrySet().iterator()
-      while (it.hasNext) {
-        safeUnpersist(it.next().getValue)
-        it.remove()
-      }
-    }
-  }
-
-  /** Estimator-eval per-doc frame (shingle set + signature for paired
-    * docs only): persisted once per (session, dir) and released at the
-    * dedup family boundary with the pair memo — the eval result itself
-    * is never collected to the driver, so nothing here grows past the
-    * bounded pair set however large the corpus.
-    */
-  private val estPerDocMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  /** A memo entry can outlive its session (the owner stopped without
+  /** A frame can outlive its session (the owner stopped without
     * releasing); unpersisting against a stopped context NPEs, and there
     * is nothing left to release then anyway. */
   private[graft] def safeUnpersist(df: DataFrame): Unit =
@@ -241,7 +208,7 @@ object Dedup {
       .select(col("k"), col("bb.band").as("band"), col("bb.bhash").as("bhash"))
     // one exchange: bucket size via count window (same partitioning as
     // the collect), skew guard BEFORE collection bounds every array at
-    // MaxBucket; sorted list ⇒ positional pairs are value-ordered a < b
+    // MaxBucket; sorted list ⇒ positional pairs are value-ordered a <= b
     val cand = allBands
       .withColumn("bn", count(lit(1)).over(Window.partitionBy("band", "bhash")))
       .filter(col("bn") > 1 && col("bn") <= MaxBucket)
@@ -252,15 +219,20 @@ object Dedup {
              transform(slice(ks, i + 2, size(ks)),
                y -> named_struct('a', x, 'b', y))))""")).as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"))
+      // strict: a key twice in one bucket (a doc_id on two rows) would
+      // pair with itself and verify at Jaccard 1.0
+      .filter(col("a") < col("b"))
       .distinct()
     // verify candidates with exact shingle-set Jaccard
     // array_intersect is hash-based O(n+m) codegen (and sh is already
     // distinct, so set semantics match the oracle's list_filter); the
     // previous filter+array_contains lambda was O(n*m) interpreted and
     // dominated the verify stage. Both verify references read the
-    // shingle cache but are GATED on the broadcast of `cand` (which
-    // depends on the band chain), so neither races the cache
-    // population — the band chain is the plan's only leaf. A
+    // shingle cache. They wait for `cand` (and so cannot race the
+    // band chain's population of that cache) only when the planner
+    // chooses broadcast joins with `cand` as the build side; no
+    // broadcast() hint forces that, and under sort-merge joins the
+    // verify scans may run beside the band chain. A
     // single-reference variant (explode endpoints → one join →
     // collect_list per pair) was measured WORSE at sf0.1: it shuffles
     // every candidate's shingle ARRAY (~18 MiB vs 0) where the
@@ -1147,8 +1119,10 @@ object Dedup {
         // stage) in the same projection; both join branches read it
         // from the (tiny) persist, so the whole eval is TWO joins on
         // the KB-scale pair frame instead of the previous four
-        val perDoc = estPerDocMemo.computeIfAbsent(
-          (SessionKey.id(s), dir), _ =>
+        // persisted once per (session, dir) and released with the pair
+        // frame — the eval result itself is never collected to the
+        // driver, so nothing here grows past the bounded pair set
+        val perDoc = ArtifactCache(s, dir, "dedup.estPerDoc", safeUnpersist)(
             tBalanced(s, dir, "documents")
               .join(broadcast(verts), Seq("doc_id"), "left_semi")
               .select(col("doc_id"), tokens.as("toks"))
@@ -1178,8 +1152,8 @@ object Dedup {
               .as("abs_err"))
           .orderBy("a", "b")
         // returned lazily — no driver collect of the pair-sized result;
-        // the gated per-doc persist is owned by estPerDocMemo and
-        // released at the dedup family boundary (IVF-memo lifecycle)
+        // the gated per-doc persist is owned by the artifact cache and
+        // released at the dedup family boundary
         out
       },
       Some(s"""WITH RECURSIVE $sqlPairsCte,

@@ -14,32 +14,15 @@ object Pipeline {
   private def tokens = graft.functions.TextFunctions.ascii_words(col("text"))
 
   /** Connected-component labels (id, lbl) over the near-dup pair set,
-    * memoized per (session, dir): `d_dedup_apply` and `d_dup_clusters`
-    * share ONE min-label propagation (the pair set itself is already
-    * shared via [[Dedup.nearDupPairs]]). The final frame is a
-    * localCheckpoint — call [[releaseDupClusterLabels]] when done with
-    * a dir so its blocks don't outlive their usefulness.
+    * cached per (session, dir) in [[ArtifactCache]]: `d_dedup_apply`
+    * and `d_dup_clusters` share ONE min-label propagation (the pair set
+    * itself is already shared via [[Dedup.nearDupPairs]]). The final
+    * frame is a localCheckpoint, freed when the entry is released.
     */
-  private val labelsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), org.apache.spark.sql.DataFrame]()
-
   private[graft] def dupClusterLabels(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    labelsMemo.computeIfAbsent((SessionKey.id(s), dir),
-      _ => computeDupClusterLabels(s, dir))
-
-  def releaseDupClusterLabels(s: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    Option(labelsMemo.remove((SessionKey.id(s), dir)))
-      .foreach(freeCheckpoint)
-
-  def releaseAllDupClusterLabels(): Unit = {
-    val it = labelsMemo.entrySet().iterator()
-    while (it.hasNext) {
-      freeCheckpoint(it.next().getValue)
-      it.remove()
-    }
-  }
+    ArtifactCache(s, dir, "dedup.clusterLabels", freeCheckpoint)(
+      computeDupClusterLabels(s, dir))
 
   /** Release a localCheckpoint frame's storage DETERMINISTICALLY:
     * `Dataset.unpersist` only clears CacheManager entries, so a
@@ -60,7 +43,7 @@ object Pipeline {
     * every production CC implementation short-circuits to, because a
     * distributed round costs whole-job latency regardless of data
     * size (3 shuffles + a checkpoint per round vs one collect). The
-    * pair frame is already persisted AND counted by the memo, so the
+    * pair frame is already persisted AND counted by its build, so the
     * gate reads a cached count.
     */
   private[graft] val MaxDriverEdges = 500000L

@@ -32,12 +32,11 @@ object Similarity {
     * per distinct probe plan instead of inside every (timed) query
     * invocation.
     */
-  // memo keys use sessionUUID, never System.identityHashCode ([[SessionKey]]): an
-  // identity hash can be reused after the session is GC'd, so a new
-  // session could inherit a dead session's entry (for the cap set
-  // that would skip a correctness guard; for the model memos it would
-  // hand out a DataFrame bound to a stopped session). UUIDs are never
-  // reused for the JVM's lifetime.
+  // keyed by the session token, never System.identityHashCode
+  // ([[SessionKey]]): an identity hash can be reused after the session
+  // is GC'd, so a new session could inherit a dead session's entry and
+  // skip a correctness guard. Tokens are never reused for the JVM's
+  // lifetime.
   private val probeCapOk =
     java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Int)]()
 
@@ -245,12 +244,13 @@ object Similarity {
   private val SeedMax = 16
 
   /** Trained IVF model: the persisted int8 codes (the index build
-    * input) plus the post-Lloyd centroids. Memoized per (session,
+    * input) plus the post-Lloyd centroids. Cached per (session,
     * dir) — a real pipeline trains the coarse quantizer ONCE and both
     * inspects it (train stats) and serves with it (search), so the two
     * queries share one training pass, same pattern as
-    * [[Pipeline.dupClusterLabels]]. Release via [[releaseAllIvfModels]]
-    * (the bench does this at the `s` family boundary).
+    * [[Pipeline.dupClusterLabels]]. Released with the (session, dir)'s
+    * other artifacts ([[ArtifactCache.release]]; the bench does this
+    * at the `s` family boundary).
     *
     * `seedCodes` / `seedEmb` are the quantized codes and raw float
     * embeddings of the vec_id < [[SeedMax]] rows — constant-size
@@ -285,32 +285,12 @@ object Similarity {
     m.seedEmb.filter(_._1 < below).toDF(idName, embName)
   }
 
-  private val ivfMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), IvfModel]()
-
-  /** Drop memo entries whose owning session's context has stopped — a
-    * long-lived JVM cycling sessions must not pin dead-session plans
-    * (their persisted blocks died with the context; nothing to
-    * unpersist). Runs on memo misses, so steady-state hits pay nothing.
-    */
-  private def sweepDeadSessions(): Unit = {
-    val it = ivfMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getValue.codes.sparkSession.sparkContext.isStopped) {
-        it.remove()
-        pqMemo.keySet.removeIf(_._1 == e.getKey._1)
-        adcTabMemo.keySet.removeIf(_._1 == e.getKey._1)
-      }
-    }
-    pqCodesMemo.entrySet().removeIf(
-      _.getValue.sparkSession.sparkContext.isStopped)
-  }
-
   private def ivfModel(s: org.apache.spark.sql.SparkSession,
       dir: String): IvfModel =
-    ivfMemo.computeIfAbsent((SessionKey.id(s), dir), _ => {
-      sweepDeadSessions()
+    ArtifactCache(s, dir, "similarity.ivfModel", (m: IvfModel) => {
+        m.codes.unpersist(blocking = true)
+        m.cells.unpersist(blocking = true)
+      }) {
       val (qv, seedEmb, seedCodes) = ivfQuantizedCodes(s, dir)
       try {
         val cents = ivfTrainCentroids(qv,
@@ -328,55 +308,22 @@ object Similarity {
         }
         IvfModel(qv, cents, cells, seedCodes, seedEmb)
       } catch { case t: Throwable =>
-        // failed training must not leave the codes pinned — the memo
+        // failed training must not leave the codes pinned — the cache
         // never got the handle
         qv.unpersist(blocking = false); throw t
       }
-    })
-
-  /** Test hook: live model-memo entry count (MemoLifecycleSpec pins
-    * per-session isolation — one entry per (session, dir)). */
-  private[graft] def ivfMemoSize: Int = ivfMemo.size
+    }
 
   /** Test hook: the trained model (FunctionsSpec pins the driver-side
     * seed-quantize fold against the distributed qv rows). */
   private[graft] def modelForTest(s: org.apache.spark.sql.SparkSession,
       dir: String): IvfModel = ivfModel(s, dir)
 
-  def releaseAllIvfModels(): Unit = {
-    val it = ivfMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val m = it.next().getValue
-      try {
-        if (!m.codes.sparkSession.sparkContext.isStopped) {
-          m.codes.unpersist(blocking = true)
-          m.cells.unpersist(blocking = true)
-        }
-      } catch { case _: Throwable => () }
-      it.remove()
-    }
-    // the PQ codebook (and the ADC tables derived from it) are
-    // driver-side constants only, but their lifetime follows the
-    // model's
-    pqMemo.clear()
-    adcTabMemo.clear()
-    // the persisted corpus PQ-encode follows the model too
-    val pit = pqCodesMemo.entrySet().iterator()
-    while (pit.hasNext) {
-      val enc = pit.next().getValue
-      try {
-        if (!enc.sparkSession.sparkContext.isStopped)
-          enc.unpersist(blocking = true)
-      } catch { case _: Throwable => () }
-      pit.remove()
-    }
-  }
-
   /** Map-only int8 quantization of the embedding corpus (same
     * arithmetic as `s_quantize_int8`), cached because training reads
     * the codes once per Lloyd round and search reads them again for
     * cell assignment. Codes are 1/4 the float size, so this is the
-    * cheapest representation to pin. Owned by [[ivfModel]]'s memo.
+    * cheapest representation to pin. Owned by [[ivfModel]]'s entry.
     *
     * Returns (qv frame, seed raw embeddings, seed quantized codes for
     * vec_id < [[SeedMax]]). ONE tagged-union job collects the per-dim
@@ -667,16 +614,13 @@ object Similarity {
     ivfDistArray(cents, col(s"sv$m"))
 
   /** Trained PQ codebook: per subspace, the (cid, centroid) list after
-    * one Lloyd round. Memoized per (session, dir) like the IVF model
+    * one Lloyd round. Cached per (session, dir) like the IVF model
     * (plain driver-side constants — no executor storage to release);
     * shared by `s_pq_train` and `s_pq_search`.
     */
-  private val pqMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Map[Long, Seq[(Long, Seq[Int])]]]()
-
   private def pqCodebook(s: org.apache.spark.sql.SparkSession,
       dir: String): Map[Long, Seq[(Long, Seq[Int])]] =
-    pqMemo.computeIfAbsent((SessionKey.id(s), dir), _ => {
+    ArtifactCache(s, dir, "similarity.pqCodebook") {
       val model = ivfModel(s, dir)
       val sub = pqSubvectors(model.codes)
       // deterministic seeds: centroid j of every subspace = vec_id j's
@@ -715,7 +659,7 @@ object Similarity {
         .groupBy(_._1)
         .map { case (m, cs) =>
           m -> cs.sortBy(_._2).map(t => t._2 -> t._3) }
-    })
+    }
 
   /** The corpus PQ-ENCODE — every vector's argmin codebook centroid
     * per subspace, wide form `(vec_id, c0..c{M-1})` — persisted per
@@ -725,15 +669,12 @@ object Similarity {
     * int8 codes and redo M×K distance argmins for every query batch.
     * The wide form is the stored representation (1 row per vector);
     * consumers explode to `(cand_id, m, cid)` map-side, which is free
-    * codegen. Lifetime follows the IVF model
-    * ([[releaseAllIvfModels]]).
+    * codegen. Released with the IVF model.
     */
-  private val pqCodesMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), org.apache.spark.sql.DataFrame]()
-
   private def pqEncodedCodes(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    pqCodesMemo.computeIfAbsent((SessionKey.id(s), dir), _ => {
+    ArtifactCache(s, dir, "similarity.pqCodes",
+        (df: org.apache.spark.sql.DataFrame) => df.unpersist(blocking = true)) {
       val model = ivfModel(s, dir)
       val book = pqCodebook(s, dir)
       val sub = pqSubvectors(model.codes)
@@ -762,7 +703,7 @@ object Similarity {
         }
         p
       }
-    })
+    }
 
   /** One Lloyd round of per-subspace k-means over the memoized int8
     * codes — the PQ codebook trainer. Same distributed shape as the
@@ -818,18 +759,15 @@ object Similarity {
     */
   /** Per-probe ADC distance tables (probes × M × K rows, driver-side
     * integer fold of the collected probe codes against the codebook),
-    * memoized per (session, dir) like the codebook itself: the table
-    * is part of the built index (constant-size), and without the memo
+    * cached per (session, dir) like the codebook itself: the table
+    * is part of the built index (constant-size), and without the cache
     * both ADC consumers (`s_pq_search`, `s_pq_rerank`) re-ran the
     * probe-code collect job per invocation (guide §1.2 — don't
     * recompute what the algorithm defines as built-once).
     */
-  private val adcTabMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Seq[(Long, Long, Long, Long)]]()
-
   private def adcTable(s: org.apache.spark.sql.SparkSession,
       dir: String): Seq[(Long, Long, Long, Long)] =
-    adcTabMemo.computeIfAbsent((SessionKey.id(s), dir), _ => {
+    ArtifactCache(s, dir, "similarity.adcTable") {
       val model = ivfModel(s, dir)
       val book = pqCodebook(s, dir)
       // probe codes are part of the model's driver-side seed rows —
@@ -847,7 +785,7 @@ object Similarity {
         }
         (qid, m.toLong, cid, d)
       }
-    })
+    }
 
   private def pqAdcScores(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
@@ -1335,8 +1273,8 @@ object Similarity {
         val m = ivfModel(s, dir)
         // Final assignment under the updated centroids. Materialized
         // eagerly (k rows — constant-size like every other driver
-        // aggregate here); the codes cache is owned by the memo and
-        // released at the family boundary.
+        // aggregate here); the codes cache is owned by the model entry
+        // and released at the family boundary.
         val out = ivfAssignment(m.codes, m.cents).groupBy("cid")
           .agg(count(lit(1)).as("n_vecs"), sum("dist").as("inertia"))
           .orderBy("cid")
@@ -1443,8 +1381,8 @@ object Similarity {
       (s, dir) => {
         val out = pqTrainStats(s, dir)
         // M*K rows max — constant-size; materialized eagerly (the
-        // codes cache is owned by the memo, released at the family
-        // boundary)
+        // codes cache is owned by the model entry, released at the
+        // family boundary)
         val rows = out.collect()
         s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
       },

@@ -77,14 +77,11 @@ object CurationDemo {
 
     println("\n#12 INGEST-dedup against the persistent fingerprint store")
     stage("c_dedup_ingest", "PK-table store: seeded, admitted, rejected")
-    try graft.queries.ConnectorQ.release(spark, dir)
-    catch { case _: Throwable => () }
 
-    // the dedup/IVF stages share session-scoped memos — release them
-    // the same way the bench does at family boundaries
-    graft.queries.Pipeline.releaseAllDupClusterLabels()
-    graft.queries.Dedup.releaseAllNearDupPairs()
-    graft.queries.Similarity.releaseAllIvfModels()
+    // the stages share session-scoped artifacts (connector tables,
+    // dedup frames, the IVF model) — release them the same way the
+    // bench does at family boundaries
+    graft.queries.ArtifactCache.release(spark, dir)
     spark.stop()
   }
 }

@@ -101,11 +101,7 @@ object PlanDump {
     // eagerly-materializing rows (est-error, recall evals) return local
     // results whose interesting plan is internal — covered by
     // PlanAuditSpec instead of this dump
-    graft.queries.Pipeline.releaseAllDupClusterLabels()
-    graft.queries.Dedup.releaseAllNearDupPairs()
-    graft.queries.Similarity.releaseAllIvfModels()
-    try graft.queries.ConnectorQ.release(spark, dir)
-    catch { case _: Throwable => () }
+    graft.queries.ArtifactCache.release(spark, dir)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.result())
     println(s"wrote $out (${sb.length} chars)")
     spark.stop()

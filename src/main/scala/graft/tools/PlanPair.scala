@@ -60,9 +60,7 @@ object PlanPair {
       dump("d_paragraph_neardup", agg)
       graft.queries.Dedup.safeUnpersist(paras)
     }
-    graft.queries.Pipeline.releaseAllDupClusterLabels()
-    graft.queries.Dedup.releaseAllNearDupPairs()
-    graft.queries.Similarity.releaseAllIvfModels()
+    graft.queries.ArtifactCache.release(spark, dir)
     spark.stop()
   }
 }

@@ -356,7 +356,7 @@ object ScaleChecks {
     try {
       val (pairsS, spansS, tS) = runDedup(dirSmall)
       val (pairsB, spansB, tB) = runDedup(dirBig)
-      graft.queries.Dedup.releaseAllNearDupPairs()
+      Seq(dirSmall, dirBig).foreach(graft.queries.ArtifactCache.release(spark, _))
       println(f"  10k docs: pairs=$pairsS spanDocs=$spansS in $tS%.1f s; " +
         f"50k docs: pairs=$pairsB spanDocs=$spansB in $tB%.1f s " +
         f"(ratio ${tB / tS}%.1f x for 5x data)")

@@ -159,9 +159,9 @@ class BenchSpec extends AnyFunSuite {
   test("family isolation: memo-owning families release to CLEAN executors") {
     // the r8/r9 lesson: untouched plans regressing round-over-round are
     // first suspected of inherited executor storage — so the bench
-    // releases each family's memos at its boundary and verifies nothing
-    // survives. This pins that contract for the two memo-owning
-    // families on a live session.
+    // releases each family's cached artifacts at its boundary and
+    // verifies nothing survives. This pins that contract for the four
+    // cache-backed families (c, d, s, t) on a live session.
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -187,8 +187,32 @@ class BenchSpec extends AnyFunSuite {
 
       // stream rows: state-store providers unload at the boundary
       assert(SparkEntry.queries("c_stream_agg")(spark, dir).count() > 0)
-      val sLeaks = Bench.releaseFamily(spark, "c", dir)
-      assert(sLeaks.isEmpty, s"stream state survived the boundary: $sLeaks")
+      val streamLeaks = Bench.releaseFamily(spark, "c", dir)
+      assert(streamLeaks.isEmpty,
+        s"stream state survived the boundary: $streamLeaks")
+
+      // s family: the IVF model (persisted codes + cell index) and the
+      // PQ codebook, codes and ADC table built from it
+      import graft.queries.ArtifactCache
+      assert(SparkEntry.queries("s_ivf_train")(spark, dir).count() >= 1)
+      assert(SparkEntry.queries("s_pq_search")(spark, dir).count() >= 1)
+      assert(ArtifactCache.built(spark, dir).nonEmpty,
+        "the s family must be cache-backed while it runs")
+      val sLeaks = Bench.releaseFamily(spark, "s", dir)
+      assert(sLeaks.isEmpty, s"s family left storage behind: $sLeaks")
+      assert(ArtifactCache.built(spark, dir).isEmpty,
+        s"s family left cache entries: ${ArtifactCache.built(spark, dir)}")
+
+      // t family: the BPE merge list is driver-side only, but it must
+      // go too, or a second bench pass times t_bpe_* against a warm
+      // merge list instead of re-measuring the cold-family work
+      assert(SparkEntry.queries("t_bpe_train")(spark, dir).count() >= 1)
+      assert(ArtifactCache.built(spark, dir).nonEmpty,
+        "t_bpe_train must cache its merge list")
+      val tLeaks = Bench.releaseFamily(spark, "t", dir)
+      assert(tLeaks.isEmpty, s"t family left storage behind: $tLeaks")
+      assert(ArtifactCache.built(spark, dir).isEmpty,
+        s"t family left cache entries: ${ArtifactCache.built(spark, dir)}")
 
       // a memo-free family releases to clean executors trivially
       assert(SparkEntry.queries("q_topk_orders")(spark, dir).count() > 0)

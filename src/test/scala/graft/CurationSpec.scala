@@ -128,7 +128,7 @@ class CurationSpec extends AnyFunSuite {
       SparkEntry.queries("t_bpe_train")(spark, dir).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
     val viaDriver = train() // vocab << gate: driver merge loop
-    graft.queries.Curation.clearBpeMemo()
+    graft.queries.ArtifactCache.release(spark, dir)
     graft.queries.Curation.bpeDriverGate = 0L // force distributed rounds
     try {
       val viaCluster = train()
@@ -138,7 +138,7 @@ class CurationSpec extends AnyFunSuite {
         (1L to viaDriver.length), viaDriver.toString)
     } finally {
       graft.queries.Curation.bpeDriverGate = 1000000L
-      graft.queries.Curation.clearBpeMemo()
+      graft.queries.ArtifactCache.release(spark, dir)
     }
   }
 

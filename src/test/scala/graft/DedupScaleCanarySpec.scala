@@ -107,7 +107,7 @@ class DedupScaleCanarySpec extends AnyFunSuite with BeforeAndAfterAll {
           "written by one task — the skew guard is not bounding the join")
     } finally {
       spark.sparkContext.removeSparkListener(listener)
-      graft.queries.Dedup.releaseNearDupPairs(spark, dir.toString)
+      graft.queries.ArtifactCache.release(spark, dir.toString)
       // best-effort temp cleanup
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse

@@ -306,7 +306,7 @@ class FunctionsSpec extends AnyFunSuite {
         .map(r => r.getLong(0) -> r.getSeq[Float](1).toSeq).toSeq
       assert(m.seedEmb.map { case (id, e) => id -> e.toSeq } == rawEmb,
         "seed embeddings must match the parquet values")
-    } finally graft.queries.Similarity.releaseAllIvfModels()
+    } finally graft.queries.ArtifactCache.release(spark, dir)
   }
 
   test("word_shingles matches the HOF formulation") {
@@ -411,6 +411,24 @@ class FunctionsSpec extends AnyFunSuite {
     assert(n >= 3, s"expected >=3 planted near-dup pairs, got $n")
   }
 
+  test("LSH near-dup pairs are strictly ordered a < b, even for a repeated doc_id") {
+    // a doc_id on two rows lands twice in every one of its LSH buckets;
+    // the positional pair expansion then emits (k, k), which verifies
+    // at Jaccard 1.0 unless the pair stage keeps only a < b
+    val sf = "/root/testdata/sf0.001"
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val repeated = docs.filter(length(col("text")) > 200).limit(1)
+    val tmp = java.nio.file.Files.createTempDirectory("lshk").toString
+    docs.unionByName(repeated).write.mode("overwrite")
+      .parquet(s"$tmp/documents.parquet")
+    try {
+      val pairs = graft.queries.Dedup.nearDupPairs(spark, tmp).collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
+      val bad = pairs.filterNot { case (a, b) => a < b }
+      assert(bad.isEmpty, s"pairs violating a < b: ${bad.mkString(", ")}")
+    } finally graft.queries.ArtifactCache.release(spark, tmp)
+  }
+
   test("d_dup_spans flags an exact copy with dup_ratio 1.0") {
     val sf = "/root/testdata/sf0.01"
     val docs = spark.read.parquet(s"$sf/documents.parquet")
@@ -480,7 +498,7 @@ class FunctionsSpec extends AnyFunSuite {
         assert(rs.forall(r => r.getLong(1) >= 0 && r.getLong(1) < 16))
         assert(rs.forall(_.getLong(3) >= 0L))
       }
-    } finally graft.queries.Similarity.releaseAllIvfModels()
+    } finally graft.queries.ArtifactCache.release(spark, dir)
   }
 
   test("brute-force cosine refuses a data-sized probe set") {

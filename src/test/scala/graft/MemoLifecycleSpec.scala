@@ -3,13 +3,19 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+import graft.queries.{ArtifactCache => Cache}
 
-/** Session-state lifecycle of the cross-query memos: a long-lived
-  * session sweeping many corpus dirs must be able to RELEASE what a
-  * dir's queries pinned — the persisted near-dup pair RDDs
-  * (Dedup.pairsMemo) and the connector setup's temp-warehouse tables
-  * (ConnectorQ.memo) — instead of accumulating one corpus's worth of
-  * executor storage / disk per dir until shutdown.
+/** Lifecycle of the session-scoped artifact cache
+  * (`graft.queries.ArtifactCache`), the one store for what several
+  * queries of a family build once and share: the connector setup's
+  * namespace, tables and stream dirs, the near-dup pair frame and the
+  * estimator-eval per-doc frame, the dup-cluster label checkpoint, the
+  * trained IVF model with its PQ codebook, codes and ADC table, and the
+  * BPE merge list. A long-lived session sweeping many corpus dirs must
+  * be able to RELEASE what a dir's queries pinned instead of
+  * accumulating one corpus's worth of executor storage / disk per dir
+  * until shutdown; entries are per session; a failed build stores
+  * nothing; nested and concurrent builds work.
   */
 class MemoLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -26,9 +32,7 @@ class MemoLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // getOrCreate shares the SparkContext with any suite that ran
     // earlier in this JVM — start from a clean slate so the
     // empty-storage assertions below are order-independent
-    graft.queries.Dedup.releaseAllNearDupPairs()
-    graft.queries.Pipeline.releaseAllDupClusterLabels()
-    graft.queries.Similarity.releaseAllIvfModels()
+    Cache.releaseAll()
   }
   override def afterAll(): Unit = spark.stop()
 
@@ -39,17 +43,17 @@ class MemoLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
       .getOrElse(fail("setup must have memoized its namespace"))
     assert(spark.sql(s"SHOW TABLES IN graft_c.$ns").count() > 0,
       "setup must have created tables in the per-dir namespace")
-    graft.queries.ConnectorQ.release(spark, dir)
+    Cache.release(spark, dir)
     val nss = spark.sql("SHOW NAMESPACES IN graft_c")
       .collect().map(_.getString(0)).toSet
     assert(!nss.contains(ns), s"namespace $ns must be dropped, got $nss")
     // the same dir sets up again from scratch on next use
     assert(SparkEntry.queries("c_append_scan")(spark, dir).count() > 0)
-    graft.queries.ConnectorQ.release(spark, dir)
+    Cache.release(spark, dir)
   }
 
   test("a second session in the same JVM gets its own connector setup") {
-    // the memo keys by (session identity, dir): serving session A's
+    // the cache keys by (session identity, dir): serving session A's
     // Setup to session B would hand B a namespace in a catalog B's
     // session conf never configured ("Catalog graft_c not found")
     val dir = "/root/testdata/sf0.001"
@@ -60,8 +64,8 @@ class MemoLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(graft.queries.ConnectorQ.activeNamespace(s2, dir) !=
       graft.queries.ConnectorQ.activeNamespace(spark, dir),
       "sessions must not share a namespace")
-    graft.queries.ConnectorQ.release(s2, dir)
-    graft.queries.ConnectorQ.release(spark, dir)
+    Cache.release(s2, dir)
+    Cache.release(spark, dir)
   }
 
   test("near-dup pair memo releases executor storage per dir") {
@@ -71,14 +75,14 @@ class MemoLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(graft.queries.Dedup.nearDupPairs(spark, d2).count() >= 0)
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
       "the memoized pair frames are persisted")
-    graft.queries.Dedup.releaseNearDupPairs(spark, d1)
-    graft.queries.Dedup.releaseNearDupPairs(spark, d2)
+    Cache.release(spark, d1)
+    Cache.release(spark, d2)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       s"leaked persisted RDDs: ${spark.sparkContext.getPersistentRDDs.keySet}")
     // double-release is a no-op; next use recomputes
-    graft.queries.Dedup.releaseNearDupPairs(spark, d1)
+    Cache.release(spark, d1)
     assert(graft.queries.Dedup.nearDupPairs(spark, d1).count() >= 0)
-    graft.queries.Dedup.releaseAllNearDupPairs()
+    Cache.releaseAll()
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
@@ -93,13 +97,13 @@ class MemoLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(SparkEntry.queries("s_ivf_search")(spark, d1).count() >= 1)
     assert(spark.sparkContext.getPersistentRDDs.keySet == pinned,
       "s_ivf_search must not pin a second codes cache")
-    graft.queries.Similarity.releaseAllIvfModels()
+    Cache.release(spark, d1)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       s"leaked: ${spark.sparkContext.getPersistentRDDs.keySet}")
     // double-release is a no-op; next use retrains from scratch
-    graft.queries.Similarity.releaseAllIvfModels()
+    Cache.release(spark, d1)
     assert(SparkEntry.queries("s_ivf_train")(spark, d1).count() >= 1)
-    graft.queries.Similarity.releaseAllIvfModels()
+    Cache.release(spark, d1)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
@@ -116,7 +120,7 @@ class MemoLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     val streams = java.nio.file.Paths.get(wh, "_streams")
     assert(java.nio.file.Files.list(streams).count() > 0,
       "the stream row must have created its sink dir")
-    graft.queries.ConnectorQ.release(spark, dir)
+    Cache.release(spark, dir)
     assert(!java.nio.file.Files.exists(streams) ||
       java.nio.file.Files.list(streams).count() == 0,
       "release must delete the per-ns stream state")
@@ -124,12 +128,12 @@ class MemoLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     val second = SparkEntry.queries("c_stream_dedup_wm")(spark, dir)
       .collect().toSeq
     assert(second == first, s"re-run diverged: $second vs $first")
-    graft.queries.ConnectorQ.release(spark, dir)
+    Cache.release(spark, dir)
   }
 
   test("session tokens are stable per session and never shared") {
     import graft.queries.SessionKey
-    // memo keys use SessionKey, not System.identityHashCode: identity
+    // cache keys use SessionKey, not System.identityHashCode: identity
     // hashes can be REUSED after a session is GC'd, handing a
     // recreated session a dead session's entries (a DataFrame bound to
     // a stopped session, or a skipped brute-force cap validation)
@@ -145,23 +149,25 @@ class MemoLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a recreated session computes its own ivf model, never inherits") {
     val d1 = "/root/testdata/sf0.001"
-    graft.queries.Similarity.releaseAllIvfModels()
+    Cache.releaseAll()
+    val model = "similarity.ivfModel"
     try {
       val s2 = spark.newSession()
       assert(SparkEntry.queries("s_ivf_train")(s2, d1).count() >= 1)
-      assert(graft.queries.Similarity.ivfMemoSize == 1)
+      assert(Cache.built(s2, d1).contains(model))
       // a session created LATER (after s2 is out of use — in
       // production, GC'd and its identity hash reusable) must get its
-      // OWN memo entry rather than being served s2's (shared-context
+      // OWN cache entry rather than being served s2's (shared-context
       // block reuse via the CacheManager is fine; key collision is not)
       val s3 = spark.newSession()
       assert(graft.queries.SessionKey.id(s3) !=
         graft.queries.SessionKey.id(s2))
       assert(SparkEntry.queries("s_ivf_train")(s3, d1).count() >= 1)
-      assert(graft.queries.Similarity.ivfMemoSize == 2,
-        "s3 must have built its own memo entry, not inherited s2's")
+      assert(Cache.built(s3, d1).contains(model) &&
+        Cache.built(s2, d1).contains(model),
+        "s3 must have built its own entry, not inherited s2's")
     } finally {
-      graft.queries.Similarity.releaseAllIvfModels()
+      Cache.releaseAll()
     }
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
@@ -172,9 +178,52 @@ class MemoLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(SparkEntry.queries("d_dedup_apply")(spark, d1).count() >= 1)
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
       "pairs + label checkpoint are persisted")
-    graft.queries.Dedup.releaseAllNearDupPairs()
-    graft.queries.Pipeline.releaseAllDupClusterLabels()
+    Cache.release(spark, d1)
+    assert(Cache.built(spark, d1).isEmpty)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       s"leaked: ${spark.sparkContext.getPersistentRDDs.keySet}")
+  }
+
+  test("a build that throws stores nothing; the next request builds again") {
+    val dir = "/nonexistent/cache-throw"
+    var builds = 0
+    def request(fail: Boolean): Int = Cache(spark, dir, "flaky") {
+      builds += 1
+      if (fail) throw new IllegalStateException("planted build failure")
+      builds
+    }
+    intercept[IllegalStateException](request(fail = true))
+    assert(Cache.built(spark, dir).isEmpty, "a failed build left an entry")
+    assert(request(fail = false) == 2, "the next request must build again")
+    assert(request(fail = true) == 2, "a built entry is served, not rebuilt")
+    assert(builds == 2)
+    Cache.release(spark, dir)
+  }
+
+  test("nested builds work; concurrent requests build once; release runs once") {
+    val dir = "/nonexistent/cache-nested"
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val releases = new java.util.concurrent.atomic.AtomicInteger()
+    // the outer build requests another entry from inside its own build
+    // (the PQ codes -> codebook -> IVF model chain, in miniature)
+    def inner(): Int = Cache(spark, dir, "inner") { builds.incrementAndGet(); 1 }
+    def outer(): Int = Cache(spark, dir, "outer",
+        (_: Int) => { releases.incrementAndGet(); () }) {
+      builds.incrementAndGet()
+      Thread.sleep(100) // hold the build open while other callers arrive
+      inner() + 1
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val fs = (1 to 4).map(_ => pool.submit(
+        new java.util.concurrent.Callable[Int] { def call(): Int = outer() }))
+      assert(fs.map(_.get()) == Seq(2, 2, 2, 2))
+    } finally pool.shutdown()
+    assert(builds.get() == 2, s"each key must build once, got ${builds.get()}")
+    assert(Cache.built(spark, dir) == Set("inner", "outer"))
+    Cache.release(spark, dir)
+    Cache.release(spark, dir) // double release is a no-op
+    assert(releases.get() == 1)
+    assert(Cache.built(spark, dir).isEmpty)
   }
 }

@@ -35,22 +35,26 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h.child
     }
 
-  /** The s_ivf_search broadcast rule: a forced-broadcast target is
+  /** The IVF/PQ serving broadcast rule: a forced-broadcast target is
     * probe-bounded if it carries the probe filter (vec_id < 10), or if
     * every leaf is a driver-local table and those tables hold at most
-    * 16 rows in total (the model's seed rows, vec_id < 16). The bound
-    * is a literal on purpose: a seed set grown to corpus scale must fail
-    * this audit, not move its bound along with it.
+    * `maxLocalRows` rows in total. Callers pass a literal bound: 16 for
+    * s_ivf_search (the model's seed rows, vec_id < 16) and 1280 for the
+    * PQ rows (the ADC table, 10 probes × M=8 × K=16). A literal on
+    * purpose: a seed set or table grown to corpus scale must fail this
+    * audit, not move its bound along with it.
     */
   private def ivfProbeBounded(
-      target: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
+      target: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      maxLocalRows: Int): Boolean = {
     val probeFiltered =
       """vec_id#\d+L? < (cast\()?10""".r.findFirstIn(target.toString).isDefined
     val leaves = target.collectLeaves()
     val localRows = leaves.collect {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l.data.size
     }
-    val smallLocalTable = localRows.size == leaves.size && localRows.sum <= 16
+    val smallLocalTable =
+      localRows.size == leaves.size && localRows.sum <= maxLocalRows
     probeFiltered || smallLocalTable
   }
 
@@ -169,12 +173,12 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       val hints = hintTargets(df)
       assert(hints.nonEmpty, s"bounded probe sides must carry hints:\n$p")
       hints.foreach { h =>
-        assert(ivfProbeBounded(h),
+        assert(ivfProbeBounded(h, 16),
           s"a forced-broadcast side carries neither the probe filter " +
             s"(vec_id < 10) nor is a local table of at most 16 rows " +
             s"— corpus broadcast?\n$h")
       }
-    } finally graft.queries.Similarity.releaseAllIvfModels()
+    } finally graft.queries.ArtifactCache.release(spark, sf)
   }
 
   test("s_ivf_search audit rule rejects corpus and over-bound local broadcasts") {
@@ -191,14 +195,17 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       hs.head
     }
     val corpus = target(broadcast(spark.read.parquet(s"$sf/embeddings.parquet")))
-    assert(!ivfProbeBounded(corpus),
+    assert(!ivfProbeBounded(corpus, 16),
       s"unfiltered corpus scan must be rejected:\n$corpus")
     val local17 = target(broadcast((0L until 17L).toDF("vec_id")))
-    assert(!ivfProbeBounded(local17),
+    assert(!ivfProbeBounded(local17, 16),
       s"a 17-row local frame must be rejected:\n$local17")
     val local10 = target(broadcast((0L until 10L).toDF("vec_id")))
-    assert(ivfProbeBounded(local10),
+    assert(ivfProbeBounded(local10, 16),
       s"a 10-row local frame must be accepted:\n$local10")
+    val local1281 = target(broadcast((0L until 1281L).toDF("vec_id")))
+    assert(!ivfProbeBounded(local1281, 1280),
+      s"a 1281-row local frame must be rejected at the PQ bound:\n$local1281")
   }
 
   test("s_pq_search: ADC join on (m, code) with bounded broadcasts only") {
@@ -209,21 +216,16 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
         !p.contains("BroadcastNestedLoopJoin"),
         s"ADC scoring must stay equi-join shaped:\n$p")
       // forced broadcasts: the probe-cell route (vec_id < 10) and the
-      // driver-built ADC lookup table (a LocalRelation of probes×M×K
-      // rows) — never the corpus code side
+      // driver-built ADC lookup table (a LocalRelation of at most
+      // probes×M×K = 1280 rows) — never the corpus code side
       val hints = hintTargets(df)
       assert(hints.nonEmpty, s"bounded sides must carry hints:\n$p")
       hints.foreach { h =>
-        val txt = h.toString
-        val probeBounded =
-          """vec_id#\d+L? < (cast\()?10""".r.findFirstIn(txt).isDefined
-        val localTable = h.collectLeaves().forall(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
-        assert(probeBounded || localTable,
+        assert(ivfProbeBounded(h, 1280),
           s"a forced-broadcast side is neither probe-bounded nor a " +
-            s"constant-size local table — corpus broadcast?\n$txt")
+            s"local table of at most 1280 rows — corpus broadcast?\n$h")
       }
-    } finally graft.queries.Similarity.releaseAllIvfModels()
+    } finally graft.queries.ArtifactCache.release(spark, sf)
   }
 
   test("s_pq_rerank: exact re-rank reads only bounded broadcast sides") {
@@ -234,26 +236,22 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
         !p.contains("BroadcastNestedLoopJoin"),
         s"re-rank must stay equi-join shaped:\n$p")
       // forced broadcasts: probe-bounded sides (vec_id < 10), the
-      // driver-built ADC table (LocalRelation), and the SHORTLIST —
-      // bounded to probes x R rows by its rank <= R filter even though
-      // its lineage includes corpus scans. The corpus code side itself
-      // must never carry a broadcast hint.
+      // driver-built ADC table (a LocalRelation of at most 1280 rows),
+      // and the SHORTLIST — bounded to probes x R rows by its rank <= R
+      // filter even though its lineage includes corpus scans. The
+      // corpus code side itself must never carry a broadcast hint.
       val hints = hintTargets(df)
       assert(hints.nonEmpty, s"bounded sides must carry hints:\n$p")
       hints.foreach { h =>
         val txt = h.toString
-        val probeBounded =
-          """vec_id#\d+L? < (cast\()?10""".r.findFirstIn(txt).isDefined
-        val localTable = h.collectLeaves().forall(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
         val shortlistBounded =
           """(rank|lr)#\d+ <= 20""".r.findFirstIn(txt).isDefined
-        assert(probeBounded || localTable || shortlistBounded,
-          s"a forced-broadcast side is neither probe-bounded, a " +
-            s"constant-size local table, nor the rank-bounded " +
+        assert(ivfProbeBounded(h, 1280) || shortlistBounded,
+          s"a forced-broadcast side is neither probe-bounded, a local " +
+            s"table of at most 1280 rows, nor the rank-bounded " +
             s"shortlist — corpus broadcast?\n$txt")
       }
-    } finally graft.queries.Similarity.releaseAllIvfModels()
+    } finally graft.queries.ArtifactCache.release(spark, sf)
   }
 
   test("q_hll_distinct_users: register build is one aggregation pass") {
