@@ -1,11 +1,16 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB differential (`tools/check_oracle.py`).
+  * An optional comma-separated name list dumps just those rows and SQL.
+  * {{{ sbt "runMain graft.Verify <sfDir> <outDir> [q1,q2,...]" }}}
+  */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+  /** The local session Verify and `graft.tools.Inspect` run in:
+    * `local[$SPARK_GRAFT_CPUS]` (default 4) with as many shuffle
+    * partitions. */
+  def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -15,8 +20,22 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val Array(sfDir, outDir) = args.take(2)
+    val wanted: String => Boolean = args.lift(2) match {
+      case Some(list) =>
+        val names = list.split(',').map(_.trim).filter(_.nonEmpty).toSet
+        val unknown = names -- SparkEntry.queries.keySet
+        require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+        names
+      case None => _ => true
+    }
+    val spark = session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -35,7 +54,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => wanted(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

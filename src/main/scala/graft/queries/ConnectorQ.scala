@@ -36,15 +36,6 @@ object ConnectorQ {
   private val sqlMid =
     "(SELECT CAST(FLOOR(MAX(event_id)/2.0) AS BIGINT) FROM events)"
 
-  /** Debug: GRAFT_SETUP_TIMING=1 prints per-statement wall times. */
-  private def timed[T](label: String)(f: => T): T =
-    if (sys.env.contains("GRAFT_SETUP_TIMING")) {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[setup] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    } else f
-
   /** Size a stateful stream's STATE partitioning explicitly: a fresh
     * checkpoint pins its state-store count to
     * `spark.sql.shuffle.partitions` at first-batch planning, and every
@@ -179,10 +170,10 @@ object ConnectorQ {
       // aggregate inline (InMemoryRelation scan + extra materialization
       // jobs beat the 200k-row codegen agg), so the halves stay inline.
       def argmaxInsert(table: String, where: String): Unit =
-        timed(s"insert $table")(s.sql(s"""INSERT INTO $table
+        s.sql(s"""INSERT INTO $table
           SELECT user_id, MAX(event_id), MAX_BY(event_type, event_id),
                  MAX_BY($C, event_id)
-          FROM ev_src WHERE $where GROUP BY user_id"""))
+          FROM ev_src WHERE $where GROUP BY user_id""")
 
       // Each target table is an independent statement GROUP; groups run
       // concurrently (slowest group ≈ wall time, not the sum — commit
@@ -214,8 +205,7 @@ object ConnectorQ {
         // same shape + row-level DELETE (merge-on-read -D appends)
         () => {
           argmaxTable(s"graft_c.$ns.ev_pk_del", pkProps)
-          timed("delete ev_pk_del")(
-            s.sql(s"DELETE FROM graft_c.$ns.ev_pk_del WHERE user_id % 10 = 3"))
+          s.sql(s"DELETE FROM graft_c.$ns.ev_pk_del WHERE user_id % 10 = 3")
         },
 
         // partitioned append table (partition pruning / plain scan)
@@ -223,8 +213,8 @@ object ConnectorQ {
           s.sql(s"""CREATE TABLE graft_c.$ns.ev_part
             (event_type STRING, user_id BIGINT, event_id BIGINT, cents BIGINT)
             PARTITIONED BY (event_type)""")
-          timed("insert ev_part")(s.sql(s"""INSERT INTO graft_c.$ns.ev_part
-            SELECT event_type, user_id, event_id, $C FROM ev_src"""))
+          s.sql(s"""INSERT INTO graft_c.$ns.ev_part
+            SELECT event_type, user_id, event_id, $C FROM ev_src""")
         },
 
         // append table whose DATA PLANE lives on the in-memory
@@ -236,8 +226,8 @@ object ConnectorQ {
             (event_type STRING, user_id BIGINT, event_id BIGINT, cents BIGINT)
             PARTITIONED BY (event_type)
             TBLPROPERTIES ('io'='memory:bench_$ns')""")
-          timed("insert ev_io")(s.sql(s"""INSERT INTO graft_c.$ns.ev_io
-            SELECT event_type, user_id, event_id, $C FROM ev_src"""))
+          s.sql(s"""INSERT INTO graft_c.$ns.ev_io
+            SELECT event_type, user_id, event_id, $C FROM ev_src""")
         },
 
         // partitioned PK table, bucket=2, 2 commits
@@ -247,9 +237,9 @@ object ConnectorQ {
             PARTITIONED BY (event_type)
             TBLPROPERTIES ('primary-key'='event_type,user_id', 'bucket'='2')""")
           def ppkInsert(where: String): Unit =
-            timed("insert ev_ppk")(s.sql(s"""INSERT INTO graft_c.$ns.ev_ppk
+            s.sql(s"""INSERT INTO graft_c.$ns.ev_ppk
               SELECT event_type, user_id, MAX(event_id), MAX_BY($C, event_id)
-              FROM ev_src WHERE $where GROUP BY event_type, user_id"""))
+              FROM ev_src WHERE $where GROUP BY event_type, user_id""")
           ppkInsert(s"event_id <= $mid")
           ppkInsert(s"event_id > $mid")
         },
@@ -265,14 +255,14 @@ object ConnectorQ {
         // the subsequent merge by sequence number
         () => {
           argmaxTable(s"graft_c.$ns.ev_pk_upd", pkProps)
-          timed("update ev_pk_upd")(s.sql(s"""UPDATE graft_c.$ns.ev_pk_upd
-            SET last_cents = last_cents * 2 WHERE user_id % 7 = 0"""))
+          s.sql(s"""UPDATE graft_c.$ns.ev_pk_upd
+            SET last_cents = last_cents * 2 WHERE user_id % 7 = 0""")
         },
 
         // MERGE INTO: update + delete + insert through one statement
         () => {
           argmaxTable(s"graft_c.$ns.ev_pk_mrg", pkProps)
-          timed("merge ev_pk_mrg")(s.sql(s"""MERGE INTO graft_c.$ns.ev_pk_mrg t
+          s.sql(s"""MERGE INTO graft_c.$ns.ev_pk_mrg t
             USING (SELECT DISTINCT user_id FROM ev_src WHERE user_id % 5 = 0
                    UNION ALL
                    SELECT (SELECT MAX(user_id) FROM ev_src) + 1) s
@@ -280,7 +270,7 @@ object ConnectorQ {
             WHEN MATCHED AND t.user_id % 10 = 5 THEN DELETE
             WHEN MATCHED THEN UPDATE SET last_type = 'merged'
             WHEN NOT MATCHED THEN INSERT (user_id, last_event_id, last_type, last_cents)
-              VALUES (s.user_id, -1, 'inserted', 0)"""))
+              VALUES (s.user_id, -1, 'inserted', 0)""")
         },
 
         // ORC / Avro PK tables: same 2-commit arg-max content, so the
@@ -301,15 +291,15 @@ object ConnectorQ {
         // null-fill / remap / upcast the old files by field id
         () => {
           s.sql(s"CREATE TABLE graft_c.$ns.ev_evo (user_id BIGINT, cnt INT)")
-          timed("insert ev_evo half1")(s.sql(s"""INSERT INTO graft_c.$ns.ev_evo
+          s.sql(s"""INSERT INTO graft_c.$ns.ev_evo
             SELECT user_id, CAST(COUNT(*) AS INT) FROM ev_src
-            WHERE event_id <= $mid GROUP BY user_id"""))
+            WHERE event_id <= $mid GROUP BY user_id""")
           s.sql(s"ALTER TABLE graft_c.$ns.ev_evo ADD COLUMN sum_cents BIGINT")
           s.sql(s"ALTER TABLE graft_c.$ns.ev_evo RENAME COLUMN cnt TO n_events")
           s.sql(s"ALTER TABLE graft_c.$ns.ev_evo ALTER COLUMN n_events TYPE BIGINT")
-          timed("insert ev_evo half2")(s.sql(s"""INSERT INTO graft_c.$ns.ev_evo
+          s.sql(s"""INSERT INTO graft_c.$ns.ev_evo
             SELECT user_id, COUNT(*), SUM($C) FROM ev_src
-            WHERE event_id > $mid GROUP BY user_id"""))
+            WHERE event_id > $mid GROUP BY user_id""")
         },
 
         // dedicated victim for snapshot expiry + vacuum (mutating other
@@ -325,10 +315,10 @@ object ConnectorQ {
         // event-time table for the windowed streaming aggregate
         () => {
           s.sql(s"CREATE TABLE graft_c.$ns.ev_ts (ts TIMESTAMP, user_id BIGINT, cents BIGINT)")
-          timed("insert ev_ts")(s.sql(s"""INSERT INTO graft_c.$ns.ev_ts
-            SELECT ts, user_id, $C FROM ev_src WHERE event_id <= $mid"""))
-          timed("insert ev_ts 2")(s.sql(s"""INSERT INTO graft_c.$ns.ev_ts
-            SELECT ts, user_id, $C FROM ev_src WHERE event_id > $mid"""))
+          s.sql(s"""INSERT INTO graft_c.$ns.ev_ts
+            SELECT ts, user_id, $C FROM ev_src WHERE event_id <= $mid""")
+          s.sql(s"""INSERT INTO graft_c.$ns.ev_ts
+            SELECT ts, user_id, $C FROM ev_src WHERE event_id > $mid""")
         },
 
         // merge-engine family (deduplicate is every PK table above).
@@ -369,12 +359,12 @@ object ConnectorQ {
             (user_id BIGINT, cents_first BIGINT, cents_second BIGINT)
             TBLPROPERTIES ('primary-key'='user_id', 'bucket'='4',
               'merge-engine'='partial-update')""")
-          timed("insert ev_pk_pu h1")(s.sql(s"""INSERT INTO graft_c.$ns.ev_pk_pu
+          s.sql(s"""INSERT INTO graft_c.$ns.ev_pk_pu
             SELECT user_id, SUM($C), CAST(NULL AS BIGINT) FROM ev_src
-            WHERE event_id <= $mid GROUP BY user_id"""))
-          timed("insert ev_pk_pu h2")(s.sql(s"""INSERT INTO graft_c.$ns.ev_pk_pu
+            WHERE event_id <= $mid GROUP BY user_id""")
+          s.sql(s"""INSERT INTO graft_c.$ns.ev_pk_pu
             SELECT user_id, CAST(NULL AS BIGINT), SUM($C) FROM ev_src
-            WHERE event_id > $mid GROUP BY user_id"""))
+            WHERE event_id > $mid GROUP BY user_id""")
         },
 
         // aggregation: per-half partial aggregates fold AT READ into
@@ -389,9 +379,9 @@ object ConnectorQ {
               'fields.n_events.aggregate-function'='sum',
               'fields.max_event.aggregate-function'='max')""")
           def agIns(where: String): Unit =
-            timed("insert ev_pk_ag")(s.sql(s"""INSERT INTO graft_c.$ns.ev_pk_ag
+            s.sql(s"""INSERT INTO graft_c.$ns.ev_pk_ag
               SELECT user_id, SUM($C), COUNT(*), MAX(event_id) FROM ev_src
-              WHERE $where GROUP BY user_id"""))
+              WHERE $where GROUP BY user_id""")
           agIns(s"event_id <= $mid")
           agIns(s"event_id > $mid")
         },
@@ -410,13 +400,13 @@ object ConnectorQ {
               'fields.v1.sequence-group'='a',
               'fields.v2.sequence-group'='b')""")
           def sgIns(i: Int): Unit =
-            timed("insert ev_pk_sg")(s.sql(s"""INSERT INTO graft_c.$ns.ev_pk_sg
+            s.sql(s"""INSERT INTO graft_c.$ns.ev_pk_sg
               SELECT user_id,
                 3 * ((MAX(event_id) + $i * 17) % 1000) + $i,
                 MAX(event_id) * 10 + $i,
                 3 * ((MAX(event_id) * 7 + $i * 29) % 1000) + $i,
                 MAX(event_id) * 100 + $i
-              FROM ev_src GROUP BY user_id"""))
+              FROM ev_src GROUP BY user_id""")
           sgIns(1); sgIns(2); sgIns(0)
         })
       locally {
@@ -445,15 +435,12 @@ object ConnectorQ {
             t
           }
         }
-        val defaultWidth = math.min(groups.size,
+        val width = math.min(groups.size,
           math.max(2, s.sparkContext.defaultParallelism / 4))
         val pool =
-          java.util.concurrent.Executors.newFixedThreadPool(
-            sys.env.getOrElse("GRAFT_SETUP_POOL", defaultWidth.toString).toInt,
-            tf)
+          java.util.concurrent.Executors.newFixedThreadPool(width, tf)
         implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-        try timed("all groups (concurrent)")(
-          Await.result(Future.sequence(groups.map(g => Future(g()))), 6.hours))
+        try Await.result(Future.sequence(groups.map(g => Future(g()))), 6.hours)
         finally pool.shutdown()
       }
 
@@ -464,13 +451,13 @@ object ConnectorQ {
       s.sql(s"""CREATE TABLE graft_c.$ns.ev_ow
         (event_type STRING, user_id BIGINT, n BIGINT)
         PARTITIONED BY (event_type)""")
-      timed("insert ev_ow")(s.sql(s"""INSERT INTO graft_c.$ns.ev_ow
-        SELECT event_type, user_id, COUNT(*) FROM ev_src GROUP BY 1, 2"""))
+      s.sql(s"""INSERT INTO graft_c.$ns.ev_ow
+        SELECT event_type, user_id, COUNT(*) FROM ev_src GROUP BY 1, 2""")
       val prevMode = s.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
       s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try timed("overwrite ev_ow")(s.sql(s"""INSERT OVERWRITE TABLE graft_c.$ns.ev_ow
+      try s.sql(s"""INSERT OVERWRITE TABLE graft_c.$ns.ev_ow
         SELECT event_type, user_id, SUM($C) FROM ev_src
-        WHERE event_type = 'click' GROUP BY 1, 2"""))
+        WHERE event_type = 'click' GROUP BY 1, 2""")
       finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
 
       Setup(ns, mid, minUser)

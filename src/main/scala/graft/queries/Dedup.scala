@@ -132,17 +132,6 @@ object Dedup {
     */
   private val MaxBucket = 1000
 
-  /** Env-gated stage timer (`GRAFT_PIPE_TIMING=1`) for the pair
-    * pipeline — session-lifecycle diagnostics, untimed in driver runs.
-    */
-  private def ptimed[T](label: String)(f: => T): T =
-    if (sys.env.contains("GRAFT_PIPE_TIMING")) {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[pipe] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    } else f
-
   /** MinHash signatures → LSH band hashes → bucket-guarded candidate
     * generation → exact shingle-Jaccard verification, over a (persisted)
     * `(k, sh)` frame — the pair machinery shared by the doc-granular
@@ -257,8 +246,8 @@ object Dedup {
         graft.functions.TextFunctions.word_shingles(col("toks"), 3)).as("sh"))
       .filter(size(col("sh")) > 0)
 
-  /** The UN-memoized doc-level pair-pipeline plan — PlanPair evidence
-    * hook (the production path is [[nearDupPairs]], which persists,
+  /** The UN-memoized doc-level pair-pipeline plan — the `Inspect plan`
+    * frame (the production path is [[nearDupPairs]], which persists,
     * materializes and memoizes; its explain shows only the cache).
     */
   private[graft] def lshPairsPlanForDump(s: SparkSession,
@@ -278,12 +267,12 @@ object Dedup {
     // array per document, the largest intermediate in the repo) stays
     // pinned in executor storage for the life of the session and every
     // later query inherits the memory pressure. A FAILED count must
-    // release `pairs` too: computeIfAbsent stores nothing on throw, so
+    // release `pairs` too: the artifact cache stores nothing on throw, so
     // a retry would re-persist on top of the leaked cache.
-    try ptimed("pairs.count (whole pipeline)")(pairs.count())
+    try pairs.count()
     catch { case t: Throwable =>
       pairs.unpersist(blocking = false); throw t
-    } finally ptimed("release shingle cache") {
+    } finally {
       // blocking: the next query in a bench run starts immediately,
       // and an async release lets this corpus-scale cache contend with
       // (and evict) the caches that query builds — the r6
@@ -295,7 +284,7 @@ object Dedup {
 
   /** The distributed rollup behind `d_paragraph_neardup` (one row per
     * source, ready to collect) plus the persisted paragraph shingle
-    * cache backing it. Exposed `private[graft]` so PlanPair can dump
+    * cache backing it. Exposed `private[graft]` so `Inspect plan` can dump
     * the real distributed plan — the QueryDef itself returns a local
     * relation after the driver fold, whose `explain` shows only a
     * LocalTableScan. The caller MUST materialize the returned frame

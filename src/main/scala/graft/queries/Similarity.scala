@@ -26,20 +26,6 @@ object Similarity {
     */
   private[graft] val MaxBruteForceProbes = 1024
 
-  /** Probe frames already validated against [[MaxBruteForceProbes]],
-    * keyed by (session, probe-plan semantic hash): the guard's
-    * early-stopping limit-count is a real Spark job, so it runs once
-    * per distinct probe plan instead of inside every (timed) query
-    * invocation.
-    */
-  // keyed by the session token, never System.identityHashCode
-  // ([[SessionKey]]): an identity hash can be reused after the session
-  // is GC'd, so a new session could inherit a dead session's entry and
-  // skip a correctness guard. Tokens are never reused for the JVM's
-  // lifetime.
-  private val probeCapOk =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Int)]()
-
   /** Exact brute-force cosine scoring of `probes` (columns `query_id`,
     * `qv`, `qn`, extras allowed) against `corpus` (`cand_id`, `cv`,
     * `cn`): O(|corpus| × |probes|). This is the EXACT BASELINE the
@@ -51,15 +37,16 @@ object Similarity {
     */
   private[graft] def bruteForceCosine(corpus: org.apache.spark.sql.DataFrame,
       probes: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val key = (SessionKey.id(probes.sparkSession),
-      probes.queryExecution.logical.semanticHash())
-    if (!probeCapOk.contains(key)) {
+    // the guard's early-stopping limit-count is a real Spark job: run
+    // it once per (session, probe plan), not inside every timed call;
+    // an over-cap set stores nothing, so it fails on every call
+    ArtifactCache(probes.sparkSession, "",
+      s"bruteforce.probes.${probes.queryExecution.logical.semanticHash()}") {
       val n = probes.limit(MaxBruteForceProbes + 1).count()
       require(n <= MaxBruteForceProbes,
         s"brute-force cosine is the exact O(corpus × probes) baseline and " +
           s"caps the probe side at $MaxBruteForceProbes vectors; got more — " +
           "use the IVF cell join or LSH-bucketed variant for large probe sets")
-      probeCapOk.add(key)
     }
     corpus.crossJoin(broadcast(probes))
       .filter(col("cand_id") =!= col("query_id"))
@@ -571,7 +558,7 @@ object Similarity {
   }
 
   /** The tagged bounded union `s_ivf_recall` collects (exact top-5,
-    * IVF top-5 and the probe list in one job) — exposed so PlanPair
+    * IVF top-5 and the probe list in one job) — exposed so `Inspect plan`
     * can dump the real distributed plan; the QueryDef folds the
     * set-intersection on the driver.
     */

@@ -386,7 +386,7 @@ object Sketches {
         // window, no percentile value map. `hist` is consumed by three
         // subtrees but NOT persisted: the recompute is one codegen'd
         // scan+agg, cheaper than the cache round-trip (sf0.1
-        // QueryTimer: 6.8 s cold / 1.1 s warm vs 7.9 / 1.3 persisted —
+        // cold/warm timing: 6.8 s cold / 1.1 s warm vs 7.9 / 1.3 persisted —
         // the q_quantile_union measurement, same shape).
         val li = t(s, dir, "lineitem")
           .select(cents(col("l_extendedprice")).as("v"))
@@ -494,7 +494,7 @@ object Sketches {
             cents(col("l_extendedprice")).as("v"))
         // NOT persisted although two subtrees consume it: the
         // recompute is one codegen'd scan+agg, cheaper than the cache
-        // round-trip (sf0.1 QueryTimer: no-persist 7.4 s cold / 1.0 s
+        // round-trip (sf0.1 cold/warm timing: no-persist 7.4 s cold / 1.0 s
         // warm vs MEMORY_AND_DISK persist 10.1 s / 1.5 s)
         // Two INDEPENDENT one-pass scans stay (per-flag sketches vs the
         // directly-built union — computing both is the row's
@@ -668,7 +668,7 @@ object Sketches {
   )
 
   /** The distributed aggregation `q_bloom_union` collects (3 scalar
-    * columns) — exposed for PlanPair so the committed plan evidence
+    * columns) — exposed for `Inspect plan` so the committed plan evidence
     * shows the real probe-pass shape, not the post-collect local
     * relation.
     */

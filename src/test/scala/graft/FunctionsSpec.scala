@@ -518,5 +518,21 @@ class FunctionsSpec extends AnyFunSuite {
     val boom = intercept[IllegalArgumentException](
       graft.queries.Similarity.bruteForceCosine(corpus, tooMany))
     assert(boom.getMessage.contains("probe"), boom.getMessage)
+    // an over-cap set stores nothing: it fails on every call
+    intercept[IllegalArgumentException](
+      graft.queries.Similarity.bruteForceCosine(corpus, tooMany))
+    // the cap check is a session artifact: a second call with the same
+    // probe plan runs no job over the probes, a released one runs again
+    val evals = spark.sparkContext.longAccumulator("probe evaluations")
+    val seen = udf { (_: Long) => evals.add(1); true }
+    val counted = okProbes.filter(seen(col("query_id")))
+    graft.queries.Similarity.bruteForceCosine(corpus, counted)
+    val first = evals.value
+    assert(first > 0, "the first call must run the cap check")
+    graft.queries.Similarity.bruteForceCosine(corpus, counted)
+    assert(evals.value == first, "a validated probe plan ran its check again")
+    graft.queries.ArtifactCache.releaseAll()
+    graft.queries.Similarity.bruteForceCosine(corpus, counted)
+    assert(evals.value > first, "a released validation was not re-run")
   }
 }

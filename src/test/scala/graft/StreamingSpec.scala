@@ -60,6 +60,21 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .start()
     q2.awaitTermination(60000)
     assert(spark.sql("SELECT count(*) FROM s_ev_sink2").collect()(0).getLong(0) == 3)
+
+    // an OVERWRITE snapshot streams nothing; a later append still does
+    spark.sql("INSERT OVERWRITE graft.default.s_ev VALUES (9,'z')")
+    spark.sql("INSERT INTO graft.default.s_ev VALUES (10,'p')")
+    val q3 = spark.readStream
+      .table("graft.default.s_ev")
+      .writeStream
+      .format("memory")
+      .queryName("s_ev_sink3")
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q3.awaitTermination(60000)
+    assert(spark.sql("SELECT id FROM s_ev_sink3 ORDER BY id").collect()
+      .map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L, 10L))
   }
 
   test("flatMapGroupsWithState sessionization closes sessions across commits") {
