@@ -3,7 +3,7 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
-import graft.connector.{GraftCommitMessage, GraftDataWriter, Values}
+import graft.connector.{GraftCommitMessage, GraftWriteSupport, Values}
 import graft.core.{RowKind, TableSchema}
 import graft.format.{DataFileMeta, FileStoreCommit, SnapshotManager}
 import java.nio.file.{Files, Path, Paths}
@@ -487,21 +487,6 @@ final class BatchTableWrite(table: GraftTableHandle, spark: SparkSession) {
       else df.select(renamed: _*)
     }
 
-    val writeSchema = aligned.schema
-    val tableDirStr = table.tableDir.toString
-    val fieldsJson = ts.fields.json
-    val partitionKeys = ts.partitionKeys
-    val trimmedPk = ts.trimmedPrimaryKeys
-    val isPk = ts.isPrimaryKeyTable
-    val numBuckets = ts.numBuckets
-    val baseSeq = nextSeqBase.getOrElse(
-      table.snapshotManager.latestSnapshot
-        .map(_.lastSequenceNumber + 1).getOrElse(1L))
-    val fmt = ts.options.getOrElse("file.format", "parquet")
-    val spill = GraftDataWriter.spillRows(ts.options)
-    val fids = ts.idMap
-    val ioSpec = ts.ioSpec // string travels into the task closure
-
     // DISJOINT sequence ranges per write() CALL: baseSeq comes from the
     // latest snapshot, which does not advance until commit — so two
     // write() calls before one commit would otherwise hand identical
@@ -510,17 +495,12 @@ final class BatchTableWrite(table: GraftTableHandle, spark: SparkSession) {
     // "later write wins"). Each call starts just above the previous
     // call's actual max written sequence (nextSeqBase), so later calls
     // are strictly higher without a per-call 2^52 stride.
+    val fresh = GraftWriteSupport.writerFactory(table.tableDir, ts)
+    val factory = nextSeqBase.fold(fresh)(b => fresh.copy(baseSeq = b))
+    val baseSeq = factory.baseSeq
     val collected: Array[Seq[DataFileMeta]] =
       aligned.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-        require(pid < (1 << 20),
-          s"write parallelism $pid exceeds the 2^20 sequence-range slots")
-        val fields = DataType.fromJson(fieldsJson).asInstanceOf[StructType]
-        val writer = new GraftDataWriter(Paths.get(tableDirStr), fields,
-          partitionKeys, trimmedPk, isPk, numBuckets,
-          baseSeq + (pid.toLong << 32),
-          writeSchema, hasRowKindCol = hasKind,
-          fileFormat = fmt, spillRows = spill, fieldIds = fids,
-          ioSpec = ioSpec)
+        val writer = factory.taskWriter(pid, withRowKind = hasKind)
         rows.foreach(writer.write)
         Iterator.single(
           writer.commit().asInstanceOf[GraftCommitMessage].files)
@@ -555,18 +535,10 @@ final class BatchTableWrite(table: GraftTableHandle, spark: SparkSession) {
 final class BatchTableCommit(table: GraftTableHandle,
     overwriteSpec: Option[Map[String, String]]) {
 
-  def commit(messages: Seq[DataFileMeta]): Unit = {
-    val mode = overwriteSpec match {
-      case None => FileStoreCommit.NoOverwrite
-      case Some(m) => FileStoreCommit.StaticOverwrite(m)
-    }
-    FileStoreCommit.commit(table.snapshotManager,
-      table.tableSchema.id, table.tableSchema.partitionKeys, messages, mode,
-      resequence = graft.connector.GraftWriteSupport.resequenceInfo(
-        table.tableDir, table.tableSchema),
-      strictKeys = graft.connector.GraftWriteSupport.strictSequenceKeys(
-        table.tableSchema))
-    // reference contract: a commit may publish a second, COMPACT snapshot
-    graft.format.Compactor.maybeCompact(table.tableDir, table.tableSchema)
-  }
+  def commit(messages: Seq[DataFileMeta]): Unit =
+    GraftWriteSupport.commitFiles(table.tableDir,
+      table.tableSchema, messages, overwriteSpec match {
+        case None => FileStoreCommit.NoOverwrite
+        case Some(m) => FileStoreCommit.StaticOverwrite(m)
+      })
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, Par
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types._
 import graft.core.{RowKind, TableSchema}
-import graft.format.{FormatIO, SnapshotManager, SortMergeReader}
+import graft.format.{DataFileWriter, FormatIO, SnapshotManager, SortMergeReader}
 import java.nio.file.{Path, Paths}
 import scala.collection.mutable
 
@@ -150,12 +150,7 @@ final case class GraftChangelogReaderFactory(
     val part = p.asInstanceOf[GraftChangelogPartition]
     val fields = DataType.fromJson(fieldsJson).asInstanceOf[StructType]
     val required = DataType.fromJson(requiredJson).asInstanceOf[StructType]
-    val dataFields = StructType(
-      fields.fields.filterNot(f => partitionKeys.contains(f.name)))
-    val kvSchema = StructType(
-      StructField("_SEQUENCE_NUMBER", LongType, nullable = false) +:
-        StructField("_VALUE_KIND", IntegerType, nullable = false) +:
-        dataFields.fields)
+    val kvSchema = DataFileWriter.fileSchema(fields, partitionKeys, isPk = true)
     val keyIdx = trimmedPk.map(kvSchema.fieldIndex)
     val keyTypes = trimmedPk.map(k => kvSchema(kvSchema.fieldIndex(k)).dataType)
 

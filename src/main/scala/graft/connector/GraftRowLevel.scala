@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.core.{RowKind, TableSchema}
 import graft.format.{Compactor, SnapshotManager}
-import java.nio.file.{Path, Paths}
+import java.nio.file.Path
 import java.util.concurrent.atomic.AtomicReference
 
 /** Copy-on-write row-level DML (SQL DELETE with non-partition
@@ -90,9 +90,7 @@ class GraftReplaceBatchWrite(tableDir: Path, schema: TableSchema,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.collect { case m: GraftCommitMessage => m.files }.flatten
-      .foreach(f => graft.format.FileIO.resolve(schema.ioSpec)
-        .delete(tableDir.resolve(f.fileName)))
+    GraftWriteSupport.abortFiles(tableDir, schema, messages)
 }
 
 /** Merge-on-read row-level DML for primary-key tables — the format's
@@ -162,17 +160,9 @@ class GraftDeltaBatchWrite(tableDir: Path, schema: TableSchema,
   extends DeltaBatchWrite {
 
   override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DeltaWriterFactory = {
-    val sm = new SnapshotManager(tableDir,
-      io = graft.format.FileIO.resolve(schema.ioSpec))
-    val baseSeq = sm.latestSnapshot.map(_.lastSequenceNumber + 1).getOrElse(1L)
-    GraftDeltaWriterFactory(tableDir.toString, schema.fields.json,
-      schema.partitionKeys, schema.trimmedPrimaryKeys, schema.numBuckets,
-      baseSeq, rowSchema.json, rowIdSchema.json,
-      schema.options.getOrElse("file.format", "parquet"),
-      GraftDataWriter.spillRows(schema.options), schema.idMap,
-      GraftDataWriter.blockSize(schema.options), schema.ioSpec)
-  }
+      info: PhysicalWriteInfo): DeltaWriterFactory =
+    GraftDeltaWriterFactory(GraftWriteSupport.writerFactory(tableDir, schema),
+      rowSchema.json, rowIdSchema.json)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     GraftWriteSupport.commitFiles(tableDir, schema,
@@ -183,20 +173,12 @@ class GraftDeltaBatchWrite(tableDir: Path, schema: TableSchema,
     GraftWriteSupport.abortFiles(tableDir, schema, messages)
 }
 
-final case class GraftDeltaWriterFactory(
-    tableDirStr: String,
-    fieldsJson: String,
-    partitionKeys: Seq[String],
-    trimmedPk: Seq[String],
-    numBuckets: Int,
-    baseSeq: Long,
-    rowSchemaJson: String,
-    rowIdSchemaJson: String,
-    fileFormat: String,
-    spillRows: Int,
-    fieldIds: Map[String, Int],
-    blockSize: Int,
-    ioSpec: String)
+/** Per-statement delta task factory: the batch factory's sequence
+  * blocks and file settings, plus the shapes of Spark's row and row-id
+  * projections.
+  */
+final case class GraftDeltaWriterFactory(batch: GraftWriterFactory,
+    rowSchemaJson: String, rowIdSchemaJson: String)
   extends DeltaWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long)
@@ -223,28 +205,17 @@ class GraftDeltaWriter(f: GraftDeltaWriterFactory, pid: Int)
   import org.apache.spark.sql.types.{DataType, StructType}
 
   private val fields =
-    DataType.fromJson(f.fieldsJson).asInstanceOf[StructType]
+    DataType.fromJson(f.batch.fieldsJson).asInstanceOf[StructType]
   private val rowSchema =
     DataType.fromJson(f.rowSchemaJson).asInstanceOf[StructType]
   private val rowIdSchema =
     DataType.fromJson(f.rowIdSchemaJson).asInstanceOf[StructType]
-  private val writeSchema = StructType(fields.fields :+
-    org.apache.spark.sql.types.StructField(RowKind.ColumnName,
-      org.apache.spark.sql.types.ByteType, nullable = false))
+  private val writer = f.batch.taskWriter(pid, withRowKind = true)
 
-  require(pid < (1 << 20),
-    s"write parallelism $pid exceeds the 2^20 sequence-range slots")
-  private val writer =
-    new GraftDataWriter(Paths.get(f.tableDirStr), fields, f.partitionKeys,
-      f.trimmedPk, isPk = true, f.numBuckets,
-      f.baseSeq + (pid.toLong << 32), writeSchema,
-      hasRowKindCol = true, fileFormat = f.fileFormat,
-      spillRows = f.spillRows, fieldIds = f.fieldIds,
-      blockSize = f.blockSize, ioSpec = f.ioSpec)
-
-  // scratch row reused across calls — GraftDataWriter.write copies
-  // values out synchronously, so holding borrowed references is safe
-  private val scratch = new GenericInternalRow(writeSchema.length)
+  // scratch row [fields..., _row_kind] reused across calls —
+  // GraftDataWriter.write copies values out synchronously, so holding
+  // borrowed references is safe
+  private val scratch = new GenericInternalRow(fields.length + 1)
   private val rowPos = rowSchema.fields.map(x => fields.fieldIndex(x.name))
   private val idPos = rowIdSchema.fields.map(x => fields.fieldIndex(x.name))
   // row-id columns as positions into the update row's schema, for the

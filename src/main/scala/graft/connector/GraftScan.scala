@@ -7,7 +7,7 @@ import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import graft.core.{RowKind, TableSchema}
-import graft.format.{DataFileMeta, FormatIO, SnapshotManager}
+import graft.format.{DataFileMeta, DataFileWriter, FormatIO, SnapshotManager}
 import java.nio.file.{Path, Paths}
 import scala.collection.mutable
 
@@ -817,10 +817,7 @@ final case class GraftReaderFactory(
     val required = DataType.fromJson(requiredJson).asInstanceOf[StructType]
     // data files hold non-partition fields (+ seq/kind for PK tables)
     val dataFields = StructType(fields.fields.filterNot(f => partitionKeys.contains(f.name)))
-    val kvFileSchema = if (isPk) StructType(
-      StructField("_SEQUENCE_NUMBER", LongType, nullable = false) +:
-        StructField("_VALUE_KIND", IntegerType, nullable = false) +:
-        dataFields.fields) else dataFields
+    val kvFileSchema = DataFileWriter.fileSchema(fields, partitionKeys, isPk)
 
     // columns we must read: required ∩ dataFields, plus key/seq/kind for merge
     val metaNames = Set("_file", "_sequence_number", "_row_kind")

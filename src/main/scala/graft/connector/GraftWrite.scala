@@ -90,8 +90,6 @@ class GraftWriteBuilder(tableDir: Path, schema: TableSchema, info: LogicalWriteI
 class GraftBatchWrite(tableDir: Path, schema: TableSchema,
     mode: FileStoreCommit.OverwriteMode) extends BatchWrite {
 
-  private def tableIo: FileIO = FileIO.resolve(schema.ioSpec)
-
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     GraftWriteSupport.writerFactory(tableDir, schema)
 
@@ -124,8 +122,6 @@ class GraftBatchWrite(tableDir: Path, schema: TableSchema,
 class GraftStreamingWrite(tableDir: Path, schema: TableSchema,
     mode: FileStoreCommit.OverwriteMode, queryId: String)
   extends streaming.StreamingWrite {
-
-  private def tableIo: FileIO = FileIO.resolve(schema.ioSpec)
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): streaming.StreamingDataWriterFactory =
@@ -171,7 +167,7 @@ class GraftStreamingWrite(tableDir: Path, schema: TableSchema,
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
-    val sm = new SnapshotManager(tableDir, io = tableIo)
+    val sm = new SnapshotManager(tableDir, io = FileIO.resolve(schema.ioSpec))
     if (lastCommittedEpoch(sm).exists(_ >= epochId)) {
       // replayed epoch: the table already has it — drop the staged
       // files this re-run produced
@@ -203,16 +199,10 @@ final case class GraftCommitMessage(files: Seq[DataFileMeta])
   extends WriterCommitMessage
 
 object GraftWriteSupport {
-  /** THE commit recipe shared by append ([[GraftBatchWrite]]) and
-    * delta ([[GraftDeltaBatchWrite]]) writes: snapshot publication
-    * with conflict re-sequencing + strict-sequence guard, then the
-    * optional trailing COMPACT snapshot. One copy, so the two commit
-    * paths cannot drift.
-    */
-  /** THE writer-factory recipe shared by batch and streaming writes:
-    * fresh baseSeq above the table's current high-water mark, one
-    * sequence block per task. One copy, so the two write paths cannot
-    * drift.
+  /** THE writer-factory recipe shared by batch, streaming, delta and
+    * facade writes: fresh baseSeq above the table's current high-water
+    * mark, one sequence block per task. One copy, so the write paths
+    * cannot drift.
     */
   def writerFactory(tableDir: Path, schema: TableSchema): GraftWriterFactory = {
     val sm = new SnapshotManager(tableDir,
@@ -223,10 +213,16 @@ object GraftWriteSupport {
       schema.isPrimaryKeyTable, schema.numBuckets, baseSeq,
       schema.options.getOrElse("file.format", "parquet"),
       GraftDataWriter.spillRows(schema.options), schema.idMap,
-      GraftDataWriter.blockSize(schema.options),
+      DataFileWriter.blockSize(schema.options),
       ioSpec = schema.ioSpec)
   }
 
+  /** THE commit recipe shared by append ([[GraftBatchWrite]]), delta
+    * ([[GraftDeltaBatchWrite]]), streaming and facade writes: snapshot
+    * publication with conflict re-sequencing (PK tables) +
+    * strict-sequence guard, then the optional trailing COMPACT
+    * snapshot. One copy, so the commit paths cannot drift.
+    */
   def commitFiles(tableDir: Path, schema: TableSchema,
       files: Seq[DataFileMeta],
       mode: FileStoreCommit.OverwriteMode,
@@ -234,7 +230,9 @@ object GraftWriteSupport {
     FileStoreCommit.commit(
       new SnapshotManager(tableDir, io = FileIO.resolve(schema.ioSpec)),
       schema.id, schema.partitionKeys, files, mode,
-      resequence = resequenceInfo(tableDir, schema),
+      resequence =
+        if (schema.isPrimaryKeyTable) Some(DataFileWriter(tableDir, schema))
+        else None,
       strictKeys = strictSequenceKeys(schema),
       identifier = identifier)
     // "one commit may generate up to two snapshots" — data + compaction
@@ -259,24 +257,6 @@ object GraftWriteSupport {
       schema.trimmedPrimaryKeys.map(k =>
         k -> schema.fields(schema.fields.fieldIndex(k)).dataType)
     else Seq.empty
-
-  /** Conflict re-sequencing applies to PK tables only (append rows have
-    * no merge semantics to order).
-    */
-  def resequenceInfo(tableDir: Path, schema: TableSchema)
-      : Option[graft.format.ResequenceInfo] =
-    if (!schema.isPrimaryKeyTable) None
-    else {
-      val dataFields = StructType(schema.fields.fields
-        .filterNot(f => schema.partitionKeys.contains(f.name)))
-      Some(graft.format.ResequenceInfo(tableDir,
-        StructType(
-          StructField("_SEQUENCE_NUMBER", LongType, nullable = false) +:
-            StructField("_VALUE_KIND", IntegerType, nullable = false) +:
-            dataFields.fields),
-        schema.options.getOrElse("file.format", "parquet"),
-        schema.idMap, ioSpec = schema.ioSpec))
-    }
 }
 
 final case class GraftWriterFactory(
@@ -290,16 +270,30 @@ final case class GraftWriterFactory(
     fileFormat: String = "parquet",
     spillRows: Int = GraftDataWriter.DefaultSpillRows,
     fieldIds: Map[String, Int] = Map.empty,
-    blockSize: Int = GraftDataWriter.DefaultBlockSize,
+    blockSize: Int = DataFileWriter.DefaultBlockSize,
     ioSpec: String = "local")
   extends DataWriterFactory {
 
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+    taskWriter(partitionId, withRowKind = false)
+
+  /** THE task writer of every write path (SQL, streaming, delta and
+    * facade): task partition `pid` owns the sequence block
+    * `baseSeq + pid·2^32`, disjoint from every other task's in the same
+    * commit; at most 2^20 blocks keep the ranges inside the Long space.
+    * `withRowKind`: the write rows carry a trailing `_row_kind` byte.
+    */
+  def taskWriter(partitionId: Int, withRowKind: Boolean): GraftDataWriter = {
+    require(partitionId < (1 << 20),
+      s"write parallelism $partitionId exceeds the 2^20 sequence-range slots")
     val fields = DataType.fromJson(fieldsJson).asInstanceOf[StructType]
+    val writeSchema =
+      if (!withRowKind) fields
+      else StructType(fields.fields :+
+        StructField(RowKind.ColumnName, ByteType, nullable = false))
     new GraftDataWriter(Paths.get(tableDirStr), fields, partitionKeys,
-      trimmedPk, isPk, numBuckets,
-      // per-task disjoint sequence ranges within one commit
-      baseSeq + (partitionId.toLong << 32), fields, hasRowKindCol = false,
+      trimmedPk, isPk, numBuckets, baseSeq + (partitionId.toLong << 32),
+      writeSchema, hasRowKindCol = withRowKind,
       fileFormat = fileFormat, spillRows = spillRows, fieldIds = fieldIds,
       blockSize = blockSize, ioSpec = ioSpec)
   }
@@ -316,17 +310,6 @@ object GraftDataWriter {
   def spillRows(options: Map[String, String]): Int =
     options.get("write-buffer-rows").map(_.toInt)
       .getOrElse(DefaultSpillRows)
-
-  /** Parquet row-group size — the unit of sub-file skipping. 128 MB
-    * (parquet-mr default) is right at corpus scale; tests/canaries
-    * shrink it to exercise multi-group files.
-    */
-  val DefaultBlockSize: Int =
-    org.apache.parquet.hadoop.ParquetWriter.DEFAULT_BLOCK_SIZE
-
-  def blockSize(options: Map[String, String]): Int =
-    options.get("parquet.block-size").map(_.toInt)
-      .getOrElse(DefaultBlockSize)
 }
 
 /** Buffers rows per (partition, bucket) and writes one sorted file per
@@ -350,20 +333,19 @@ class GraftDataWriter(tableDir: Path, fields: StructType,
     fileFormat: String = "parquet",
     spillRows: Int = GraftDataWriter.DefaultSpillRows,
     fieldIds: Map[String, Int] = Map.empty,
-    blockSize: Int = GraftDataWriter.DefaultBlockSize,
+    blockSize: Int = DataFileWriter.DefaultBlockSize,
     ioSpec: String = "local")
   extends DataWriter[InternalRow] {
 
   private val io: FileIO = FileIO.resolve(ioSpec)
+  private val files = DataFileWriter(tableDir.toString,
+    DataFileWriter.fileSchema(fields, partitionKeys, isPk), partitionKeys,
+    trimmedPk, isPk, fileFormat, fieldIds, blockSize, ioSpec)
+  private val fileSchema = files.fileSchema
 
   // table fields (sans partition cols) stored in data files
   private val dataFields = StructType(
     fields.fields.filterNot(f => partitionKeys.contains(f.name)))
-  private val kvSchema = StructType(
-    StructField("_SEQUENCE_NUMBER", LongType, nullable = false) +:
-      StructField("_VALUE_KIND", IntegerType, nullable = false) +:
-      dataFields.fields)
-  private val fileSchema = if (isPk) kvSchema else dataFields
 
   private val partIdx = partitionKeys.map(k => writeSchema.fieldIndex(k))
   private val partTypes = partitionKeys.map(k => fields(fields.fieldIndex(k)).dataType)
@@ -459,74 +441,22 @@ class GraftDataWriter(tableDir: Path, fields: StructType,
   private def flush(key: (Seq[String], Int),
       rows: mutable.ArrayBuffer[InternalRow]): DataFileMeta = {
     val (part, bucket) = key
-    locally {
-      val sorted = if (isPk) {
-        val kt = keyTypes
-        rows.sortWith { (a, b) =>
-          var c = 0; var i = 0
-          while (c == 0 && i < keyIdxInData.length) {
-            val dt = kt(i)
-            val ia = keyIdxInData(i) + 2
-            val av = if (a.isNullAt(ia)) null else a.get(ia, dt)
-            val bv = if (b.isNullAt(ia)) null else b.get(ia, dt)
-            c = Values.compare(dt, av, bv)
-            i += 1
-          }
-          if (c != 0) c < 0 else a.getLong(0) < b.getLong(0)
+    val sorted = if (isPk) {
+      val kt = keyTypes
+      rows.sortWith { (a, b) =>
+        var c = 0; var i = 0
+        while (c == 0 && i < keyIdxInData.length) {
+          val dt = kt(i)
+          val ia = keyIdxInData(i) + 2
+          val av = if (a.isNullAt(ia)) null else a.get(ia, dt)
+          val bv = if (b.isNullAt(ia)) null else b.get(ia, dt)
+          c = Values.compare(dt, av, bv)
+          i += 1
         }
-      } else rows
-
-      val partDir = partitionKeys.zip(part)
-        .map { case (k, v) => s"$k=$v" }.mkString("/")
-      val bucketDir = (if (partDir.isEmpty) "" else partDir + "/") + s"bucket-$bucket"
-      io.createDirectories(tableDir.resolve(bucketDir))
-      val rel = s"$bucketDir/data-${java.util.UUID.randomUUID()}." +
-        FormatIO.extension(fileFormat)
-      val w = FormatIO.writer(fileFormat, tableDir.resolve(rel), fileSchema,
-        fieldIds, blockSize, io = io)
-      sorted.foreach(w.write)
-      w.close()
-
-      val seqs = if (isPk) sorted.map(_.getLong(0)) else Seq(0L)
-      // typed min/max bounds, canonical-encoded: trimmed-pk columns for
-      // PK tables (pruning on anything else would resurrect overwritten
-      // rows), EVERY primitive column for append tables (no merge
-      // semantics → any-column zone-map pruning is sound). Oversized
-      // string bounds are dropped rather than truncated.
-      val statCols: Seq[(String, Int, DataType)] =
-        if (isPk) trimmedPk.zipWithIndex.map { case (k, j) =>
-          (k, keyIdxInData(j) + 2, keyTypes(j))
-        }
-        else dataFields.fields.toSeq.zipWithIndex.collect {
-          case (f, i) if f.dataType != BinaryType => (f.name, i, f.dataType)
-        }
-      val typedStats = statCols.flatMap { case (name, i, dt) =>
-        var lo: Any = null; var hi: Any = null
-        sorted.foreach { r =>
-          val v = if (r.isNullAt(i)) null else r.get(i, dt)
-          if (v != null) {
-            if (lo == null || Values.compare(dt, v, lo) < 0) lo = v
-            if (hi == null || Values.compare(dt, v, hi) > 0) hi = v
-          }
-        }
-        if (lo == null) None
-        else {
-          val (els, ehs) = (Values.encode(dt, lo), Values.encode(dt, hi))
-          if (els.length > 64 || ehs.length > 64) None
-          else Some(name -> (els -> ehs))
-        }
-      }.toMap
-
-      // exact per-column null counts (append tables): IS NULL pruning
-      // and COUNT(col) pushdown read them from the manifest
-      val nullCounts: Map[String, Long] =
-        if (isPk) Map.empty
-        else dataFields.fields.toSeq.zipWithIndex.map { case (f, i) =>
-          f.name -> sorted.count(_.isNullAt(i)).toLong
-        }.toMap
-      DataFileMeta(rel, io.size(tableDir.resolve(rel)), sorted.length,
-        part, bucket, seqs.min, seqs.max, typedStats, nullCounts)
-    }
+        if (c != 0) c < 0 else a.getLong(0) < b.getLong(0)
+      }
+    } else rows
+    files.write(part, bucket, "data", sorted.iterator)
   }
 
   override def commit(): WriterCommitMessage = {

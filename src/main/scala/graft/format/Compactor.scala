@@ -1,7 +1,5 @@
 package graft.format
 
-import org.apache.spark.sql.types._
-import graft.connector.Values
 import java.nio.file.Path
 
 /** Full compaction of one (partition, bucket) group: read every live
@@ -20,136 +18,49 @@ import java.nio.file.Path
 // back to themselves via readResolve.
 object Compactor extends Serializable {
 
-  /** Executor-side rewrite; returns the replacement file meta. */
+  /** Executor-side rewrite of one group through the table's writer;
+    * returns the replacement file meta.
+    */
   def rewriteGroup(
-      tableDir: Path,
-      fields: StructType,
-      partitionKeys: Seq[String],
-      trimmedPk: Seq[String],
-      isPk: Boolean,
+      writer: DataFileWriter,
+      mergeSpec: MergeFunction.Spec,
       partition: Seq[String],
       bucket: Int,
-      fileNames: Seq[String],
-      fileFormat: String = "parquet",
-      fieldIds: Map[String, Int] = Map.empty,
-      ioSpec: String = "local",
-      mergeSpec: MergeFunction.Spec =
-        MergeFunction.Spec("deduplicate", false, Map.empty)): DataFileMeta = {
-
-    val io = FileIO.resolve(ioSpec)
-    val dataFields = StructType(
-      fields.fields.filterNot(f => partitionKeys.contains(f.name)))
-    val fileSchema = if (isPk) StructType(
-      StructField("_SEQUENCE_NUMBER", LongType, nullable = false) +:
-        StructField("_VALUE_KIND", IntegerType, nullable = false) +:
-        dataFields.fields) else dataFields
+      fileNames: Seq[String]): DataFileMeta = {
+    val io = FileIO.resolve(writer.ioSpec)
+    val fileSchema = writer.fileSchema
+    def open(fn: String) =
+      FormatIO.reader(FormatIO.ofFile(fn), Path.of(writer.tableDir).resolve(fn),
+        fileSchema, fileSchema, writer.fieldIds, io = io)
 
     // STREAMING rewrite: input files are already sorted by (key, seq),
     // so the PK path is the same O(open files)-memory k-way
     // SortMergeReader the read path uses (winners in key order,
     // deletes dropped — safe because the WHOLE bucket is rewritten);
-    // the append path concatenates. The previous form materialized
-    // every live key's row in a heap-side map plus a sorted Seq —
-    // fine at test SF, an executor OOM on the 100 TB bucket this file
-    // is designed for. Stats/null-counts/sequence bounds accumulate
-    // inline on the single pass.
-    val rowIter: Iterator[org.apache.spark.sql.catalyst.InternalRow] =
-      if (isPk) {
-        val keyIdx = trimmedPk.map(k => fileSchema.fieldIndex(k))
+    // the append path concatenates. Stats, null counts and sequence
+    // bounds accumulate in the writer's single pass.
+    val rows: Iterator[org.apache.spark.sql.catalyst.InternalRow] =
+      if (writer.isPk) {
+        val keyIdx = writer.trimmedPk.map(k => fileSchema.fieldIndex(k))
         val keyTypes = keyIdx.map(i => fileSchema(i).dataType)
-        val sources = fileNames.map { fn =>
-          FormatIO.reader(FormatIO.ofFile(fn), tableDir.resolve(fn),
-            fileSchema, fileSchema, fieldIds, io = io)
-            .map(r => (fn, r)): Iterator[(String,
-              org.apache.spark.sql.catalyst.InternalRow)]
-        }
         // keepDeletes on sequence.field tables: the winning tombstone's
         // field value must survive the rewrite, or a later out-of-order
         // stale insert would resurrect the deleted key (commit-order
         // engines can drop deletes — later commits always outrank)
-        new SortMergeReader(sources, keyIdx, keyTypes, 0, 1,
+        new SortMergeReader(fileNames.map(fn => open(fn).map(r => (fn, r))),
+          keyIdx, keyTypes, 0, 1,
           mergeFn = MergeFunction.create(mergeSpec, fileSchema, keyIdx, 0, 1,
             keepDeletes = mergeSpec.seqField.isDefined))
           .map(_._2)
-      } else
-        fileNames.iterator.flatMap(fn =>
-          FormatIO.reader(FormatIO.ofFile(fn), tableDir.resolve(fn),
-            fileSchema, fileSchema, fieldIds, io = io))
-
-    val partDir = partitionKeys.zip(partition)
-      .map { case (k, v) => s"$k=$v" }.mkString("/")
-    val bucketDir = (if (partDir.isEmpty) "" else partDir + "/") + s"bucket-$bucket"
-    io.createDirectories(tableDir.resolve(bucketDir))
-    val rel = s"$bucketDir/compact-${java.util.UUID.randomUUID()}." +
-      FormatIO.extension(fileFormat)
-    val w = FormatIO.writer(fileFormat, tableDir.resolve(rel), fileSchema,
-      fieldIds, io = io)
-
-    // same stats policy as the writer: pk-column bounds for PK tables,
-    // any-primitive-column bounds for append tables
-    val statCols: Seq[(String, Int, org.apache.spark.sql.types.DataType)] =
-      if (isPk) trimmedPk.map(k =>
-        (k, fileSchema.fieldIndex(k), fileSchema(fileSchema.fieldIndex(k)).dataType))
-      else fileSchema.fields.toSeq.zipWithIndex.collect {
-        case (f, i) if f.dataType != BinaryType => (f.name, i, f.dataType)
-      }
-    val lo = Array.fill[Any](statCols.length)(null)
-    val hi = Array.fill[Any](statCols.length)(null)
-    val nulls = new Array[Long](fileSchema.length)
-    var n = 0L
-    var seqMin = Long.MaxValue
-    var seqMax = Long.MinValue
-    rowIter.foreach { r =>
-      w.write(r)
-      n += 1
-      if (isPk) {
-        val s = r.getLong(0)
-        if (s < seqMin) seqMin = s
-        if (s > seqMax) seqMax = s
-      }
-      var i = 0
-      while (i < statCols.length) {
-        val (_, idx, dt) = statCols(i)
-        if (!r.isNullAt(idx)) {
-          val v = r.get(idx, dt)
-          if (lo(i) == null || Values.compare(dt, v, lo(i)) < 0) lo(i) = v
-          if (hi(i) == null || Values.compare(dt, v, hi(i)) > 0) hi(i) = v
-        }
-        i += 1
-      }
-      if (!isPk) {
-        var j = 0
-        while (j < fileSchema.length) {
-          if (r.isNullAt(j)) nulls(j) += 1
-          j += 1
-        }
-      }
-    }
-    w.close()
-
-    val stats = statCols.zipWithIndex.flatMap { case ((name, _, dt), i) =>
-      if (lo(i) == null) None
-      else {
-        val (els, ehs) = (Values.encode(dt, lo(i)), Values.encode(dt, hi(i)))
-        if (els.length > 64 || ehs.length > 64) None
-        else Some(name -> (els -> ehs))
-      }
-    }.toMap
-
-    val nullCounts: Map[String, Long] =
-      if (isPk) Map.empty
-      else fileSchema.fields.toSeq.zipWithIndex.map { case (f, i) =>
-        f.name -> nulls(i)
-      }.toMap
-    DataFileMeta(rel, io.size(tableDir.resolve(rel)), n,
-      partition, bucket, if (n > 0 && isPk) seqMin else 0L,
-      if (n > 0 && isPk) seqMax else 0L, stats, nullCounts)
+      } else fileNames.iterator.flatMap(open)
+    writer.write(partition, bucket, "compact", rows)
   }
 
   /** Rewrite + publish the given (partition, bucket) groups as one
     * COMPACT snapshot — one task per group when a SparkSession is
     * available (commit paths run on the driver), serial otherwise.
-    * Returns the number of groups compacted.
+    * Returns the number of groups published: 0 when the commit
+    * aborted (inputs gone, fence tripped, publish lost).
     */
   def compactGroups(spark: Option[org.apache.spark.sql.SparkSession],
       tableDir: Path, schema: graft.core.TableSchema,
@@ -165,29 +76,19 @@ object Compactor extends Serializable {
     // current schema id, so later reads null-fill exactly the columns
     // the rewrite did not carry.
     val schemaNow = graft.core.TableSchema.load(tableDir).getOrElse(schema)
-    val dirStr = tableDir.toString
-    val fieldsJson = schemaNow.fields.json
-    val pks = schemaNow.partitionKeys
-    val tpk = schemaNow.trimmedPrimaryKeys
-    val isPk = schemaNow.isPrimaryKeyTable
-    val fmt = schemaNow.options.getOrElse("file.format", "parquet")
-    val fids = schemaNow.idMap
-    val ioSpec = schemaNow.ioSpec // string travels into the task closure
+    val writer = DataFileWriter(tableDir, schemaNow)
     val mspec = schemaNow.mergeSpec // compaction folds with the table's engine
     val work = groups.map { case ((part, bucket), fs) =>
       (part, bucket, fs.map(_.fileName))
     }
-    def rewrite(part: Seq[String], bucket: Int, names: Seq[String]): DataFileMeta =
-      rewriteGroup(Path.of(dirStr),
-        org.apache.spark.sql.types.DataType.fromJson(fieldsJson)
-          .asInstanceOf[StructType],
-        pks, tpk, isPk, part, bucket, names, fmt, fids, ioSpec, mspec)
     val adds = spark match {
       case Some(s) => s.sparkContext.parallelize(work, work.size)
-        .map { case (part, bucket, names) => rewrite(part, bucket, names) }
+        .map { case (part, bucket, names) =>
+          rewriteGroup(writer, mspec, part, bucket, names)
+        }
         .collect().toSeq
       case None => work.map { case (part, bucket, names) =>
-        rewrite(part, bucket, names)
+        rewriteGroup(writer, mspec, part, bucket, names)
       }
     }
     val deleteNames = groups.flatMap(_._2.map(_.fileName)).toSet
@@ -198,9 +99,9 @@ object Compactor extends Serializable {
     val (kept, empty) = adds.partition(_.rowCount > 0)
     val fio = FileIO.resolve(schemaNow.ioSpec)
     empty.foreach(f => fio.delete(tableDir.resolve(f.fileName)))
-    commit(new SnapshotManager(tableDir, io = fio),
-      schemaNow.id, kept, deleteNames, tableDir)
-    groups.size
+    if (commit(new SnapshotManager(tableDir, io = fio),
+      schemaNow.id, kept, deleteNames, tableDir)) groups.size
+    else 0
   }
 
   /** Commit-triggered compaction ≙ the reference's "one commit may
@@ -289,56 +190,25 @@ object Compactor extends Serializable {
     }
   }
 
-  /** Publish a COMPACT snapshot replacing `deleteNames` with `adds`.
-    * Aborts (deleting the new files) if a concurrent commit removed any
-    * of the inputs.
+  /** Publish a COMPACT (or, for copy-on-write DML, OVERWRITE) snapshot
+    * replacing exactly `deleteNames` with `adds`. Aborts if a
+    * concurrent commit removed any input, if the merge-rule fence
+    * trips (the rewrite folded under the rules it LOADED — a rerun
+    * picks up the new schema) or if every publish attempt lost; every
+    * abort deletes the `adds` files, which no snapshot references.
     */
   def commit(sm: SnapshotManager, schemaId: Long,
       adds: Seq[DataFileMeta], deleteNames: Set[String],
       tableDir: Path, kind: String = "COMPACT"): Boolean = {
-    var attempt = 0
-    while (attempt < 100) {
-      val base = sm.latestSnapshot.getOrElse(
-        throw new IllegalStateException("Compaction on empty table"))
-      // merge-rule ALTER fence: compaction re-folds committed runs
-      // under the schema it LOADED; if a fold/sequence-group change
-      // landed since, the output would bake in stale rules. Abort like
-      // the inputs-vanished path — a rerun picks up the new schema.
-      // Checked AFTER the base read (see FileStoreCommit.commit for
-      // why the ordering matters).
-      try MergeRuleFence.check(sm.tableDir, schemaId)
-      catch { case _: IllegalStateException =>
-        adds.foreach(f => sm.io.delete(tableDir.resolve(f.fileName)))
-        return false
-      }
-      val live = sm.liveFiles(base)
-      val liveNames = live.map(_.fileName).toSet
-      if (!deleteNames.subsetOf(liveNames)) {
-        adds.foreach(f => sm.io.delete(tableDir.resolve(f.fileName)))
-        return false // inputs vanished under us — give up cleanly
-      }
-      val entries = live.filter(f => deleteNames.contains(f.fileName))
-        .map(f => ManifestEntry("DELETE", f)) ++
-        adds.map(f => ManifestEntry("ADD", f))
-      val manifest = sm.writeManifest(entries)
-      // compaction commits fold the chain too: a table maintained by
-      // repeated sys.compact (or partition DELETEs) must not grow its
-      // manifest list past the bound data commits respect
-      val (manifests, extra) = sm.chainWithFold(Some(base), live, manifest)
-      val snap = Snapshot(
-        id = base.id + 1,
-        schemaId = schemaId,
-        commitKind = kind,
-        timeMillis = System.currentTimeMillis(),
-        manifests = manifests,
-        lastSequenceNumber = math.max(base.lastSequenceNumber,
-          (adds.map(_.maxSeq) :+ 0L).max),
-        totalRecordCount = live.filterNot(f => deleteNames.contains(f.fileName))
-          .map(_.rowCount).sum + adds.map(_.rowCount).sum)
-      if (sm.tryCommitSnapshot(snap)) return true
-      (manifest +: extra).foreach(sm.deleteManifest)
-      attempt += 1
-    }
-    false
+    val published =
+      try FileStoreCommit.publish(sm, schemaId, kind) { (base, live) =>
+        if (base.isEmpty) throw new IllegalStateException("Compaction on empty table")
+        if (!deleteNames.subsetOf(live.map(_.fileName).toSet))
+          None // inputs vanished under us
+        else Some((live.filter(f => deleteNames.contains(f.fileName)), adds))
+      }.isDefined
+      catch { case _: MergeRuleFence.Fenced => false }
+    if (!published) adds.foreach(f => sm.io.delete(tableDir.resolve(f.fileName)))
+    published
   }
 }

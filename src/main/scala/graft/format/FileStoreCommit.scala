@@ -22,96 +22,118 @@ object FileStoreCommit {
     */
   case object DynamicOverwrite extends OverwriteMode
 
+  /** Data commit: ADD `newFiles` (re-sequenced above the base's
+    * high-water mark when `resequence` names the table's writer and a
+    * concurrent commit landed first), DELETE what `mode` overwrites.
+    */
   def commit(
       sm: SnapshotManager,
       schemaId: Long,
       partitionKeys: Seq[String],
       newFiles: Seq[DataFileMeta],
       mode: OverwriteMode,
-      resequence: Option[ResequenceInfo] = None,
+      resequence: Option[DataFileWriter] = None,
       strictKeys: Seq[(String, org.apache.spark.sql.types.DataType)] =
         Seq.empty,
       identifier: Option[String] = None): Snapshot = {
 
     if (strictKeys.nonEmpty) strictSequenceCheck(newFiles, strictKeys)
 
-    var attempt = 0
     var files = newFiles
+    publish(sm, schemaId,
+      if (mode == NoOverwrite) "APPEND" else "OVERWRITE", identifier) {
+      (base, live) =>
+        // Conflict re-sequencing: if a concurrent commit landed first
+        // from the same base, our rows may carry sequence numbers at or
+        // below the published lastSequenceNumber — the merge winner for
+        // a shared key would then be heap-order, not commit-order. Shift
+        // our sequences above the published high-water mark (a file
+        // rewrite, but only on the losing side of a race) so the LATER
+        // COMMIT always wins, matching snapshot-chain semantics.
+        resequence.foreach { writer =>
+          val lastSeq = base.map(_.lastSequenceNumber).getOrElse(0L)
+          val minSeq = files.map(_.minSeq).minOption.getOrElse(Long.MaxValue)
+          if (files.nonEmpty && minSeq <= lastSeq) {
+            val delta = lastSeq + 1 - minSeq
+            files = files.map(f => Resequencer.shift(writer, f, delta))
+          }
+        }
+        val deletes = mode match {
+          case NoOverwrite => Seq.empty
+          case StaticOverwrite(filter) =>
+            // an unknown filter column would otherwise match NO live file
+            // (indexOf = -1 fails the forall for every row) and silently
+            // turn INSERT OVERWRITE into a plain append — raise instead
+            val unknown = filter.keys.filterNot(partitionKeys.contains)
+            require(unknown.isEmpty,
+              s"static overwrite filter references non-partition column(s) " +
+                s"${unknown.mkString(", ")} (partition keys: " +
+                s"${partitionKeys.mkString(", ")})")
+            val idx = filter.map { case (k, v) => partitionKeys.indexOf(k) -> v }
+            live.filter(f => idx.forall { case (i, v) =>
+              f.partition.lift(i).contains(v)
+            })
+          case DynamicOverwrite =>
+            val touched = files.map(_.partition).toSet
+            live.filter(f => touched.contains(f.partition))
+        }
+        Some((deletes, files))
+    }.getOrElse(throw new IllegalStateException(
+      "Commit conflict: gave up after 100 snapshot publish attempts"))
+  }
+
+  /** THE optimistic publish loop behind every commit that writes a
+    * manifest — data commits, partition DELETEs, compactions and
+    * copy-on-write rewrites. Per attempt: read the base snapshot, fence
+    * (after the base read, never before: the ALTER saves its schema
+    * BEFORE publishing the marker, so once the marker is in `base` the
+    * schema is guaranteed visible to the check — a check-then-read
+    * ordering would let a complete ALTER land between the two and
+    * publish this commit on top of the marker unfenced), fold the live
+    * set, ask `plan` for this attempt's (DELETE, ADD) files — None
+    * aborts —, write one manifest, chain it (folding past the bound:
+    * `live` is already the folded base set), and publish snapshot
+    * base+1 with `lastSequenceNumber` and `totalRecordCount` derived
+    * from the base plus the entries. A lost publish deletes the
+    * attempt's manifests (no snapshot will ever reference them) and
+    * re-plans against the newer base.
+    *
+    * Returns None when `plan` aborted or all 100 attempts lost; throws
+    * [[MergeRuleFence.Fenced]] when the fence trips.
+    */
+  def publish(sm: SnapshotManager, schemaId: Long, kind: String,
+      identifier: Option[String] = None)(
+      plan: (Option[Snapshot], Seq[DataFileMeta]) =>
+        Option[(Seq[DataFileMeta], Seq[DataFileMeta])]): Option[Snapshot] = {
+    var attempt = 0
     while (attempt < 100) {
       val base = sm.latestSnapshot
-      // fence AFTER the base read, never before: the ALTER saves its
-      // schema BEFORE publishing the marker, so once the marker is in
-      // `base` the schema is guaranteed visible to this check — while
-      // a check-then-read ordering would let a complete ALTER (save +
-      // marker) land between the two and publish this commit on top
-      // of the marker unfenced
       MergeRuleFence.check(sm.tableDir, schemaId)
       val live = base.map(sm.liveFiles).getOrElse(Seq.empty)
-
-      // Conflict re-sequencing: if a concurrent commit landed first
-      // from the same base, our rows may carry sequence numbers at or
-      // below the published lastSequenceNumber — the merge winner for
-      // a shared key would then be heap-order, not commit-order. Shift
-      // our sequences above the published high-water mark (a file
-      // rewrite, but only on the losing side of a race) so the LATER
-      // COMMIT always wins, matching snapshot-chain semantics.
-      resequence.foreach { info =>
-        val lastSeq = base.map(_.lastSequenceNumber).getOrElse(0L)
-        val minSeq = files.map(_.minSeq).minOption.getOrElse(Long.MaxValue)
-        if (files.nonEmpty && minSeq <= lastSeq) {
-          val delta = lastSeq + 1 - minSeq
-          files = files.map(f => Resequencer.shift(info, f, delta))
-        }
+      val (deletes, adds) = plan(base, live) match {
+        case Some(entries) => entries
+        case None => return None
       }
-
-      val deletes: Seq[ManifestEntry] = mode match {
-        case NoOverwrite => Seq.empty
-        case StaticOverwrite(filter) =>
-          // an unknown filter column would otherwise match NO live file
-          // (indexOf = -1 fails the forall for every row) and silently
-          // turn INSERT OVERWRITE into a plain append — raise instead
-          val unknown = filter.keys.filterNot(partitionKeys.contains)
-          require(unknown.isEmpty,
-            s"static overwrite filter references non-partition column(s) " +
-              s"${unknown.mkString(", ")} (partition keys: " +
-              s"${partitionKeys.mkString(", ")})")
-          val idx = filter.map { case (k, v) => partitionKeys.indexOf(k) -> v }
-          live.filter(f => idx.forall { case (i, v) =>
-            f.partition.lift(i).contains(v)
-          }).map(f => ManifestEntry("DELETE", f))
-        case DynamicOverwrite =>
-          val touched = files.map(_.partition).toSet
-          live.filter(f => touched.contains(f.partition))
-            .map(f => ManifestEntry("DELETE", f))
-      }
-
-      val adds = files.map(f => ManifestEntry("ADD", f))
-      val manifest = sm.writeManifest(deletes ++ adds)
-      val deletedNames = deletes.map(_.file.fileName).toSet
-      val newTotal = live.filterNot(f => deletedNames.contains(f.fileName))
-        .map(_.rowCount).sum + files.map(_.rowCount).sum
-      // Manifest folding past the 50-chain bound — `live` is already
-      // the folded base set, no second chain read (the delta's DELETE
-      // entries drop the overwritten files at fold time).
+      val manifest = sm.writeManifest(
+        deletes.map(ManifestEntry("DELETE", _)) ++ adds.map(ManifestEntry("ADD", _)))
       val (manifests, extra) = sm.chainWithFold(base, live, manifest)
+      val deleted = deletes.map(_.fileName).toSet
       val snap = Snapshot(
         id = base.map(_.id + 1).getOrElse(1L),
         schemaId = schemaId,
-        commitKind = if (mode == NoOverwrite) "APPEND" else "OVERWRITE",
+        commitKind = kind,
         timeMillis = System.currentTimeMillis(),
         manifests = manifests,
-        lastSequenceNumber = math.max(
-          base.map(_.lastSequenceNumber).getOrElse(0L),
-          (files.map(_.maxSeq) :+ 0L).max),
-        totalRecordCount = newTotal,
+        lastSequenceNumber =
+          (base.map(_.lastSequenceNumber).toSeq ++ adds.map(_.maxSeq) :+ 0L).max,
+        totalRecordCount = live.filterNot(f => deleted.contains(f.fileName))
+          .map(_.rowCount).sum + adds.map(_.rowCount).sum,
         commitIdentifier = identifier)
-      if (sm.tryCommitSnapshot(snap)) return snap
-      // loser side: these manifests are referenced by no snapshot ever
+      if (sm.tryCommitSnapshot(snap)) return Some(snap)
       (manifest +: extra).foreach(sm.deleteManifest)
       attempt += 1
     }
-    throw new IllegalStateException(
-      "Commit conflict: gave up after 100 snapshot publish attempts")
+    None
   }
 
   /** `commit.strict-sequence=true` guard: within ONE commit, rows of
@@ -177,32 +199,11 @@ object FileStoreCommit {
     * SQL DELETE). Files already gone from the live set are ignored.
     */
   def commitFileDeletes(sm: SnapshotManager, schemaId: Long,
-      deleteNames: Set[String]): Snapshot = {
-    var attempt = 0
-    while (attempt < 100) {
-      val base = sm.latestSnapshot.getOrElse(
-        throw new IllegalStateException("DELETE on empty table"))
-      // base read first, fence second — see commit() for the ordering
-      MergeRuleFence.check(sm.tableDir, schemaId)
-      val live = sm.liveFiles(base)
-      val doomed = live.filter(f => deleteNames.contains(f.fileName))
-      val manifest = sm.writeManifest(doomed.map(f => ManifestEntry("DELETE", f)))
-      val (manifests, extra) = sm.chainWithFold(Some(base), live, manifest)
-      val snap = Snapshot(
-        id = base.id + 1,
-        schemaId = schemaId,
-        commitKind = "OVERWRITE",
-        timeMillis = System.currentTimeMillis(),
-        manifests = manifests,
-        lastSequenceNumber = base.lastSequenceNumber,
-        totalRecordCount = live.filterNot(f => deleteNames.contains(f.fileName))
-          .map(_.rowCount).sum)
-      if (sm.tryCommitSnapshot(snap)) return snap
-      (manifest +: extra).foreach(sm.deleteManifest)
-      attempt += 1
-    }
-    throw new IllegalStateException("DELETE commit conflict")
-  }
+      deleteNames: Set[String]): Snapshot =
+    publish(sm, schemaId, "OVERWRITE") { (base, live) =>
+      if (base.isEmpty) throw new IllegalStateException("DELETE on empty table")
+      Some((live.filter(f => deleteNames.contains(f.fileName)), Seq.empty))
+    }.getOrElse(throw new IllegalStateException("DELETE commit conflict"))
 }
 
 /** Commit-time half of the merge-rule ALTER fence.
@@ -237,6 +238,9 @@ object FileStoreCommit {
 object MergeRuleFence {
   import graft.core.{MergeRuleProps, TableSchema}
 
+  /** The fence tripped: the write must re-run against the current schema. */
+  final class Fenced(msg: String) extends IllegalStateException(msg)
+
   def check(tableDir: java.nio.file.Path, writerSchemaId: Long): Unit = {
     val ids = TableSchema.listIds(tableDir)
     if (ids.isEmpty || ids.last <= writerSchemaId) return
@@ -255,7 +259,7 @@ object MergeRuleFence {
     val currentOpts = TableSchema.loadById(tableDir, ids.last)
       .map(_.options).getOrElse(Map.empty[String, String])
     val changed = MergeRuleProps.changedBetween(writerOpts, currentOpts)
-    if (changed.nonEmpty) throw new IllegalStateException(
+    if (changed.nonEmpty) throw new Fenced(
       s"Commit fenced: merge-rule propert" +
         s"${if (changed.size == 1) "y" else "ies"} " +
         s"${changed.mkString(", ")} changed after this write began " +
@@ -266,53 +270,29 @@ object MergeRuleFence {
   }
 }
 
-/** What a commit needs to rewrite a KV file with shifted sequences. */
-final case class ResequenceInfo(
-    tableDir: java.nio.file.Path,
-    kvFileSchema: org.apache.spark.sql.types.StructType,
-    fileFormat: String,
-    fieldIds: Map[String, Int] = Map.empty,
-    ioSpec: String = "local")
-
 object Resequencer {
-  /** Rewrite one KV data file with every _SEQUENCE_NUMBER shifted by
-    * `delta`; returns the replacement meta (old file deleted).
+  /** Rewrite one KV data file through the table's writer with every
+    * _SEQUENCE_NUMBER shifted by `delta`; returns the replacement meta
+    * (old file deleted).
     */
-  def shift(info: ResequenceInfo, meta: DataFileMeta, delta: Long): DataFileMeta = {
+  def shift(writer: DataFileWriter, meta: DataFileMeta, delta: Long): DataFileMeta = {
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-    val io = FileIO.resolve(info.ioSpec)
-    val src = info.tableDir.resolve(meta.fileName)
-    val dir = meta.fileName.substring(0, meta.fileName.lastIndexOf('/') max 0)
-    val rel = (if (dir.isEmpty) "" else dir + "/") +
-      s"data-${java.util.UUID.randomUUID()}.${FormatIO.extension(info.fileFormat)}"
-    val w = FormatIO.writer(info.fileFormat, info.tableDir.resolve(rel),
-      info.kvFileSchema, info.fieldIds, io = io)
-    try {
-      FormatIO.reader(FormatIO.ofFile(meta.fileName), src,
-        info.kvFileSchema, info.kvFileSchema, info.fieldIds, io = io).foreach { r =>
-        val out = new GenericInternalRow(info.kvFileSchema.length)
-        out.update(0, r.getLong(0) + delta)
-        var i = 1
-        while (i < info.kvFileSchema.length) {
-          out.update(i, if (r.isNullAt(i)) null
-          else r.get(i, info.kvFileSchema(i).dataType))
-          i += 1
-        }
-        w.write(out)
+    val io = FileIO.resolve(writer.ioSpec)
+    val src = java.nio.file.Path.of(writer.tableDir).resolve(meta.fileName)
+    val schema = writer.fileSchema
+    val shifted = FormatIO.reader(FormatIO.ofFile(meta.fileName), src,
+      schema, schema, writer.fieldIds, io = io).map { r =>
+      val out = new GenericInternalRow(schema.length)
+      out.update(0, r.getLong(0) + delta)
+      var i = 1
+      while (i < schema.length) {
+        out.update(i, if (r.isNullAt(i)) null else r.get(i, schema(i).dataType))
+        i += 1
       }
-      w.close()
-    } catch { case t: Throwable =>
-      // a mid-copy failure must not leak the writer handle or strand a
-      // partial data file in the LIVE bucket dir (only age-gated vacuum
-      // would ever reclaim it)
-      try w.close() catch { case _: Throwable => () }
-      try io.delete(info.tableDir.resolve(rel))
-      catch { case _: Throwable => () }
-      throw t
+      out: org.apache.spark.sql.catalyst.InternalRow
     }
+    val out = writer.write(meta.partition, meta.bucket, "data", shifted)
     io.delete(src)
-    meta.copy(fileName = rel,
-      fileSize = io.size(info.tableDir.resolve(rel)),
-      minSeq = meta.minSeq + delta, maxSeq = meta.maxSeq + delta)
+    out
   }
 }

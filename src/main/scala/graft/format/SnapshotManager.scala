@@ -51,16 +51,19 @@ object AtomicPublisher {
   *
   * {{{
   * <table>/schema/schema-<i>        table schema versions
-  * <table>/snapshot/snapshot-<n>    snapshot JSON (atomic-rename publish)
+  * <table>/snapshot/snapshot-<n>    snapshot JSON (create-exclusive publish)
   * <table>/snapshot/LATEST          current snapshot id hint
   * <table>/manifest/manifest-<uuid> immutable manifest (ADD/DELETE entries)
-  * <table>/bucket-<b>/<uuid>.parquet data files
+  * <table>/[<k>=<v>/…]bucket-<b>/<data|compact>-<uuid>.<ext>
+  *                                  data files ([[DataFileWriter]])
   * }}}
   *
-  * Publication is a create-exclusive atomic rename of `snapshot-<n>`
-  * (two-phase commit, ≙ `pypaimon/py4j/java_implementation.py:397-407`);
-  * on local/HDFS-like filesystems rename is the atomicity primitive, on
-  * object stores a conditional PUT would take its place.
+  * Publication is a create-exclusive put of `snapshot-<n>` through the
+  * [[AtomicPublisher]] (two-phase commit, ≙
+  * `pypaimon/py4j/java_implementation.py:397-407`): a hard link from a
+  * temp file on local/HDFS-like filesystems — never a rename, which
+  * would silently replace a concurrent committer's snapshot — and the
+  * store's conditional PUT on object stores.
   */
 final class SnapshotManager(val tableDir: Path,
     publisher: AtomicPublisher = null,

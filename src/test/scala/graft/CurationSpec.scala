@@ -17,14 +17,23 @@ class CurationSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def plantDocs(rows: Seq[(Long, String, String)]): String = {
+  /** Plant `rows` as a temp corpus dir for `body`; the dir's cached
+    * artifacts are released and the dir deleted however `body` ends.
+    */
+  private def withDocs[T](rows: Seq[(Long, String, String)])(
+      body: String => T): T = {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("cur").toString
-    rows.toDF("doc_id", "source", "text")
-      .withColumn("lang", lit("en"))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    tmp
+    val tmp = java.nio.file.Files.createTempDirectory("cur")
+    try {
+      rows.toDF("doc_id", "source", "text")
+        .withColumn("lang", lit("en"))
+        .withColumn("n_chars", length(col("text")).cast("long"))
+        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      body(tmp.toString)
+    } finally {
+      graft.queries.ArtifactCache.release(spark, tmp.toString)
+      graft.util.Fs.deleteRecursively(tmp)
+    }
   }
 
   test("t_lm_score: a rare-token source scores higher NLL than a " +
@@ -33,14 +42,15 @@ class CurationSpec extends AnyFunSuite {
     // 'the' dominates the corpus (low NLL); 'zyzzyva' appears once
     val common = (1L to 20L).map(i => (i, "srcA", "the the the the"))
     val rare = Seq((100L, "srcB", "the zyzzyva quux corge"))
-    val dir = plantDocs(common ++ rare)
-    val rows = SparkEntry.queries("t_lm_score")(spark, dir).collect()
-      .map(r => r.getAs[String]("source") -> r.getAs[Double]("avg_nll_micronats"))
-      .toMap
-    assert(rows("srcB") > rows("srcA"),
-      s"rare-token source must score higher: $rows")
-    // common-token NLL is near -ln(p~=80/83): small but positive
-    assert(rows("srcA") >= 0.0)
+    withDocs(common ++ rare) { dir =>
+      val rows = SparkEntry.queries("t_lm_score")(spark, dir).collect()
+        .map(r => r.getAs[String]("source") -> r.getAs[Double]("avg_nll_micronats"))
+        .toMap
+      assert(rows("srcB") > rows("srcA"),
+        s"rare-token source must score higher: $rows")
+      // common-token NLL is near -ln(p~=80/83): small but positive
+      assert(rows("srcA") >= 0.0)
+    }
   }
 
   test("t_lm2_score: a source of unseen-bigram text scores higher NLL " +
@@ -49,35 +59,37 @@ class CurationSpec extends AnyFunSuite {
     // srcB chains bigrams that each occur once — low probability mass
     val common = (1L to 20L).map(i => (i, "srcA", "the cat the cat the cat"))
     val rare = Seq((100L, "srcB", "zyzzyva quux corge grault garply"))
-    val dir = plantDocs(common ++ rare)
-    val rows = SparkEntry.queries("t_lm2_score")(spark, dir).collect()
-      .map(r => r.getAs[String]("source") -> r.getAs[Double]("avg_nll_micronats"))
-      .toMap
-    assert(rows("srcB") > rows("srcA"),
-      s"unseen-bigram source must score higher: $rows")
-    assert(rows("srcA") >= 0.0)
+    withDocs(common ++ rare) { dir =>
+      val rows = SparkEntry.queries("t_lm2_score")(spark, dir).collect()
+        .map(r => r.getAs[String]("source") -> r.getAs[Double]("avg_nll_micronats"))
+        .toMap
+      assert(rows("srcB") > rows("srcA"),
+        s"unseen-bigram source must score higher: $rows")
+      assert(rows("srcA") >= 0.0)
+    }
   }
 
   test("d_source_mix: temperature mixing upweights the tail source " +
       "relative to its token share, weights sum to ~1") {
     val big = (1L to 50L).map(i => (i, "big", "a b c d e f g h"))
     val small = Seq((900L, "small", "a b c d e f g h"))
-    val dir = plantDocs(big ++ small)
-    val rows = SparkEntry.queries("d_source_mix")(spark, dir).collect()
-    val bySrc = rows.map(r => r.getAs[String]("source") -> r).toMap
-    val wSum = rows.map(_.getAs[Double]("weight")).sum
-    assert(math.abs(wSum - 1.0) < 1e-3, s"weights should sum to ~1: $wSum")
-    val tokTotal = rows.map(_.getAs[Long]("n_tokens")).sum.toDouble
-    def share(s: String) =
-      bySrc(s).getAs[Long]("n_tokens").toDouble / tokTotal
-    def w(s: String) = bySrc(s).getAs[Double]("weight")
-    // sqrt temperature: tail weight exceeds proportional share, head's
-    // falls below it
-    assert(w("small") > share("small"), "tail source must be upweighted")
-    assert(w("big") < share("big"), "head source must be downweighted")
-    rows.foreach { r =>
-      val rate = r.getAs[Long]("rate_micro")
-      assert(rate >= 0L && rate <= 1000000L, s"rate out of range: $rate")
+    withDocs(big ++ small) { dir =>
+      val rows = SparkEntry.queries("d_source_mix")(spark, dir).collect()
+      val bySrc = rows.map(r => r.getAs[String]("source") -> r).toMap
+      val wSum = rows.map(_.getAs[Double]("weight")).sum
+      assert(math.abs(wSum - 1.0) < 1e-3, s"weights should sum to ~1: $wSum")
+      val tokTotal = rows.map(_.getAs[Long]("n_tokens")).sum.toDouble
+      def share(s: String) =
+        bySrc(s).getAs[Long]("n_tokens").toDouble / tokTotal
+      def w(s: String) = bySrc(s).getAs[Double]("weight")
+      // sqrt temperature: tail weight exceeds proportional share, head's
+      // falls below it
+      assert(w("small") > share("small"), "tail source must be upweighted")
+      assert(w("big") < share("big"), "head source must be downweighted")
+      rows.foreach { r =>
+        val rate = r.getAs[Long]("rate_micro")
+        assert(rate >= 0L && rate <= 1000000L, s"rate out of range: $rate")
+      }
     }
   }
 
@@ -87,32 +99,34 @@ class CurationSpec extends AnyFunSuite {
     // (B * w_s / tot_w ~= 17) exceeds its own 10 tokens -> rate clamps
     val big = (1L to 60L).map(i => (i, "big", "a b c d e f g h i j"))
     val small = Seq((900L, "small", "a b c d e f g h i j"))
-    val dir = plantDocs(big ++ small)
-    val first = SparkEntry.queries("d_mix_sample")(spark, dir).collect()
-    val bySrc = first.map(r => r.getAs[String]("source") -> r).toMap
-    first.foreach { r =>
-      assert(r.getAs[Long]("n_kept_docs") <= r.getAs[Long]("n_docs"))
-      assert(r.getAs[Long]("n_kept_tokens") >= 0L)
+    withDocs(big ++ small) { dir =>
+      val first = SparkEntry.queries("d_mix_sample")(spark, dir).collect()
+      val bySrc = first.map(r => r.getAs[String]("source") -> r).toMap
+      first.foreach { r =>
+        assert(r.getAs[Long]("n_kept_docs") <= r.getAs[Long]("n_docs"))
+        assert(r.getAs[Long]("n_kept_tokens") >= 0L)
+      }
+      // the tail source's sqrt-upweighted target exceeds its own token
+      // count -> rate clamps to 1e6 and every doc is kept
+      assert(bySrc("small").getAs[Long]("rate_micro") == 1000000L)
+      assert(bySrc("small").getAs[Long]("n_kept_docs") == 1L)
+      // md5-gated sampling: bit-identical across runs
+      val second = SparkEntry.queries("d_mix_sample")(spark, dir).collect()
+      assert(first.map(_.toString).sorted.sameElements(
+        second.map(_.toString).sorted), "sample must be reproducible")
     }
-    // the tail source's sqrt-upweighted target exceeds its own token
-    // count -> rate clamps to 1e6 and every doc is kept
-    assert(bySrc("small").getAs[Long]("rate_micro") == 1000000L)
-    assert(bySrc("small").getAs[Long]("n_kept_docs") == 1L)
-    // md5-gated sampling: bit-identical across runs
-    val second = SparkEntry.queries("d_mix_sample")(spark, dir).collect()
-    assert(first.map(_.toString).sorted.sameElements(
-      second.map(_.toString).sorted), "sample must be reproducible")
   }
 
   test("t_bpe_train learns chained merges and stops when pairs run dry") {
     // every word is 'abc': round 1 ties <a><b> vs <b><c> at equal
     // count -> lexicographic tiebreak picks <a> <b>; round 2 merges
     // the chained <ab> <c>; round 3 has no pairs left -> dry stop
-    val dir = plantDocs((1L to 7L).map(i => (i, "s", "abc abc")))
-    val rows = SparkEntry.queries("t_bpe_train")(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    assert(rows.toSeq == Seq(
-      (1L, "<a> <b>", 14L), (2L, "<ab> <c>", 14L)), rows.mkString(";"))
+    withDocs((1L to 7L).map(i => (i, "s", "abc abc"))) { dir =>
+      val rows = SparkEntry.queries("t_bpe_train")(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+      assert(rows.toSeq == Seq(
+        (1L, "<a> <b>", 14L), (2L, "<ab> <c>", 14L)), rows.mkString(";"))
+    }
   }
 
   test("BPE driver and distributed merge branches are equivalent") {
@@ -123,22 +137,20 @@ class CurationSpec extends AnyFunSuite {
       "cat" -> 11, "cater" -> 5, "dog" -> 8, "dodge" -> 4,
       "a" -> 20, "ab" -> 6, "abc" -> 6, "banana" -> 3)
     val text = words.flatMap { case (w, n) => Seq.fill(n)(w) }.mkString(" ")
-    val dir = plantDocs(Seq((1L, "s", text)))
-    def train(): Seq[(Long, String, Long)] =
-      SparkEntry.queries("t_bpe_train")(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
-    val viaDriver = train() // vocab << gate: driver merge loop
-    graft.queries.ArtifactCache.release(spark, dir)
-    graft.queries.Curation.bpeDriverGate = 0L // force distributed rounds
-    try {
-      val viaCluster = train()
-      assert(viaCluster == viaDriver,
-        s"\ndistributed: $viaCluster\ndriver:      $viaDriver")
-      assert(viaDriver.nonEmpty && viaDriver.map(_._1) ==
-        (1L to viaDriver.length), viaDriver.toString)
-    } finally {
-      graft.queries.Curation.bpeDriverGate = 1000000L
+    withDocs(Seq((1L, "s", text))) { dir =>
+      def train(): Seq[(Long, String, Long)] =
+        SparkEntry.queries("t_bpe_train")(spark, dir).collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
+      val viaDriver = train() // vocab << gate: driver merge loop
       graft.queries.ArtifactCache.release(spark, dir)
+      graft.queries.Curation.bpeDriverGate = 0L // force distributed rounds
+      try {
+        val viaCluster = train()
+        assert(viaCluster == viaDriver,
+          s"\ndistributed: $viaCluster\ndriver:      $viaDriver")
+        assert(viaDriver.nonEmpty && viaDriver.map(_._1) ==
+          (1L to viaDriver.length), viaDriver.toString)
+      } finally graft.queries.Curation.bpeDriverGate = 1000000L
     }
   }
 

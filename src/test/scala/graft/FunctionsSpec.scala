@@ -396,6 +396,18 @@ class FunctionsSpec extends AnyFunSuite {
     }
   }
 
+  /** A temp corpus dir for planted data: its cached artifacts are
+    * released and the dir deleted however `body` ends.
+    */
+  private def withCorpus[T](prefix: String)(body: String => T): T = {
+    val tmp = java.nio.file.Files.createTempDirectory(prefix)
+    try body(tmp.toString)
+    finally {
+      graft.queries.ArtifactCache.release(spark, tmp.toString)
+      graft.util.Fs.deleteRecursively(tmp)
+    }
+  }
+
   test("minhash LSH finds planted near-duplicates in documents") {
     import spark.implicits._
     val sf = "/root/testdata/sf0.01"
@@ -404,11 +416,12 @@ class FunctionsSpec extends AnyFunSuite {
     val dups = docs.limit(3)
       .withColumn("doc_id", col("doc_id") + 1000000L)
     val planted = docs.unionByName(dups)
-    val tmp = java.nio.file.Files.createTempDirectory("mh").toString
-    planted.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val n = SparkEntry.queries("d_minhash_lsh")(spark, tmp)
-      .collect()(0).getLong(0)
-    assert(n >= 3, s"expected >=3 planted near-dup pairs, got $n")
+    withCorpus("mh") { tmp =>
+      planted.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val n = SparkEntry.queries("d_minhash_lsh")(spark, tmp)
+        .collect()(0).getLong(0)
+      assert(n >= 3, s"expected >=3 planted near-dup pairs, got $n")
+    }
   }
 
   test("LSH near-dup pairs are strictly ordered a < b, even for a repeated doc_id") {
@@ -418,15 +431,14 @@ class FunctionsSpec extends AnyFunSuite {
     val sf = "/root/testdata/sf0.001"
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val repeated = docs.filter(length(col("text")) > 200).limit(1)
-    val tmp = java.nio.file.Files.createTempDirectory("lshk").toString
-    docs.unionByName(repeated).write.mode("overwrite")
-      .parquet(s"$tmp/documents.parquet")
-    try {
+    withCorpus("lshk") { tmp =>
+      docs.unionByName(repeated).write.mode("overwrite")
+        .parquet(s"$tmp/documents.parquet")
       val pairs = graft.queries.Dedup.nearDupPairs(spark, tmp).collect()
         .map(r => (r.getLong(0), r.getLong(1)))
       val bad = pairs.filterNot { case (a, b) => a < b }
       assert(bad.isEmpty, s"pairs violating a < b: ${bad.mkString(", ")}")
-    } finally graft.queries.ArtifactCache.release(spark, tmp)
+    }
   }
 
   test("d_dup_spans flags an exact copy with dup_ratio 1.0") {
@@ -436,27 +448,28 @@ class FunctionsSpec extends AnyFunSuite {
     // copy exists in the original, so both report dup_ratio 1.0
     val src = docs.filter(length(col("text")) > 300).limit(1)
     val copy = src.withColumn("doc_id", col("doc_id") + 2000000L)
-    val tmp = java.nio.file.Files.createTempDirectory("ds").toString
-    docs.unionByName(copy).write.mode("overwrite")
-      .parquet(s"$tmp/documents.parquet")
-    val out = SparkEntry.queries("d_dup_spans")(spark, tmp)
-      .filter(col("doc_id") >= 2000000L).collect()
-    assert(out.length == 1 && out(0).getAs[Double]("dup_ratio") == 1.0,
-      s"planted copy must have all spans duplicated: ${out.mkString(",")}")
-    // ...and the APPLY row trims every token of such a doc: its spans
-    // are all duplicated and contiguous, so the interval union covers
-    // the doc end-to-end — trimmed tokens can't be fewer than a full
-    // doc's worth in the copy's source rollup
-    val nToks = graft.functions.TextFunctions
-    val copyTokens = spark.read.parquet(s"$tmp/documents.parquet")
-      .filter(col("doc_id") >= 2000000L)
-      .select(size(nToks.ascii_words(col("text"))).cast("long"))
-      .collect()(0).getLong(0)
-    val trim = SparkEntry.queries("d_dup_span_trim")(spark, tmp).collect()
-      .map(r => r.getAs[Long]("n_trimmed_tokens")).sum
-    assert(trim >= copyTokens,
-      s"the planted copy's $copyTokens tokens must all be trimmed " +
-        s"(got $trim total trimmed)")
+    withCorpus("ds") { tmp =>
+      docs.unionByName(copy).write.mode("overwrite")
+        .parquet(s"$tmp/documents.parquet")
+      val out = SparkEntry.queries("d_dup_spans")(spark, tmp)
+        .filter(col("doc_id") >= 2000000L).collect()
+      assert(out.length == 1 && out(0).getAs[Double]("dup_ratio") == 1.0,
+        s"planted copy must have all spans duplicated: ${out.mkString(",")}")
+      // ...and the APPLY row trims every token of such a doc: its spans
+      // are all duplicated and contiguous, so the interval union covers
+      // the doc end-to-end — trimmed tokens can't be fewer than a full
+      // doc's worth in the copy's source rollup
+      val nToks = graft.functions.TextFunctions
+      val copyTokens = spark.read.parquet(s"$tmp/documents.parquet")
+        .filter(col("doc_id") >= 2000000L)
+        .select(size(nToks.ascii_words(col("text"))).cast("long"))
+        .collect()(0).getLong(0)
+      val trim = SparkEntry.queries("d_dup_span_trim")(spark, tmp).collect()
+        .map(r => r.getAs[Long]("n_trimmed_tokens")).sum
+      assert(trim >= copyTokens,
+        s"the planted copy's $copyTokens tokens must all be trimmed " +
+          s"(got $trim total trimmed)")
+    }
   }
 
   test("simhash collides exact duplicates into the same band") {
@@ -472,12 +485,13 @@ class FunctionsSpec extends AnyFunSuite {
     // plant an exact copy of vec 0 with id 999999 in the corpus
     val copy = emb.filter(col("vec_id") === 0)
       .withColumn("vec_id", lit(999999L))
-    val tmp = java.nio.file.Files.createTempDirectory("ann").toString
-    emb.unionByName(copy).write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
-    val top = SparkEntry.queries("s_cosine_topk")(spark, tmp)
-      .filter(col("query_id") === 0 && col("rank") === 1)
-      .collect()(0).getLong(2)
-    assert(top == 999999L, s"exact copy should rank 1, got $top")
+    withCorpus("ann") { tmp =>
+      emb.unionByName(copy).write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
+      val top = SparkEntry.queries("s_cosine_topk")(spark, tmp)
+        .filter(col("query_id") === 0 && col("rank") === 1)
+        .collect()(0).getLong(2)
+      assert(top == 999999L, s"exact copy should rank 1, got $top")
+    }
   }
 
   test("PQ training partitions every vector in every subspace") {
