@@ -501,9 +501,17 @@ final class BatchTableWrite(table: GraftTableHandle, spark: SparkSession) {
     val collected: Array[Seq[DataFileMeta]] =
       aligned.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
         val writer = factory.taskWriter(pid, withRowKind = hasKind)
-        rows.foreach(writer.write)
-        Iterator.single(
-          writer.commit().asInstanceOf[GraftCommitMessage].files)
+        // a failing task deletes the sorted runs it already spilled,
+        // as Spark's DataWriter.abort does on the DSv2 write paths
+        val files =
+          try {
+            rows.foreach(writer.write)
+            writer.commit().asInstanceOf[GraftCommitMessage].files
+          } catch { case t: Throwable =>
+            try writer.abort() catch { case s: Throwable => t.addSuppressed(s) }
+            throw t
+          }
+        Iterator.single(files)
       }.collect()
     val written = collected.toSeq.flatten
     nextSeqBase = Some(

@@ -1,13 +1,14 @@
 package graft.connector
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow,
+  JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types._
 import graft.core.{RowKind, TableSchema}
-import graft.format.{DataFileWriter, FormatIO, SnapshotManager, SortMergeReader}
-import java.nio.file.{Path, Paths}
+import graft.format.{DataFileWriter, SnapshotManager, SortMergeReader}
+import java.nio.file.Path
 import scala.collection.mutable
 
 /** Retraction-mode changelog stream (`readStream.option("retractions",
@@ -144,8 +145,6 @@ final case class GraftChangelogReaderFactory(
     ioSpec: String = "local",
     sortEngine: String = "min-heap") extends PartitionReaderFactory {
 
-  @transient private lazy val fio = graft.format.FileIO.resolve(ioSpec)
-
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[GraftChangelogPartition]
     val fields = DataType.fromJson(fieldsJson).asInstanceOf[StructType]
@@ -157,20 +156,20 @@ final case class GraftChangelogReaderFactory(
     def keyOf(r: InternalRow): Seq[String] =
       keyIdx.zip(keyTypes).map { case (i, dt) => Values.encodeField(r, i, dt) }
 
-    // baseline: merged pre-commit state of the bucket (key -> value row)
+    def open(f: String) =
+      SortMergeReader.open(f, kvSchema, kvSchema, fieldIds, ioSpec)
+
+    // baseline: merged pre-commit state of the bucket (key -> value
+    // row); merged rows view their batches, so the map keeps copies
     val state = mutable.HashMap.empty[Seq[String], InternalRow]
-    if (part.baselineFiles.nonEmpty) {
-      val sources = part.baselineFiles.toSeq.map(f =>
-        FormatIO.reader(FormatIO.ofFile(f), Paths.get(f), kvSchema, kvSchema,
-          fieldIds, io = fio, ioSpec = ioSpec).map(r => (f, r)))
-      new SortMergeReader(sources, keyIdx, keyTypes, 0, 1, sortEngine)
-        .foreach { case (_, r) => state.update(keyOf(r), r) }
-    }
+    if (part.baselineFiles.nonEmpty)
+      new SortMergeReader(part.baselineFiles.map(open), keyIdx, keyTypes, 0, 1,
+        sortEngine, null)
+        .foreach { case (_, r) => state.update(keyOf(r), r.copy()) }
 
     // delta rows in sequence order
-    val delta = part.deltaFiles.toSeq.flatMap(f =>
-      FormatIO.reader(FormatIO.ofFile(f), Paths.get(f), kvSchema, kvSchema,
-        fieldIds, io = fio, ioSpec = ioSpec).toSeq).sortBy(_.getLong(0))
+    val delta = part.deltaFiles.toSeq
+      .flatMap(f => open(f).rows.map(_.copy())).sortBy(_.getLong(0))
 
     // synthesize the changelog
     val out = mutable.ArrayBuffer.empty[(Byte, Long, InternalRow)]
@@ -205,36 +204,32 @@ final case class GraftChangelogReaderFactory(
       }
     }
 
-    // assemble into the changelog view's schema
-    val pValues = partitionKeys.zipWithIndex.map { case (k, i) =>
-      k -> Values.parse(fields(fields.fieldIndex(k)).dataType,
-        part.partitionValues(i))
-    }.toMap
-    val assemblers: Array[((Byte, Long, InternalRow)) => Any] =
-      required.fields.map { f =>
-        f.name match {
-          case "_row_kind" => (e: (Byte, Long, InternalRow)) => e._1.toInt
-          case "_sequence_number" => (e: (Byte, Long, InternalRow)) => e._2
-          case n if pValues.contains(n) =>
-            (_: (Byte, Long, InternalRow)) => pValues(n)
-          case n =>
-            val i = kvSchema.fieldIndex(n)
-            val dt = f.dataType
-            (e: (Byte, Long, InternalRow)) =>
-              if (e._3.isNullAt(i)) null else e._3.get(i, dt)
-        }
+    // assemble into the changelog view's schema: one UnsafeProjection
+    // over ([kind, seq, partition values…], row)
+    val meta = new GenericInternalRow((Seq[Any](0, 0L) ++
+      partitionKeys.zipWithIndex.map { case (k, i) =>
+        Values.parse(fields(fields.fieldIndex(k)).dataType, part.partitionValues(i))
+      }).toArray)
+    val project = UnsafeProjection.create(required.fields.toSeq.map { f =>
+      val i = f.name match {
+        case "_row_kind" => 0
+        case "_sequence_number" => 1
+        case n if partitionKeys.contains(n) => 2 + partitionKeys.indexOf(n)
+        case n => meta.numFields + kvSchema.fieldIndex(n)
       }
+      BoundReference(i, f.dataType, nullable = true)
+    })
 
     val it = out.iterator
     new PartitionReader[InternalRow] {
+      private val joined = new JoinedRow
       private var current: InternalRow = _
       override def next(): Boolean =
         if (it.hasNext) {
-          val e = it.next()
-          val row = new GenericInternalRow(assemblers.length)
-          var i = 0
-          while (i < assemblers.length) { row.update(i, assemblers(i)(e)); i += 1 }
-          current = row
+          val (kind, seq, row) = it.next()
+          meta.setInt(0, kind.toInt)
+          meta.setLong(1, seq)
+          current = project(joined(meta, row))
           true
         } else false
       override def get(): InternalRow = current

@@ -7,8 +7,8 @@ import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import graft.core.{RowKind, TableSchema}
-import graft.format.{DataFileMeta, DataFileWriter, FormatIO, SnapshotManager}
-import java.nio.file.{Path, Paths}
+import graft.format.{DataFileMeta, DataFileWriter, SnapshotManager}
+import java.nio.file.Path
 import scala.collection.mutable
 
 /** Scan-side of the connector — ≙ `ReadBuilder → TableScan.plan() →
@@ -699,17 +699,12 @@ final case class GraftReaderFactory(
     dropNonAdd: Boolean = false)
   extends PartitionReaderFactory {
 
-  // resolved per task from the serialized spec (FileIO itself is not
-  // serializable — it may hold HTTP clients)
-  @transient private lazy val fio = graft.format.FileIO.resolve(ioSpec)
-
-  /** Append-table parquet partitions decode via Spark's vectorized
-    * reader into [[org.apache.spark.sql.vectorized.ColumnarBatch]]es —
-    * the reference is Arrow-columnar end-to-end (SURVEY §1.2,
-    * `pypaimon/pynative/reader/core/columnar_row_iterator.py:28-60`);
-    * this is the Spark-native equivalent. The PK merge path stays
-    * row-wise (the k-way merge is inherently row-at-a-time); KV
-    * metadata columns fall back to rows too.
+  /** Append-table parquet partitions hand Spark the batches of
+    * [[graft.format.ParquetBatchReader]] (the reference is
+    * Arrow-columnar end-to-end, SURVEY §1.2). Primary-key partitions
+    * decode through the same reader but leave as rows: the merge walks
+    * the batches of every file of the bucket at once ([[createReader]]).
+    * KV metadata columns leave as rows too.
     */
   override def supportColumnarReads(p: InputPartition): Boolean = {
     val required = DataType.fromJson(requiredJson).asInstanceOf[StructType]
@@ -723,95 +718,47 @@ final case class GraftReaderFactory(
 
   override def createColumnarReader(p: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+    import org.apache.spark.sql.vectorized.ColumnarBatch
     val part = p.asInstanceOf[GraftInputPartition]
     val fields = DataType.fromJson(fieldsJson).asInstanceOf[StructType]
     val required = DataType.fromJson(requiredJson).asInstanceOf[StructType]
-    val dataNames = fields.fields.map(_.name).filterNot(partitionKeys.contains)
     val pVals: Map[String, Any] = partitionKeys.zipWithIndex.map { case (k, i) =>
       k -> Values.parse(fields(fields.fieldIndex(k)).dataType, part.partitionValues(i))
     }.toMap
 
     new PartitionReader[ColumnarBatch] {
       private val files = part.filePaths.iterator
-      private var reader: org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader = _
-      private var inner: ColumnarBatch = _
-      private var out: ColumnarBatch = _
-
-      private def openNext(): Boolean =
-        if (!files.hasNext) false else {
-          val f = files.next()
-          // local io → plain file path; non-local → graftio:// URI
-          // resolving to the same FileIO with ranged reads, so the
-          // vectorized reader works unchanged on object stores
-          val hf = graft.format.GraftFileSystem.uriFor(ioSpec, f)
-          // footer-driven evolution: only columns this file has are
-          // requested (by field id when available — rename-safe); the
-          // rest ride as constant vectors (partition values, `_file`,
-          // null-fill for post-file ADD COLUMNs / dropped-era files)
-          val footer = graft.format.ParquetIO.footerFields(hf)
-          val physFor = graft.format.ParquetIO.resolvePhysical(footer,
-            dataNames.filter(required.fieldNames.contains).toSeq, fieldIds)
-          val logicalFor = physFor.map(_.swap)
-          val storedOf = footer.map(ff => ff.name -> ff.stored).toMap
-          // physical names in file order; Spark's reader materializes
-          // vectors in the requested-list order
-          val fileCols = footer.map(_.name).filter(logicalFor.contains).toArray
-          val consts = required.fields.filter(fd => !physFor.contains(fd.name))
-          val constRow = new GenericInternalRow(consts.map { fd =>
-            fd.name match {
-              case "_file" =>
-                org.apache.spark.unsafe.types.UTF8String.fromString(f)
-              case n if pVals.contains(n) => pVals(n)
-              case _ => null
-            }
-          }: Array[Any])
-          reader = new org.apache.spark.sql.execution.datasources.parquet
-            .VectorizedParquetRecordReader(false, 4096)
-          // row-group pruning: blocks whose stats contradict the pushed
-          // predicate are skipped before any page IO (sub-file analogue
-          // of manifest zone maps; Spark re-applies filters above)
-          val pruned = GraftReaderFactory.initPruned(
-            reader, hf, fileCols, dataFilters, physFor, storedOf)
-          if (!pruned) reader.initialize(hf, java.util.Arrays.asList(fileCols: _*))
-          reader.initBatch(StructType(consts), constRow)
-          inner = reader.resultBatch()
-          // inner layout = fileCols ++ consts; permute to required order
-          val pos = (fileCols.map(logicalFor).zipWithIndex ++
-            consts.map(_.name).zipWithIndex.map { case (n, i) =>
-              n -> (fileCols.length + i)
-            }).toMap
-          // files that predate an ALTER COLUMN TYPE widening surface
-          // their stored (narrower) vectors through an upcasting view
-          out = new ColumnarBatch(
-            required.fields.map { fd =>
-              val v: ColumnVector = inner.column(pos(fd.name))
-              physFor.get(fd.name) match {
-                case Some(pn) if storedOf(pn) != fd.dataType =>
-                  new WideningColumnVector(v, fd.dataType): ColumnVector
-                case _ => v
-              }
-            })
-          true
-        }
+      private var reader: graft.format.ParquetBatchReader = _
 
       override def next(): Boolean = {
         while (reader != null || files.hasNext) {
-          if (reader == null && !openNext()) return false
-          if (reader.nextBatch()) {
-            out.setNumRows(inner.numRows())
-            return true
+          if (reader == null) {
+            val f = files.next()
+            // partition values and `_file` ride as constant vectors
+            reader = new graft.format.ParquetBatchReader(
+              graft.format.GraftFileSystem.uriFor(ioSpec, f), required,
+              fieldIds, dataFilters, pVals +
+                ("_file" -> org.apache.spark.unsafe.types.UTF8String.fromString(f)))
           }
-          reader.close(); reader = null
+          if (reader.nextBatch()) return true
+          reader = null
         }
         false
       }
-      override def get(): ColumnarBatch = out
+      override def get(): ColumnarBatch = reader.batch
       override def close(): Unit = if (reader != null) { reader.close(); reader = null }
     }
   }
 
+  /** Row reader: primary-key partitions (merged unless `merge=false`)
+    * and every non-parquet or KV-metadata read. Each file is one
+    * [[graft.format.SortMergeReader.Run]] — Parquet decoded columnar —
+    * and every output row leaves through ONE `UnsafeProjection` over
+    * (row, [partition values…, `_file`]).
+    */
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference,
+      JoinedRow, Literal, UnsafeProjection}
     val part = p.asInstanceOf[GraftInputPartition]
     val fields = DataType.fromJson(fieldsJson).asInstanceOf[StructType]
     val required = DataType.fromJson(requiredJson).asInstanceOf[StructType]
@@ -820,7 +767,6 @@ final case class GraftReaderFactory(
     val kvFileSchema = DataFileWriter.fileSchema(fields, partitionKeys, isPk)
 
     // columns we must read: required ∩ dataFields, plus key/seq/kind for merge
-    val metaNames = Set("_file", "_sequence_number", "_row_kind")
     val needMerge = isPk && merge
     val requiredData = dataFields.fields.map(_.name)
       .filter(n => required.fieldNames.contains(n) ||
@@ -842,70 +788,70 @@ final case class GraftReaderFactory(
     // newer overwrite doesn't would resurrect the old row through the
     // merge (the scan keeps such conjuncts in `filters` for zone-map
     // stats, they are NOT safe below the merge). Key/partition
-    // conjuncts keep every version of a surviving key — safe.
+    // conjuncts keep every version of a surviving key — safe. Rows of
+    // surviving pages are not filtered here; Spark re-applies every
+    // conjunct above the scan.
     val safeFilters =
       if (isPk) dataFilters.filter(_.references.forall(r =>
         trimmedPk.contains(r) || partitionKeys.contains(r)))
       else dataFilters
 
-    // rows tagged with their source file ((file, row) — `_file`
-    // metadata). Every created file reader registers in `opened` so
-    // PartitionReader.close() can release it on EARLY termination
-    // (limit/take, join short-circuit, task kill) — readers otherwise
-    // only self-release on exhaustion, leaking descriptors + staged
-    // remote temps until GC.
-    val opened = scala.collection.mutable.ArrayBuffer.empty[AutoCloseable]
+    // one run per file, tagged with its path (`_file`). Every opened
+    // run is kept so PartitionReader.close() can release it on EARLY
+    // termination (limit/take, join short-circuit, task kill) — runs
+    // otherwise only self-release when drained.
+    val opened = mutable.ArrayBuffer.empty[graft.format.SortMergeReader.Run]
+    def open(f: String) = opened.addOne(graft.format.SortMergeReader.open(f,
+      if (isPk) kvFileSchema else dataFields, readSchema, fieldIds, ioSpec,
+      safeFilters)).last
+    val seqIdx = readSchema.fieldNames.indexOf("_SEQUENCE_NUMBER")
+    val kindIdx = readSchema.fieldNames.indexOf("_VALUE_KIND")
     val rows: Iterator[(String, InternalRow)] =
-      if (needMerge)
-        mergeOnRead(part, kvFileSchema, readSchema, safeFilters, opened)
-      else {
-        val rawKindIdx =
-          if (isPk && dropNonAdd) readSchema.fieldIndex("_VALUE_KIND") else -1
-        part.filePaths.iterator.flatMap { f =>
-          val r = FormatIO.reader(FormatIO.ofFile(f), Paths.get(f),
-            if (isPk) kvFileSchema else dataFields, readSchema, fieldIds,
-            safeFilters, io = fio, ioSpec = ioSpec)
-          opened += r
-          val tagged = r.map(rr => (f, rr))
-          if (rawKindIdx < 0) tagged
-          else tagged.filter { case (_, rr) =>
-            graft.core.RowKind.isAdd(rr.getInt(rawKindIdx).toByte)
-          }
+      if (needMerge) {
+        val keyIdx = trimmedPk.map(readSchema.fieldIndex)
+        // bucket-local k-way sort-merge (files are written sorted by
+        // key, seq): max-sequence wins per trimmed-pk tuple, then
+        // non-add kinds dropped. No shuffle — the bucket IS the merge
+        // unit — and memory is O(open files)
+        new graft.format.SortMergeReader(part.filePaths.map(open), keyIdx,
+          keyIdx.map(readSchema(_).dataType), seqIdx, kindIdx, sortEngine,
+          graft.format.MergeFunction.create(mergeSpec, readSchema, keyIdx,
+            seqIdx, kindIdx))
+      } else part.filePaths.iterator.flatMap { f =>
+        val all = open(f).rows.map(r => (f, r))
+        if (!(isPk && dropNonAdd)) all
+        else all.filter { case (_, r) =>
+          graft.core.RowKind.isAdd(r.getInt(kindIdx).toByte)
         }
       }
 
-    // output assembly: required order; partition constants spliced in
-    val pTypes = partitionKeys.zipWithIndex.map { case (k, i) =>
-      k -> Values.parse(fields(fields.fieldIndex(k)).dataType, part.partitionValues(i))
-    }.toMap
-    val seqIdx = readSchema.fieldNames.indexOf("_SEQUENCE_NUMBER")
-    val kindIdx = readSchema.fieldNames.indexOf("_VALUE_KIND")
-    val assemblers: Array[(String, InternalRow) => Any] = required.fields.map { f =>
-      f.name match {
-        case "_file" => (file: String, _: InternalRow) =>
-          org.apache.spark.unsafe.types.UTF8String.fromString(file)
-        case "_sequence_number" => (_: String, r: InternalRow) =>
-          if (seqIdx >= 0) r.getLong(seqIdx) else null
-        case "_row_kind" => (_: String, r: InternalRow) =>
-          if (kindIdx >= 0) r.getInt(kindIdx) else null
-        case n if pTypes.contains(n) =>
-          (_: String, _: InternalRow) => pTypes(n)
-        case n =>
-          val i = readSchema.fieldIndex(n)
-          val dt = f.dataType
-          (_: String, r: InternalRow) => if (r.isNullAt(i)) null else r.get(i, dt)
+    // output: required order over (row, [partition values…, _file])
+    val consts = new GenericInternalRow((partitionKeys.zipWithIndex.map {
+      case (k, i) =>
+        Values.parse(fields(fields.fieldIndex(k)).dataType, part.partitionValues(i))
+    } :+ null).toArray[Any])
+    val inputNames = readSchema.fieldNames ++ partitionKeys :+ "_file"
+    val project = UnsafeProjection.create(required.fields.toSeq.map { f =>
+      inputNames.indexOf(f.name match {
+        case "_sequence_number" => "_SEQUENCE_NUMBER"
+        case "_row_kind" => "_VALUE_KIND"
+        case n => n
+      }) match {
+        case -1 => Literal(null, f.dataType)
+        case i => BoundReference(i, f.dataType, nullable = true)
       }
-    }
+    })
+    val tagFile = required.fieldNames.contains("_file")
 
     new PartitionReader[InternalRow] {
+      private val joined = new JoinedRow
       private var current: InternalRow = _
       override def next(): Boolean =
         if (rows.hasNext) {
-          val (file, r) = rows.next()
-          val out = new GenericInternalRow(assemblers.length)
-          var i = 0
-          while (i < assemblers.length) { out.update(i, assemblers(i)(file, r)); i += 1 }
-          current = out
+          val (f, r) = rows.next()
+          if (tagFile) consts.update(partitionKeys.length,
+            org.apache.spark.unsafe.types.UTF8String.fromString(f))
+          current = project(joined(r, consts))
           true
         } else false
       override def get(): InternalRow = current
@@ -913,79 +859,29 @@ final case class GraftReaderFactory(
         opened.foreach(r => try r.close() catch { case _: Throwable => () })
     }
   }
-
-  /** Bucket-local k-way sort-merge (files are written sorted by key,
-    * seq): max-sequence wins per trimmed-pk tuple, then non-add kinds
-    * dropped. No shuffle — the bucket IS the merge unit — and memory is
-    * O(open files), so bucket size is bounded by disk, not heap.
-    */
-  private def mergeOnRead(part: GraftInputPartition, kvFileSchema: StructType,
-      readSchema: StructType,
-      keyFilters: Seq[org.apache.spark.sql.sources.Filter],
-      opened: scala.collection.mutable.ArrayBuffer[AutoCloseable])
-      : Iterator[(String, InternalRow)] = {
-    val seqIdx = readSchema.fieldIndex("_SEQUENCE_NUMBER")
-    val kindIdx = readSchema.fieldIndex("_VALUE_KIND")
-    val keyIdx = trimmedPk.map(readSchema.fieldIndex)
-    val keyTypes = trimmedPk.map(k => readSchema(readSchema.fieldIndex(k)).dataType)
-
-    // pushed conjuncts are partition/key-only for PK tables, so
-    // row-group + record skipping below the merge preserves every
-    // version of a surviving key (see RowReader)
-    val sources = part.filePaths.toSeq.map { f =>
-      val r = FormatIO.reader(FormatIO.ofFile(f), Paths.get(f), kvFileSchema,
-        readSchema, fieldIds, keyFilters, io = fio, ioSpec = ioSpec)
-      opened += r
-      r.map(rr => (f, rr))
-    }
-    new graft.format.SortMergeReader(sources, keyIdx, keyTypes, seqIdx,
-      kindIdx, sortEngine,
-      graft.format.MergeFunction.create(mergeSpec, readSchema, keyIdx,
-        seqIdx, kindIdx))
-  }
 }
 
 object GraftReaderFactory {
-  import org.apache.parquet.HadoopReadOptions
-  import org.apache.parquet.filter2.compat.FilterCompat
-  import org.apache.parquet.hadoop.ParquetFileReader
-  import org.apache.parquet.hadoop.util.HadoopInputFile
-  import scala.jdk.CollectionConverters._
-
-  /** Initialize `reader` over only the row groups whose statistics can
-    * satisfy `filters` (translated per-file to the stored column names
-    * and types). Returns false when no conjunct is expressible — the
-    * caller then falls back to the plain whole-file initialize. Errors
-    * also fall back: block pruning is strictly an optimization, Spark
-    * re-evaluates every filter above the scan.
+  /** Initialize `reader` over `fileCols` of `file`, skipping the row
+    * groups — and, inside them, the pages (column and offset indexes) —
+    * whose statistics contradict `filters` (translated per-file to the
+    * stored column names and types). Returns false, leaving `reader`
+    * untouched, when no conjunct is expressible; errors also return
+    * false: skipping is strictly an optimization, Spark re-evaluates
+    * every filter above the scan.
     */
   def initPruned(
       reader: org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader,
       file: String, fileCols: Array[String],
       filters: Seq[org.apache.spark.sql.sources.Filter],
-      physFor: Map[String, String], storedOf: Map[String, DataType]): Boolean = {
-    val pred = graft.format.ParquetRowGroupFilter.build(filters, physFor, storedOf)
-    if (pred.isEmpty) return false
-    try {
-      val conf = new org.apache.hadoop.conf.Configuration()
-      val hpath = new org.apache.hadoop.fs.Path(file)
-      val opts = HadoopReadOptions.builder(conf, hpath)
-        .withRecordFilter(FilterCompat.get(pred.get))
-        .build()
-      val pf = ParquetFileReader.open(HadoopInputFile.fromPath(hpath, conf), opts)
+      physFor: Map[String, String], storedOf: Map[String, DataType]): Boolean =
+    graft.format.ParquetRowGroupFilter.build(filters, physFor, storedOf).exists { pred =>
       try {
-        val fileSchema = pf.getFileMetaData.getSchema
-        val total = pf.getRowGroups.asScala.map(_.getRowCount.toLong).sum
-        if (total > Int.MaxValue) { pf.close(); return false }
-        val b = org.apache.parquet.schema.Types.buildMessage()
-        fileCols.foreach(c =>
-          b.addField(fileSchema.getType(fileSchema.getFieldIndex(c))))
-        org.apache.spark.sql.execution.datasources.parquet.GraftRowGroups
-          .init(reader, fileSchema, b.named(fileSchema.getName), pf, total.toInt)
+        graft.format.ParquetBatchReader.initialize(reader, file, fileCols.toSeq,
+          storedOf, Some(pred))
         true
-      } catch { case t: Throwable => pf.close(); throw t }
-    } catch { case _: Throwable => false }
-  }
+      } catch { case scala.util.control.NonFatal(_) => false }
+    }
 }
 
 /** Metadata-only aggregate scan: the pushed COUNT(*)/MIN/MAX values are

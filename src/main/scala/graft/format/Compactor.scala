@@ -27,18 +27,18 @@ object Compactor extends Serializable {
       partition: Seq[String],
       bucket: Int,
       fileNames: Seq[String]): DataFileMeta = {
-    val io = FileIO.resolve(writer.ioSpec)
     val fileSchema = writer.fileSchema
-    def open(fn: String) =
-      FormatIO.reader(FormatIO.ofFile(fn), Path.of(writer.tableDir).resolve(fn),
-        fileSchema, fileSchema, writer.fieldIds, io = io)
+    val opened = scala.collection.mutable.ArrayBuffer.empty[SortMergeReader.Run]
+    def open(fn: String) = opened.addOne(SortMergeReader.open(
+      Path.of(writer.tableDir).resolve(fn).toString, fileSchema, fileSchema,
+      writer.fieldIds, writer.ioSpec)).last
 
     // STREAMING rewrite: input files are already sorted by (key, seq),
     // so the PK path is the same O(open files)-memory k-way
-    // SortMergeReader the read path uses (winners in key order,
-    // deletes dropped — safe because the WHOLE bucket is rewritten);
-    // the append path concatenates. Stats, null counts and sequence
-    // bounds accumulate in the writer's single pass.
+    // SortMergeReader over the same columnar runs the read path uses
+    // (winners in key order, deletes dropped — safe because the WHOLE
+    // bucket is rewritten); the append path concatenates. Stats, null
+    // counts and sequence bounds accumulate in the writer's single pass.
     val rows: Iterator[org.apache.spark.sql.catalyst.InternalRow] =
       if (writer.isPk) {
         val keyIdx = writer.trimmedPk.map(k => fileSchema.fieldIndex(k))
@@ -47,13 +47,14 @@ object Compactor extends Serializable {
         // field value must survive the rewrite, or a later out-of-order
         // stale insert would resurrect the deleted key (commit-order
         // engines can drop deletes — later commits always outrank)
-        new SortMergeReader(fileNames.map(fn => open(fn).map(r => (fn, r))),
-          keyIdx, keyTypes, 0, 1,
-          mergeFn = MergeFunction.create(mergeSpec, fileSchema, keyIdx, 0, 1,
+        new SortMergeReader(fileNames.map(open).toArray, keyIdx, keyTypes, 0, 1, "min-heap",
+          MergeFunction.create(mergeSpec, fileSchema, keyIdx, 0, 1,
             keepDeletes = mergeSpec.seqField.isDefined))
           .map(_._2)
-      } else fileNames.iterator.flatMap(open)
-    writer.write(partition, bucket, "compact", rows)
+      } else fileNames.iterator.flatMap(open(_).rows)
+    // runs close themselves when drained; a failed rewrite closes the rest
+    try writer.write(partition, bucket, "compact", rows)
+    finally opened.foreach(_.close())
   }
 
   /** Rewrite + publish the given (partition, bucket) groups as one

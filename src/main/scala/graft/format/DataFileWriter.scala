@@ -84,8 +84,11 @@ final case class DataFileWriter(
           val (_, idx, dt) = statCols(i)
           if (!r.isNullAt(idx)) {
             val v = r.get(idx, dt)
-            if (lo(i) == null || Values.compare(dt, v, lo(i)) < 0) lo(i) = v
-            if (hi(i) == null || Values.compare(dt, v, hi(i)) > 0) hi(i) = v
+            // a bound outlives its row (copyValue: strings may view a batch)
+            if (lo(i) == null || Values.compare(dt, v, lo(i)) < 0)
+              lo(i) = InternalRow.copyValue(v)
+            if (hi(i) == null || Values.compare(dt, v, hi(i)) > 0)
+              hi(i) = InternalRow.copyValue(v)
           }
           i += 1
         }

@@ -276,23 +276,18 @@ object Resequencer {
     * (old file deleted).
     */
   def shift(writer: DataFileWriter, meta: DataFileMeta, delta: Long): DataFileMeta = {
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-    val io = FileIO.resolve(writer.ioSpec)
     val src = java.nio.file.Path.of(writer.tableDir).resolve(meta.fileName)
     val schema = writer.fileSchema
-    val shifted = FormatIO.reader(FormatIO.ofFile(meta.fileName), src,
-      schema, schema, writer.fieldIds, io = io).map { r =>
-      val out = new GenericInternalRow(schema.length)
-      out.update(0, r.getLong(0) + delta)
-      var i = 1
-      while (i < schema.length) {
-        out.update(i, if (r.isNullAt(i)) null else r.get(i, schema(i).dataType))
-        i += 1
-      }
-      out: org.apache.spark.sql.catalyst.InternalRow
+    val run = SortMergeReader.open(src.toString, schema, schema,
+      writer.fieldIds, writer.ioSpec)
+    val shifted = run.rows.map { r =>
+      val out = r.copy()
+      out.setLong(0, r.getLong(0) + delta)
+      out
     }
-    val out = writer.write(meta.partition, meta.bucket, "data", shifted)
-    io.delete(src)
+    val out = try writer.write(meta.partition, meta.bucket, "data", shifted)
+      finally run.close()
+    FileIO.resolve(writer.ioSpec).delete(src)
     out
   }
 }

@@ -5,8 +5,10 @@ import org.apache.spark.sql.types.StructType
 
 /** Row-granular data-file IO behind the reference's `file.format` table
   * option (`parquet` default, `orc`, `avro` —
-  * `pypaimon/py4j/tests/test_preicates.py:36-37,50-55`). One writer /
-  * reader contract, three codecs: [[ParquetIO]], [[OrcIO]], [[AvroIO]].
+  * `pypaimon/py4j/tests/test_preicates.py:36-37,50-55`). One writer
+  * contract over three codecs ([[ParquetIO]], [[OrcIO]], [[AvroIO]]);
+  * the row reader decodes ORC and Avro, Parquet decodes columnar
+  * ([[ParquetBatchReader]]).
   */
 object FormatIO {
 
@@ -30,7 +32,7 @@ object FormatIO {
       io: FileIO = FileIO.local)
       : RowFileWriter = {
     def direct(p: java.nio.file.Path): RowFileWriter = format match {
-      case "parquet" => new ParquetWriterAdapter(p, schema, ids, blockSize)
+      case "parquet" => new ParquetIO.RowWriter(p, schema, ids, blockSize)
       case "orc" => new OrcIO.Writer(p, schema, ids)
       case "avro" => new AvroIO.Writer(p, schema, ids)
       case other =>
@@ -65,51 +67,48 @@ object FormatIO {
     }
   }
 
-  /** `ids`: logical column name -> stable field id; all three formats
+  /** Row reader of one data file, projected to `projection` by name.
+    * `ids`: logical column name -> stable field id; all three formats
     * persist it (parquet field ids, ORC column attributes, Avro field
     * props) and resolve reads by id first, name fallback for legacy
     * id-less files and KV meta columns.
-    */
-  /** `filters`: pushed conjuncts for row-group + record skipping —
-    * parquet only, and only conjuncts over projected columns are used
-    * (predicates on unrequested columns would see nulls and could drop
-    * matching records). Maintenance rewrites pass none.
+    *
+    * ORC and Avro decode here, row by row, from a staged copy on
+    * non-local stores (they scan files fully and sequentially, where
+    * one whole-object GET is the right access pattern). Table reads,
+    * compaction and re-sequencing open Parquet as columnar runs
+    * ([[SortMergeReader.open]]); the parquet case here is a row view
+    * over that same [[ParquetBatchReader]], one copied row per record.
     */
   def reader(format: String, path: java.nio.file.Path, fileSchema: StructType,
       projection: StructType,
       ids: Map[String, Int] = Map.empty,
-      filters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty,
-      io: FileIO = FileIO.local,
-      ioSpec: String = "local")
-      : RowFileReader = {
-    // parquet on a non-local store reads through graftio:// with ranged
-    // FileIO reads — footer + only the needed row groups/columns, so a
-    // point lookup costs O(one row group) of bytes instead of a
-    // whole-file download. ORC/Avro merge reads stay staged: they scan
-    // files fully and sequentially, where one whole-object GET is the
-    // right store access pattern.
-    if (format == "parquet" && ioSpec != "local" && !(io eq FileIO.local))
-      return new ParquetReaderAdapter(path, fileSchema, projection, ids,
-        filters, Some(GraftFileSystem.uriFor(ioSpec, path.toString)))
+      io: FileIO = FileIO.local): RowFileReader = {
     val staged = io.stageForRead(path) // zero-copy for FileIO.local
     def direct: RowFileReader = format match {
-      case "parquet" =>
-        new ParquetReaderAdapter(staged, fileSchema, projection, ids, filters)
+      case "parquet" => parquetRows(staged, projection, ids)
       case "orc" => new OrcIO.Reader(staged, fileSchema, projection, ids)
       case "avro" => new AvroIO.Reader(staged, fileSchema, projection, ids)
       case other =>
         throw new IllegalArgumentException(s"Unsupported file.format: $other")
     }
-    if (staged eq path) format match {
-      // ParquetIO.RowReader self-closes at EOF; ORC/Avro readers hold
-      // an open RecordReader/DataFileReader until close() — and the
-      // drain-style callers (Compactor, Resequencer, merge reads) drop
-      // the iterator without calling it, which leaked one descriptor
-      // per compacted orc/avro file until GC finalization
-      case "parquet" => direct
-      case _ => releaseOnExhaustion(direct)(() => ())
+    // ORC/Avro readers hold an open RecordReader/DataFileReader until
+    // close() — and drain-style callers drop the iterator without
+    // calling it — so release at exhaustion
+    releaseOnExhaustion(direct)(() => if (!(staged eq path)) io.unstage(path, staged))
+  }
+
+  private def parquetRows(path: java.nio.file.Path, projection: StructType,
+      ids: Map[String, Int]): RowFileReader = {
+    val hadoopPath = GraftFileSystem.uriFor("local", path.toString)
+    val run = new SortMergeReader.BatchRun(hadoopPath,
+      new ParquetBatchReader(hadoopPath, projection, ids))
+    val rows = run.rows
+    new RowFileReader {
+      override def hasNext: Boolean = rows.hasNext
+      override def next(): InternalRow = rows.next().copy()
+      override def close(): Unit = run.close()
     }
-    else releaseOnExhaustion(direct)(() => io.unstage(path, staged))
   }
 
   /** Wrap a reader so its resources release the moment the iterator is
@@ -137,27 +136,4 @@ object FormatIO {
   /** Infer format from a data file name. */
   def ofFile(fileName: String): String =
     fileName.substring(fileName.lastIndexOf('.') + 1)
-
-  private final class ParquetWriterAdapter(path: java.nio.file.Path,
-      schema: StructType, ids: Map[String, Int],
-      blockSize: Int = org.apache.parquet.hadoop.ParquetWriter.DEFAULT_BLOCK_SIZE)
-    extends RowFileWriter {
-    private val w = new ParquetIO.RowWriter(path, schema, ids, blockSize)
-    override def write(row: InternalRow): Unit = w.write(row)
-    override def close(): Long = w.close()
-  }
-
-  private final class ParquetReaderAdapter(path: java.nio.file.Path,
-      fileSchema: StructType, projection: StructType,
-      ids: Map[String, Int],
-      filters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty,
-      hadoopPath: Option[String] = None)
-    extends RowFileReader {
-    private val r =
-      new ParquetIO.RowReader(path, fileSchema, projection, ids, filters,
-        hadoopPath)
-    override def hasNext: Boolean = r.hasNext
-    override def next(): InternalRow = r.next()
-    override def close(): Unit = r.close()
-  }
 }

@@ -25,12 +25,18 @@ import graft.core.RowKind
   * partial-aggregate property that makes pre-aggregated storage work
   * at 100 TB: a sum-engine table absorbs upserts map-side at ingest
   * instead of re-scanning the corpus).
+  *
+  * Row lifetime: a row passed to `add` may view a columnar batch. The
+  * reader calls `retain()` just before such a batch is replaced; the
+  * function then copies whatever it still holds (rows, strings).
   */
 trait MergeFunction {
   def reset(): Unit
   def add(file: String, row: InternalRow, seq: Long, kind: Byte): Unit
   /** Surviving (file, row) of the run, or null when the key drops. */
   def result(): (String, InternalRow)
+  /** Copy every row and value held so far out of the batches they view. */
+  def retain(): Unit
 }
 
 object MergeFunction {
@@ -280,6 +286,7 @@ object MergeFunction {
     }
     def result(): (String, InternalRow) =
       if (any && RowKind.isAdd(kind)) (file, row) else null
+    def retain(): Unit = if (row != null) row = row.copy()
   }
 
   /** `sequence.field` deduplicate: the entry with the LARGEST field
@@ -308,6 +315,8 @@ object MergeFunction {
     }
     def result(): (String, InternalRow) =
       if (any && (keepDeletes || RowKind.isAdd(kind))) (file, row) else null
+    def retain(): Unit =
+      if (row != null) { row = row.copy(); best = InternalRow.copyValue(best) }
   }
 
   /** First add wins; retractions are ignored (a first-row table's
@@ -321,6 +330,7 @@ object MergeFunction {
     def add(f: String, r: InternalRow, seq: Long, k: Byte): Unit =
       if (row == null && RowKind.isAdd(k)) { file = f; row = r }
     def result(): (String, InternalRow) = if (row == null) null else (file, row)
+    def retain(): Unit = if (row != null) row = row.copy()
   }
 
   /** Shared accumulator of `partial-update` (every field last-non-null)
@@ -408,5 +418,8 @@ object MergeFunction {
       }
     }
     def result(): (String, InternalRow) = if (acc == null) null else (file, acc)
+    // the accumulator owns its slots; only strings may still view a batch
+    def retain(): Unit = if (acc != null) acc.values.indices.foreach(i =>
+      acc.update(i, InternalRow.copyValue(acc.values(i))))
   }
 }

@@ -79,8 +79,9 @@ object OrcIO {
           case FloatType => cv.asInstanceOf[DoubleColumnVector].vector(r) = row.getFloat(i)
           case DoubleType => cv.asInstanceOf[DoubleColumnVector].vector(r) = row.getDouble(i)
           case StringType =>
+            // copied: the row may view a batch buffer that is reused
             val b = row.getUTF8String(i).getBytes
-            cv.asInstanceOf[BytesColumnVector].setRef(r, b, 0, b.length)
+            cv.asInstanceOf[BytesColumnVector].setVal(r, b, 0, b.length)
           case BinaryType =>
             val b = row.getBinary(i)
             cv.asInstanceOf[BytesColumnVector].setRef(r, b, 0, b.length)

@@ -2,27 +2,22 @@ package graft.format
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
-import org.apache.parquet.hadoop.api.ReadSupport
+import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema._
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.parquet.schema.LogicalTypeAnnotation._
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
-/** Row-granular parquet IO for the table-format layer's data files
-  * (`bucket-<b>/<uuid>.parquet`), over the primitive type matrix of
-  * SURVEY §1.3. Used only inside the DSv2 connector's per-task
-  * readers/writers; the relational query surface reads parquet through
-  * Spark's vectorized scan.
+/** Parquet writer and footer helpers for the table-format layer's data
+  * files (`bucket-<b>/<uuid>.parquet`), over the primitive type matrix
+  * of SURVEY §1.3: the streaming [[RowWriter]] every data-file write
+  * goes through, the footer's field ids and stored types, and the
+  * id/name resolution and type-widening rules that reads apply. Reads
+  * decode through [[ParquetBatchReader]] only.
   */
 object ParquetIO {
 
@@ -106,7 +101,8 @@ object ParquetIO {
   /** Streaming writer of InternalRow (ordinals match `schema`). */
   final class RowWriter(path: java.nio.file.Path, schema: StructType,
       ids: Map[String, Int] = Map.empty,
-      blockSize: Int = ParquetWriter.DEFAULT_BLOCK_SIZE) {
+      blockSize: Int = ParquetWriter.DEFAULT_BLOCK_SIZE)
+      extends FormatIO.RowFileWriter {
     private val writer: ParquetWriter[InternalRow] = {
       val support = new InternalRowWriteSupport(schema, ids)
       new org.apache.parquet.hadoop.ParquetWriter[InternalRow](
@@ -120,70 +116,9 @@ object ParquetIO {
       rows += 1
     }
 
-    def rowCount: Long = rows
     def close(): Long = { writer.close(); rows }
   }
 
-  /** ReadSupport materializing requested columns straight into fresh
-    * GenericInternalRows via primitive converters — no Group object
-    * trees (mirrors [[InternalRowWriteSupport]]; rows are NOT reused
-    * because the sort-merge reader buffers them).
-    */
-  private final class InternalRowReadSupport(requested: StructType,
-      outPos: Array[Int], outLen: Int)
-    extends org.apache.parquet.hadoop.api.ReadSupport[InternalRow] {
-    import org.apache.parquet.io.api._
-
-    override def init(ctx: org.apache.parquet.hadoop.api.InitContext)
-        : org.apache.parquet.hadoop.api.ReadSupport.ReadContext =
-      new org.apache.parquet.hadoop.api.ReadSupport.ReadContext(
-        toParquetSchema(requested))
-
-    override def prepareForRead(conf: Configuration,
-        meta: java.util.Map[String, String], fileSchema: MessageType,
-        ctx: org.apache.parquet.hadoop.api.ReadSupport.ReadContext)
-        : RecordMaterializer[InternalRow] =
-      new RecordMaterializer[InternalRow] {
-        private var current: GenericInternalRow = _
-        private val converters: Array[Converter] =
-          requested.fields.zipWithIndex.map { case (f, i) =>
-            val o = outPos(i)
-            new PrimitiveConverter {
-              override def addInt(v: Int): Unit = f.dataType match {
-                case ByteType => current.update(o, v.toByte)
-                case ShortType => current.update(o, v.toShort)
-                case _ => current.update(o, v)
-              }
-              override def addLong(v: Long): Unit = current.update(o, v)
-              override def addFloat(v: Float): Unit = current.update(o, v)
-              override def addDouble(v: Double): Unit = current.update(o, v)
-              override def addBoolean(v: Boolean): Unit = current.update(o, v)
-              override def addBinary(v: Binary): Unit = f.dataType match {
-                case StringType =>
-                  current.update(o, UTF8String.fromBytes(v.getBytes))
-                case _ => current.update(o, v.getBytes)
-              }
-            }: Converter
-          }
-        private val root: GroupConverter = new GroupConverter {
-          override def getConverter(i: Int): Converter = converters(i)
-          override def start(): Unit = current = new GenericInternalRow(outLen)
-          override def end(): Unit = ()
-        }
-        override def getCurrentRecord: InternalRow = current
-        override def getRootConverter: GroupConverter = root
-      }
-  }
-
-  /** Iterator of InternalRow over one file, projected to `projection`
-    * (a subset of the file's columns, by name).
-    *
-    * Schema evolution (≙ the reference's `index_mapping` consumption,
-    * `pypaimon/pynative/reader/data_file_record_reader.py:104-133`):
-    * columns in `projection` that the file predates are null-filled —
-    * the physical footer schema, not the logical table schema, decides
-    * what is requested from parquet.
-    */
   /** One footer column: physical name, optional field id, and the Spark
     * type the file actually STORES (authoritative for files written
     * under an older schema version — including before a type widening).
@@ -192,26 +127,20 @@ object ParquetIO {
 
   /** Footer columns of a parquet file in file order, with their field
     * ids when present (the footer is authoritative for files written
-    * under an older schema version).
+    * under an older schema version). Takes an UNescaped Hadoop path
+    * string (`Path(String)` escapes internally) — `graftio://` strings
+    * read the footer through the [[FileIO]] seam with ranged reads.
     */
-  def footerFields(path: java.nio.file.Path): Seq[FooterField] =
-    // URI constructor: already-escaped form, Path must not re-escape
-    footerFieldsAt(new HPath(path.toUri))
-
-  /** Variant taking an UNescaped Hadoop path string (`Path(String)`
-    * escapes internally) — `graftio://` strings read the footer
-    * through the [[FileIO]] seam with ranged reads. */
   def footerFields(hadoopPath: String): Seq[FooterField] =
     footerFieldsAt(new HPath(hadoopPath))
 
   /** Bounded footer-schema cache. Graft data files are IMMUTABLE once
     * written (UUID-fresh names per commit; rewrites produce new files),
     * so (path, length) identifies content; the length rides the same
-    * HadoopInputFile status the open needs anyway. Kills the second
-    * footer fetch per RowReader construction (footerFieldsAt +
-    * parquet-mr's own internal read — several ranged GETs each on the
-    * graftio:// remote path) and amortizes repeat scans of the same
-    * file across queries.
+    * HadoopInputFile status the open needs anyway. Amortizes the
+    * footer fetch that resolves a file's columns (several ranged GETs
+    * on the graftio:// remote path) across repeat scans of the same
+    * file.
     */
   private val footerCache =
     new java.util.LinkedHashMap[(String, Long), Seq[FooterField]](
@@ -221,9 +150,19 @@ object ParquetIO {
         size() > 1024
     }
 
+  /** Hadoop's defaults, parsed once per JVM: a fresh Configuration
+    * re-reads every default resource (~13 ms on a 4-core host, more
+    * than decoding a small file). Read it, or copy it to change it.
+    */
+  private[format] lazy val hadoopDefaults: Configuration = {
+    val c = new Configuration()
+    c.size() // loads the resources now, so copies never re-read them
+    c
+  }
+
   private def footerFieldsAt(hp: HPath): Seq[FooterField] = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(hp, new Configuration())
+      .fromPath(hp, hadoopDefaults)
     val key = (hp.toString, in.getLength)
     footerCache.synchronized {
       val hit = footerCache.get(key)
@@ -261,9 +200,7 @@ object ParquetIO {
 
   /** Read-side type widening (ALTER COLUMN TYPE): which stored types a
     * file may hold for a column whose logical type is now wider.
-    * Matches the write-side chain byte→short→int→long, float→double.
-    */
-  /** Value-preserving widenings only: every old value maps to exactly
+    * Value-preserving widenings only: every old value maps to exactly
     * one value of the new type (so stats, merges, and comparisons stay
     * exact). That includes the cross-family casts byte/short→float and
     * byte/short/int→double (all exact in the wider mantissa), but NOT
@@ -275,25 +212,6 @@ object ParquetIO {
     case (IntegerType, LongType | DoubleType) => true
     case (FloatType, DoubleType) => true
     case _ => false
-  }
-
-  /** Numeric value conversion for a widened slot (boxed, row-granular —
-    * only applied to files that predate the ALTER). */
-  def widenValue(v: Any, to: DataType): Any = (v, to) match {
-    case (null, _) => null
-    case (b: Byte, ShortType) => b.toShort
-    case (b: Byte, IntegerType) => b.toInt
-    case (b: Byte, LongType) => b.toLong
-    case (b: Byte, FloatType) => b.toFloat
-    case (b: Byte, DoubleType) => b.toDouble
-    case (s: Short, IntegerType) => s.toInt
-    case (s: Short, LongType) => s.toLong
-    case (s: Short, FloatType) => s.toFloat
-    case (s: Short, DoubleType) => s.toDouble
-    case (i: Int, LongType) => i.toLong
-    case (i: Int, DoubleType) => i.toDouble
-    case (f: Float, DoubleType) => f.toDouble
-    case (x, _) => x
   }
 
   /** Resolve projected logical columns to this file's physical column
@@ -313,86 +231,5 @@ object ParquetIO {
         case _ => None
       }
     }.toMap
-  }
-
-  /** `hadoopPath`: explicit Hadoop path string override — a `graftio://`
-    * URI routes footer + row-group reads through the FileIO seam with
-    * ranged reads (no whole-file staging); None = the local file. */
-  final class RowReader(path: java.nio.file.Path, fileSchema: StructType,
-      projection: StructType,
-      ids: Map[String, Int] = Map.empty,
-      filters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty,
-      hadoopPath: Option[String] = None)
-    extends Iterator[InternalRow] with AutoCloseable {
-    // graftio strings are unescaped (Path(String) escapes); local
-    // java.nio paths go through the URI form (already escaped)
-    private val hpath =
-      hadoopPath.map(new HPath(_)).getOrElse(new HPath(path.toUri))
-    private val footer = footerFieldsAt(hpath)
-    private val physFor =
-      resolvePhysical(footer, projection.fieldNames.toSeq, ids)
-    private val logicalFor = physFor.map(_.swap)
-    private val storedOf = footer.map(f => f.name -> f.stored).toMap
-    // parquet-mr materializes the requested schema in ITS field order;
-    // request columns in file order (under their PHYSICAL names — the
-    // file may predate a rename), then permute into projection order.
-    // A file that predates an ALTER COLUMN TYPE widening is requested
-    // at its STORED (narrower) type and each value upcast after read.
-    private val requestedPhys: Seq[String] =
-      footer.map(_.name).filter(logicalFor.contains)
-    private val requested = StructType(requestedPhys.map { pn =>
-      val lf = projection(projection.fieldIndex(logicalFor(pn)))
-      val stored = storedOf(pn)
-      if (stored == lf.dataType) lf.copy(name = pn)
-      else if (widens(stored, lf.dataType)) lf.copy(name = pn, dataType = stored)
-      else throw new IllegalStateException(
-        s"File $path stores column $pn as ${stored.simpleString}, " +
-          s"incompatible with logical type ${lf.dataType.simpleString}")
-    })
-    private val outPos: Array[Int] =
-      requestedPhys.map(pn => projection.fieldIndex(logicalFor(pn))).toArray
-    private val widenSpecs: Array[(Int, DataType)] =
-      requestedPhys.zipWithIndex.collect {
-        case (pn, i) if storedOf(pn) !=
-            projection(projection.fieldIndex(logicalFor(pn))).dataType =>
-          outPos(i) -> projection(projection.fieldIndex(logicalFor(pn))).dataType
-      }.toArray
-    private val reader: ParquetReader[InternalRow] = {
-      // Pushed filters that resolve against this file (same per-file
-      // translation as the columnar path) skip whole row groups AND
-      // non-matching records. Sound below the KV merge because the
-      // connector only pushes partition/key conjuncts for PK tables:
-      // a filter on the key keeps every version of a surviving key, so
-      // merge results are unchanged — this is what turns a point
-      // lookup into O(one row group) instead of O(bucket).
-      val pred = ParquetRowGroupFilter.build(filters,
-        physFor, footer.map(f => f.name -> f.stored).toMap)
-      val b = ParquetReader.builder[InternalRow](
-        new InternalRowReadSupport(requested, outPos, projection.length),
-        hpath)
-      pred.fold(b)(p => b.withFilter(
-        org.apache.parquet.filter2.compat.FilterCompat.get(p))).build()
-    }
-    private var nextRow: InternalRow = reader.read()
-
-    override def hasNext: Boolean = nextRow != null
-
-    override def next(): InternalRow = {
-      val r = nextRow
-      nextRow = reader.read()
-      if (nextRow == null) reader.close()
-      if (widenSpecs.nonEmpty) {
-        val g = r.asInstanceOf[GenericInternalRow]
-        var i = 0
-        while (i < widenSpecs.length) {
-          val (pos, to) = widenSpecs(i)
-          g.update(pos, widenValue(g.values(pos), to))
-          i += 1
-        }
-      }
-      r
-    }
-
-    override def close(): Unit = reader.close()
   }
 }

@@ -724,4 +724,32 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     wb.newCommit().commit(w.prepareCommit())
     assert(t.newReadBuilder().newRead().toDF().count() == 2)
   }
+
+  test("a failing facade write task leaves no spilled run in the bucket dirs") {
+    catalog.createTable("default.pk_abort", Schema(
+      StructType(Seq(StructField("k", LongType), StructField("v", LongType))),
+      primaryKeys = Seq("k"),
+      options = Map("bucket" -> "1", "write-buffer-rows" -> "10")))
+    val t = catalog.getTable("default.pk_abort")
+    // one task: it spills a sorted run every 10 rows, then throws at
+    // row 50 — after five runs are already on disk
+    val boom = org.apache.spark.sql.functions.udf { (x: Long) =>
+      if (x == 50L) throw new IllegalStateException("planted task failure")
+      x
+    }
+    val frame = spark.range(0, 100, 1, 1)
+      .select(col("id").as("k"), boom(col("id")).as("v"))
+    val wb = t.newBatchWriteBuilder()
+    intercept[Exception](wb.newWrite().write(frame))
+    val left = Files.walk(t.tableDir).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("data-")).toList
+    assert(Files.isDirectory(t.tableDir.resolve("bucket-0")),
+      "the task never spilled: the test would prove nothing")
+    assert(left.isEmpty, s"spilled runs left behind: $left")
+    // the table still takes a clean write afterwards
+    val w = wb.newWrite()
+    w.write(spark.range(0, 20, 1, 1).select(col("id").as("k"), col("id").as("v")))
+    wb.newCommit().commit(w.prepareCommit())
+    assert(t.newReadBuilder().newRead().toDF().count() == 20)
+  }
 }

@@ -42,14 +42,14 @@ class RowGroupPruneSpec extends AnyFunSuite {
   }
 
   /** (rows served, rows matching `pred`, pruning engaged) */
-  private def scan(filters: Seq[Filter], pred: Long => Boolean)
-      : (Long, Long, Boolean) = {
+  private def scan(filters: Seq[Filter], pred: Long => Boolean,
+      from: java.nio.file.Path = file): (Long, Long, Boolean) = {
     val reader = new VectorizedParquetRecordReader(false, 4096)
-    val pruned = GraftReaderFactory.initPruned(reader, file.toString,
+    val pruned = GraftReaderFactory.initPruned(reader, from.toString,
       Array("k", "v"), filters, Map("k" -> "k", "v" -> "v"),
       Map("k" -> LongType, "v" -> LongType))
     if (!pruned)
-      reader.initialize(file.toString, java.util.Arrays.asList("k", "v"))
+      reader.initialize(from.toString, java.util.Arrays.asList("k", "v"))
     reader.initBatch(new StructType(), new GenericInternalRow(0))
     var served = 0L
     var matching = 0L
@@ -113,5 +113,52 @@ class RowGroupPruneSpec extends AnyFunSuite {
       Seq(GreaterThan("k", Long.MaxValue - 1)), Map("k" -> "k"),
       Map("k" -> IntegerType))
     assert(pred.isEmpty)
+  }
+
+  /** One row group (default block size) whose `k` column spans several
+    * pages: parquet-mr closes a page every 20,000 rows and writes
+    * column and offset indexes. (row groups, rows per `k` page)
+    */
+  private lazy val paged: (java.nio.file.Path, Int, Seq[Long]) = {
+    val f = Files.createTempDirectory("graft-pages").resolve("paged.parquet")
+    val w = new ParquetIO.RowWriter(f, schema, ids)
+    (0L until N * 2).foreach { i =>
+      w.write(new GenericInternalRow(Array[Any](i, i * 2)))
+    }
+    w.close()
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toUri),
+        new org.apache.hadoop.conf.Configuration()))
+    try {
+      val group = r.getRowGroups.get(0)
+      val oi = r.readOffsetIndex(group.getColumns.get(0))
+      (f, r.getRowGroups.size,
+        (0 until oi.getPageCount).map(p =>
+          oi.getLastRowIndex(p, group.getRowCount) - oi.getFirstRowIndex(p) + 1))
+    } finally r.close()
+  }
+
+  test("point filter inside one row group serves at most one page") {
+    val (f, groups, pageRows) = paged
+    assert(groups == 1 && pageRows.size >= 3,
+      s"expected one row group of several pages, got $groups / $pageRows")
+    val key = N + 4321L
+    val (served, matching, pruned) = scan(Seq(EqualTo("k", key)), _ == key, f)
+    assert(pruned && matching == 1, s"lost the matching row ($matching)")
+    assert(served <= pageRows.max,
+      s"served $served rows; one page holds at most ${pageRows.max}")
+  }
+
+  test("page skipping loses no row of a range that crosses pages") {
+    val (f, _, pageRows) = paged
+    // straddles the first page boundary
+    val lo = pageRows.head - 100
+    val hi = pageRows.head + 99
+    val (served, matching, pruned) = scan(
+      Seq(GreaterThanOrEqual("k", lo), LessThanOrEqual("k", hi)),
+      k => k >= lo && k <= hi, f)
+    assert(pruned && matching == 200, s"lost rows: $matching of 200")
+    assert(served < 2 * N, s"no page skipped: served $served of ${2 * N}")
   }
 }
