@@ -352,6 +352,13 @@ class GraftDataWriter(tableDir: Path, fields: StructType,
   private val dataIdx = dataFields.fields.map(f => writeSchema.fieldIndex(f.name))
   private val keyIdxInData = trimmedPk.map(k => dataFields.fieldIndex(k))
   private val keyTypes = trimmedPk.map(k => dataFields(dataFields.fieldIndex(k)).dataType)
+  // flush order (trimmed pk, seq); the KV layout puts data column i at i + 2
+  private val keyOrdering = new SortMergeReader.KeyOrdering(
+    keyIdxInData.map(_ + 2).toArray, keyTypes.toArray)
+  private val keySeqOrdering: Ordering[InternalRow] = (a, b) => {
+    val c = keyOrdering.compare(a, b)
+    if (c != 0) c else java.lang.Long.compare(a.getLong(0), b.getLong(0))
+  }
   private val rowKindIdx =
     if (hasRowKindCol) writeSchema.fieldIndex(RowKind.ColumnName) else -1
 
@@ -441,22 +448,13 @@ class GraftDataWriter(tableDir: Path, fields: StructType,
   private def flush(key: (Seq[String], Int),
       rows: mutable.ArrayBuffer[InternalRow]): DataFileMeta = {
     val (part, bucket) = key
-    val sorted = if (isPk) {
-      val kt = keyTypes
-      rows.sortWith { (a, b) =>
-        var c = 0; var i = 0
-        while (c == 0 && i < keyIdxInData.length) {
-          val dt = kt(i)
-          val ia = keyIdxInData(i) + 2
-          val av = if (a.isNullAt(ia)) null else a.get(ia, dt)
-          val bv = if (b.isNullAt(ia)) null else b.get(ia, dt)
-          c = Values.compare(dt, av, bv)
-          i += 1
-        }
-        if (c != 0) c < 0 else a.getLong(0) < b.getLong(0)
-      }
-    } else rows
-    files.write(part, bucket, "data", sorted.iterator)
+    if (!isPk) files.write(part, bucket, "data", rows.iterator)
+    else {
+      rows.sortInPlace()(keySeqOrdering)
+      val distinct = keyIdxInData.length == 1 && (1 until rows.length)
+        .forall(i => keyOrdering.compare(rows(i - 1), rows(i)) != 0)
+      files.write(part, bucket, "data", rows.iterator, distinct)
+    }
   }
 
   override def commit(): WriterCommitMessage = {

@@ -53,7 +53,8 @@ object Compactor extends Serializable {
           .map(_._2)
       } else fileNames.iterator.flatMap(open(_).rows)
     // runs close themselves when drained; a failed rewrite closes the rest
-    try writer.write(partition, bucket, "compact", rows)
+    // a PK rewrite emits one row per key
+    try writer.write(partition, bucket, "compact", rows, distinctKeys = writer.isPk)
     finally opened.foreach(_.close())
   }
 

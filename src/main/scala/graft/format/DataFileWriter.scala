@@ -23,6 +23,15 @@ import java.nio.file.Path
   *    encoded bytes is dropped, never truncated;
   *  - exact per-column null counts on append tables (IS NULL pruning
   *    and COUNT(col) pushdown read them from the manifest);
+  *  - the Parquet encoding rule: parquet-mr tries a dictionary on every
+  *    column and falls back to PLAIN when the first page does not
+  *    shrink, and for distinct values it never does (the dictionary is
+  *    the raw column). So PK files skip the attempt, and write the
+  *    same pages, for `_SEQUENCE_NUMBER` (unique per row) and for a
+  *    single-column trimmed key when the caller says its values are
+  *    distinct in the file (`distinctKeys`: compaction outputs always,
+  *    write-task flushes when no two adjacent sorted keys are equal).
+  *    Value columns, composite keys and repeated keys keep the attempt;
   *
   * all accumulated in the single write pass. A failure mid-write
   * closes the codec and deletes the partial file, so nothing is left
@@ -43,7 +52,7 @@ final case class DataFileWriter(
     ioSpec: String) {
 
   def write(partition: Seq[String], bucket: Int, prefix: String,
-      rows: Iterator[InternalRow]): DataFileMeta = {
+      rows: Iterator[InternalRow], distinctKeys: Boolean = false): DataFileMeta = {
     val io = FileIO.resolve(ioSpec)
     val root = Path.of(tableDir)
     val partDir = partitionKeys.zip(partition)
@@ -68,8 +77,13 @@ final case class DataFileWriter(
     var seqMin = Long.MaxValue
     var seqMax = Long.MinValue
 
+    val plain: Set[String] =
+      if (!isPk) Set.empty
+      else if (distinctKeys && trimmedPk.size == 1)
+        Set("_SEQUENCE_NUMBER", trimmedPk.head)
+      else Set("_SEQUENCE_NUMBER")
     val w = FormatIO.writer(fileFormat, path, fileSchema, fieldIds,
-      blockSize, io)
+      blockSize, io, plain)
     try {
       rows.foreach { r =>
         w.write(r)

@@ -25,14 +25,19 @@ object FormatIO {
       throw new IllegalArgumentException(s"Unsupported file.format: $other")
   }
 
+  /** Writer of one data file. `plainColumns` are Parquet columns to
+    * write without a dictionary attempt (see [[DataFileWriter]]); ORC
+    * and Avro ignore it.
+    */
   def writer(format: String, path: java.nio.file.Path,
       schema: StructType,
       ids: Map[String, Int] = Map.empty,
       blockSize: Int = org.apache.parquet.hadoop.ParquetWriter.DEFAULT_BLOCK_SIZE,
-      io: FileIO = FileIO.local)
+      io: FileIO = FileIO.local,
+      plainColumns: Set[String] = Set.empty)
       : RowFileWriter = {
     def direct(p: java.nio.file.Path): RowFileWriter = format match {
-      case "parquet" => new ParquetIO.RowWriter(p, schema, ids, blockSize)
+      case "parquet" => new ParquetIO.RowWriter(p, schema, ids, blockSize, plainColumns)
       case "orc" => new OrcIO.Writer(p, schema, ids)
       case "avro" => new AvroIO.Writer(p, schema, ids)
       case other =>

@@ -47,8 +47,11 @@ object OrcIO {
     root
   }
 
-  private def utcConf: Configuration = {
-    val c = new Configuration()
+  /** [[ParquetIO.hadoopDefaults]] with UTC timestamps, copied once:
+    * every ORC reader and writer shares it.
+    */
+  private lazy val utcConf: Configuration = {
+    val c = new Configuration(ParquetIO.hadoopDefaults)
     c.setBoolean("orc.use.utc.timestamp", true)
     c
   }

@@ -2,7 +2,7 @@ package graft.format
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.hadoop.mapred.FileSplit
+import org.apache.hadoop.mapred.{FileSplit, JobConf}
 import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.filter2.predicate.FilterPredicate
@@ -101,7 +101,9 @@ object ParquetBatchReader {
   def initialize(reader: VectorizedParquetRecordReader, hadoopPath: String,
       fileCols: Seq[String], storedOf: Map[String, DataType],
       pred: Option[FilterPredicate]): Unit = {
-    val conf = new Configuration(ParquetIO.hadoopDefaults)
+    // a JobConf, so TaskAttemptContextImpl takes it as is instead of
+    // copying it a second time
+    val conf = new JobConf(ParquetIO.hadoopDefaults)
     conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[RequestedColumns].getName)
     conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA,
       StructType(fileCols.map(c => StructField(c, storedOf(c)))).json)

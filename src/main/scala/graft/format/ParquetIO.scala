@@ -2,7 +2,10 @@ package graft.format
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.io.OutputFile
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema._
@@ -98,16 +101,25 @@ object ParquetIO {
     }
   }
 
-  /** Streaming writer of InternalRow (ordinals match `schema`). */
+  /** Streaming writer of InternalRow (ordinals match `schema`): SNAPPY,
+    * `blockSize` row groups, parquet-mr's default page size, over the
+    * shared [[hadoopDefaults]]. Columns in `plainColumns` are written
+    * without a dictionary attempt; every other column keeps parquet-mr's
+    * (dictionary first, PLAIN when the first page does not shrink).
+    */
   final class RowWriter(path: java.nio.file.Path, schema: StructType,
       ids: Map[String, Int] = Map.empty,
-      blockSize: Int = ParquetWriter.DEFAULT_BLOCK_SIZE)
+      blockSize: Int = ParquetWriter.DEFAULT_BLOCK_SIZE,
+      plainColumns: Set[String] = Set.empty)
       extends FormatIO.RowFileWriter {
     private val writer: ParquetWriter[InternalRow] = {
-      val support = new InternalRowWriteSupport(schema, ids)
-      new org.apache.parquet.hadoop.ParquetWriter[InternalRow](
-        new HPath(path.toUri), support, CompressionCodecName.SNAPPY,
-        blockSize, ParquetWriter.DEFAULT_PAGE_SIZE)
+      val b = new RowWriterBuilder(HadoopOutputFile.fromPath(
+        new HPath(path.toUri), hadoopDefaults), schema, ids)
+        .withConf(hadoopDefaults)
+        .withCompressionCodec(CompressionCodecName.SNAPPY)
+        .withRowGroupSize(blockSize.toLong)
+      plainColumns.foreach(b.withDictionaryEncoding(_, false))
+      b.build()
     }
     private var rows = 0L
 
@@ -117,6 +129,15 @@ object ParquetIO {
     }
 
     def close(): Long = { writer.close(); rows }
+  }
+
+  private final class RowWriterBuilder(file: OutputFile, schema: StructType,
+      ids: Map[String, Int])
+      extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](file) {
+    override protected def self(): RowWriterBuilder = this
+    override protected def getWriteSupport(conf: Configuration)
+        : org.apache.parquet.hadoop.api.WriteSupport[InternalRow] =
+      new InternalRowWriteSupport(schema, ids)
   }
 
   /** One footer column: physical name, optional field id, and the Spark
@@ -152,7 +173,12 @@ object ParquetIO {
 
   /** Hadoop's defaults, parsed once per JVM: a fresh Configuration
     * re-reads every default resource (~13 ms on a 4-core host, more
-    * than decoding a small file). Read it, or copy it to change it.
+    * than writing or decoding a small file). Read it, or copy it to
+    * change it — never set a key on it. Its users: every Parquet data
+    * file written ([[RowWriter]]), every footer read ([[footerFields]]),
+    * every Parquet open ([[ParquetBatchReader.initialize]], one
+    * `JobConf` copy) and the ORC codec ([[OrcIO]], one copy with
+    * `orc.use.utc.timestamp`).
     */
   private[format] lazy val hadoopDefaults: Configuration = {
     val c = new Configuration()
@@ -168,7 +194,8 @@ object ParquetIO {
       val hit = footerCache.get(key)
       if (hit != null) return hit
     }
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in,
+      HadoopReadOptions.builder(hadoopDefaults).build())
     val fields =
       try r.getFooter.getFileMetaData.getSchema.getFields.asScala
         .map(f => FooterField(f.getName, Option(f.getId).map(_.intValue()),
