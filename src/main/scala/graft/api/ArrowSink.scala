@@ -1,96 +1,30 @@
 package graft.api
 
-import java.io.ByteArrayOutputStream
-import java.nio.channels.Channels
 import java.nio.charset.StandardCharsets
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector._
-import org.apache.arrow.vector.ipc.ArrowStreamWriter
-import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ArrowSchema}
-import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, TimeUnit}
+import org.apache.arrow.vector.types.pojo.{ArrowType, Field}
+import org.apache.arrow.vector.types.{FloatingPointPrecision, TimeUnit}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
-/** Local Arrow IPC sink for the facade's `to_arrow` mapping
-  * (`pypaimon/api/table_read.py:31-56`): the reference materializes a
-  * scan into a pyarrow Table / RecordBatchReader on the driver. The
-  * Spark-native equivalent of the DISTRIBUTED read is `toDF()`; this
-  * sink covers the literal interop case — handing the collected result
-  * to an Arrow-consuming library — using only the public arrow-vector
-  * API already on Spark's classpath.
-  *
-  * Scope is deliberately driver-local and bounded: callers stream
-  * batches via [[ReadBuilder.toDF]]+`toLocalIterator` when the result
-  * is large; `toArrow` is for results meant to fit on the driver,
-  * exactly like the reference's `to_arrow().to_pandas()` path.
+/** Arrow IPC decoder behind `BatchTableWrite.writeArrow`. The read
+  * direction, `TableRead.toArrow`, needs no code here: the executors
+  * encode with Spark's own Arrow converters and the driver frames the
+  * batches. The decoder stays hand-written because Spark's
+  * `ArrowColumnVector` has no date64 accessor and reads tz-naive
+  * timestamps as `TimestampNTZType`, and external producers emit both.
   */
 private[api] object ArrowSink {
 
-  /** Spark → Arrow field mapping for the facade's supported types
-    * (mirrors `TableSchema.supportedTypes`). Timestamps are UTC
-    * microseconds; dates are epoch days.
-    */
-  private def arrowField(f: StructField): Field = {
-    val t: ArrowType = f.dataType match {
-      case ByteType => new ArrowType.Int(8, true)
-      case ShortType => new ArrowType.Int(16, true)
-      case IntegerType => new ArrowType.Int(32, true)
-      case LongType => new ArrowType.Int(64, true)
-      case FloatType => new ArrowType.FloatingPoint(FloatingPointPrecision.SINGLE)
-      case DoubleType => new ArrowType.FloatingPoint(FloatingPointPrecision.DOUBLE)
-      case BooleanType => ArrowType.Bool.INSTANCE
-      case StringType => ArrowType.Utf8.INSTANCE
-      case BinaryType => ArrowType.Binary.INSTANCE
-      case DateType => new ArrowType.Date(DateUnit.DAY)
-      case TimestampType => new ArrowType.Timestamp(TimeUnit.MICROSECOND, "UTC")
-      case other => throw new IllegalArgumentException(
-        s"Found unsupported data type ${other.simpleString} for field ${f.name}")
-    }
-    new Field(f.name, new FieldType(f.nullable, t, null), java.util.Collections.emptyList())
-  }
-
-  private def epochDays(v: Any): Int = v match {
-    case d: java.sql.Date => d.toLocalDate.toEpochDay.toInt
-    case d: java.time.LocalDate => d.toEpochDay.toInt
-    case i: Int => i
-  }
-
-  private def epochMicros(v: Any): Long = v match {
-    case t: java.sql.Timestamp =>
-      // floorDiv, not /: getTime truncates toward zero while getNanos
-      // is always the non-negative sub-second part, so pre-epoch
-      // values with fractional seconds would otherwise shift +1 s
-      Math.addExact(Math.multiplyExact(Math.floorDiv(t.getTime, 1000L),
-        1000000L), (t.getNanos / 1000L) % 1000000L)
-    case i: java.time.Instant =>
-      Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L),
-        i.getNano / 1000L)
-    case l: Long => l
-  }
-
-  private def setValue(vec: FieldVector, i: Int, v: Any): Unit = vec match {
-    case x: TinyIntVector => x.setSafe(i, v.asInstanceOf[Byte])
-    case x: SmallIntVector => x.setSafe(i, v.asInstanceOf[Short])
-    case x: IntVector => x.setSafe(i, v.asInstanceOf[Int])
-    case x: BigIntVector => x.setSafe(i, v.asInstanceOf[Long])
-    case x: Float4Vector => x.setSafe(i, v.asInstanceOf[Float])
-    case x: Float8Vector => x.setSafe(i, v.asInstanceOf[Double])
-    case x: BitVector => x.setSafe(i, if (v.asInstanceOf[Boolean]) 1 else 0)
-    case x: VarCharVector =>
-      x.setSafe(i, v.asInstanceOf[String].getBytes(StandardCharsets.UTF_8))
-    case x: VarBinaryVector => x.setSafe(i, v.asInstanceOf[Array[Byte]])
-    case x: DateDayVector => x.setSafe(i, epochDays(v))
-    case x: TimeStampMicroTZVector => x.setSafe(i, epochMicros(v))
-    case other => throw new IllegalArgumentException(
-      s"Unsupported Arrow vector ${other.getClass.getSimpleName}")
-  }
-
-  /** Arrow → Spark field mapping, the exact inverse of [[arrowField]]
-    * — so an IPC stream produced by any Arrow implementation with these
-    * types decodes to a schema the write path can check positionally.
+  /** Arrow → Spark field mapping: the inverse of Spark's `ArrowUtils`
+    * mapping for the facade's supported types (timestamps in
+    * microseconds, zoned or not) — so an IPC stream produced by any
+    * Arrow implementation with these types decodes to a schema the
+    * write path can check positionally.
     */
   private def sparkField(f: Field): StructField = {
     val dt: DataType = f.getType match {
@@ -137,7 +71,7 @@ private[api] object ArrowSink {
     case x: TimeStampMicroTZVector => microsToTimestamp(x.get(i))
     // tz-NAIVE timestamp[us] — pyarrow's DEFAULT pa.timestamp('us').
     // Interpreted as UTC instants, matching the facade's session
-    // timezone contract (the encoder stamps UTC on the way out).
+    // timezone contract (`toArrow` stamps UTC on the way out).
     case x: TimeStampMicroVector => microsToTimestamp(x.get(i))
     case other => throw new IllegalArgumentException(
       s"Unsupported Arrow vector ${other.getClass.getSimpleName}")
@@ -150,7 +84,7 @@ private[api] object ArrowSink {
   }
 
   /** Decode an Arrow IPC stream into a Spark schema + rows — the
-    * write-side counterpart of [[toIpcStream]], for the facade's
+    * write-side counterpart of `TableRead.toArrow`, for the facade's
     * `write_arrow` mapping. Driver-local and bounded like `toArrow`:
     * the reference's write API also receives whole serialized batches
     * (`pypaimon/api/table_write.py:27-48`, decoded JVM-side in
@@ -183,45 +117,6 @@ private[api] object ArrowSink {
         }
         (schema, rows.toSeq)
       } finally reader.close()
-    } finally allocator.close()
-  }
-
-  /** Encode collected rows as one Arrow IPC stream (schema + batches of
-    * `maxRowsPerBatch`). Returns the serialized stream — readable by any
-    * Arrow implementation's stream reader (pyarrow, arrow-java, …).
-    */
-  def toIpcStream(schema: StructType, rows: Array[Row],
-      maxRowsPerBatch: Int = 4096): Array[Byte] = {
-    require(maxRowsPerBatch > 0, s"maxRowsPerBatch must be > 0: $maxRowsPerBatch")
-    val arrowSchema = new ArrowSchema(schema.fields.map(arrowField).toList.asJava)
-    val allocator = new RootAllocator()
-    try {
-      val root = VectorSchemaRoot.create(arrowSchema, allocator)
-      try {
-        val out = new ByteArrayOutputStream()
-        val writer = new ArrowStreamWriter(root, null, Channels.newChannel(out))
-        writer.start()
-        rows.grouped(maxRowsPerBatch).foreach { batch =>
-          root.allocateNew()
-          var i = 0
-          while (i < batch.length) {
-            val row = batch(i)
-            var c = 0
-            while (c < schema.length) {
-              val vec = root.getVector(c)
-              if (row.isNullAt(c)) vec.setNull(i)
-              else setValue(vec, i, row.get(c))
-              c += 1
-            }
-            i += 1
-          }
-          root.setRowCount(batch.length)
-          writer.writeBatch()
-        }
-        // zero-row result still carries the schema (empty stream is valid)
-        writer.end()
-        out.toByteArray
-      } finally root.close()
     } finally allocator.close()
   }
 }

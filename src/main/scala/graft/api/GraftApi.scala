@@ -396,14 +396,18 @@ final case class Plan(splits: Seq[Split])
 final class TableRead(rb: ReadBuilder) {
   /** The whole-snapshot DataFrame — the Spark-native `to_arrow`. */
   def toDF(): DataFrame = rb.toDF()
-  /** ≙ `to_arrow` literally: the collected result as an Arrow IPC
-    * stream (schema + record batches), readable by pyarrow/arrow-java.
-    * Driver-local by design, like the reference; use [[toDF]] to keep
-    * the result distributed.
+  /** ≙ `to_arrow` literally: the result as one Arrow IPC stream
+    * (schema + record batches), readable by pyarrow/arrow-java. The
+    * executors encode the batches with Spark's own Arrow converters
+    * (at most `maxRowsPerBatch` rows each, timestamps as
+    * `timestamp[us, UTC]`); the driver collects the serialized batches
+    * in partition order and frames them. The whole stream lands on the
+    * driver, like the reference; use [[toDF]] to keep the result
+    * distributed.
     */
   def toArrow(maxRowsPerBatch: Int = 4096): Array[Byte] = {
-    val df = rb.toDF()
-    ArrowSink.toIpcStream(df.schema, df.collect(), maxRowsPerBatch)
+    require(maxRowsPerBatch > 0, s"maxRowsPerBatch must be > 0: $maxRowsPerBatch")
+    org.apache.spark.sql.GraftShims.arrowIpcStream(rb.toDF(), maxRowsPerBatch)
   }
   /** ≙ `to_arrow().to_pandas()` — local rows. */
   def toLocalRows(): Array[org.apache.spark.sql.Row] = rb.toDF().collect()

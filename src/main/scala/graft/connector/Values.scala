@@ -58,8 +58,7 @@ object Values {
       // floorDiv, not /: getTime truncates toward zero while getNanos
       // is always the non-negative sub-second part, so pre-epoch
       // values with fractional seconds would otherwise shift +1s
-      // (same fix as ArrowSink.epochMicros; matches Spark's
-      // DateTimeUtils.fromJavaTimestamp)
+      // (matches Spark's DateTimeUtils.fromJavaTimestamp)
       Math.addExact(Math.multiplyExact(
         Math.floorDiv(t.getTime, 1000L), 1000000L),
         (t.getNanos / 1000L) % 1000000L)

@@ -1,15 +1,42 @@
 package org.apache.spark.sql
 
+import java.io.ByteArrayOutputStream
+
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.arrow.{ArrowBatchStreamWriter, ArrowConverters}
 
 /** Bridge to `private[sql]` conversions between the public `Column` and
   * Catalyst `Expression` in Spark 4 (the `.expr` accessor of Spark 3.x
-  * moved behind `org.apache.spark.sql.classic.ExpressionUtils`). Same
-  * shim pattern used by third-party connectors/extension libraries.
+  * moved behind `org.apache.spark.sql.classic.ExpressionUtils`), and to
+  * Spark's Arrow converters. Same shim pattern used by third-party
+  * connectors/extension libraries.
   */
 object GraftShims {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** `df` as one Arrow IPC stream, built as `collectAsArrowToPython`
+    * builds it: executor tasks encode their rows into record batches of
+    * at most `maxRowsPerBatch` rows, and the driver frames the batches
+    * in partition order. The zone is the literal "UTC", never the
+    * session zone. The converter reads a limit <= 0 as "no limit", so
+    * callers check it first.
+    */
+  def arrowIpcStream(df: DataFrame, maxRowsPerBatch: Int): Array[Byte] = {
+    val schema = df.schema
+    val batches = df.queryExecution.toRdd.mapPartitions { rows =>
+      ArrowConverters.toBatchIterator(rows, schema, maxRowsPerBatch.toLong,
+        "UTC", errorOnDuplicatedFieldNames = true, largeVarTypes = false,
+        context = TaskContext.get())
+    }.collect()
+    val out = new ByteArrayOutputStream()
+    val writer = new ArrowBatchStreamWriter(schema, out, "UTC",
+      errorOnDuplicatedFieldNames = true, largeVarTypes = false)
+    writer.writeBatches(batches.iterator)
+    writer.end()
+    out.toByteArray
+  }
 
   /** Translate an UNRESOLVED predicate `Column` (the shapes a facade
     * `PredicateBuilder` constructs) into `sources.Filter` conjuncts

@@ -345,8 +345,8 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
           java.sql.Date.valueOf("2024-02-29"),
           java.sql.Timestamp.valueOf("2024-02-29 12:34:56.789")),
         // pre-epoch with fractional seconds: getTime truncates toward
-        // zero while getNanos is non-negative — pins the floorDiv in
-        // ArrowSink.epochMicros (a plain / shifted this value +1 s)
+        // zero while getNanos is non-negative — a plain / in the
+        // micros conversion shifts this value +1 s
         org.apache.spark.sql.Row(5.toByte, 6.toShort, 0, 7L, 0.5f, 1.25,
           false, "pre-epoch", Array[Byte](9),
           java.sql.Date.valueOf("1969-06-01"),
@@ -412,6 +412,95 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       assert(got.toSeq == exp.toSeq, s"\ngot:      $got\nexpected: $exp")
     } finally { reader.close(); alloc.close() }
+  }
+
+  /** An Arrow IPC stream as arrow-java's reference reader sees it: the
+    * fields and each batch's rows, a zoned timestamp as its epoch micros.
+    */
+  private def decodeArrow(ipc: Array[Byte])
+      : (Seq[org.apache.arrow.vector.types.pojo.Field], Seq[Seq[Seq[Any]]]) = {
+    val alloc = new org.apache.arrow.memory.RootAllocator()
+    val reader = new org.apache.arrow.vector.ipc.ArrowStreamReader(
+      new java.io.ByteArrayInputStream(ipc), alloc)
+    try {
+      val root = reader.getVectorSchemaRoot
+      val batches = scala.collection.mutable.ArrayBuffer[Seq[Seq[Any]]]()
+      while (reader.loadNextBatch())
+        batches += (0 until root.getRowCount).map(i =>
+          root.getFieldVectors.asScala.toSeq.map {
+            case v if v.isNull(i) => null
+            case v: org.apache.arrow.vector.TimeStampMicroTZVector => v.get(i)
+            case v => v.getObject(i)
+          })
+      (root.getSchema.getFields.asScala.toSeq, batches.toSeq)
+    } finally { reader.close(); alloc.close() }
+  }
+
+  test("toArrow: positive batch bound, UTC whatever the session zone, " +
+      "partition order, schema-only stream for an empty table") {
+    import org.apache.arrow.vector.types.pojo.ArrowType
+    import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, TimeUnit}
+    catalog.createTable("default.arrow_splits", Schema(StructType(Seq(
+      StructField("k", LongType), StructField("ts", TimestampType)))))
+    val t = catalog.getTable("default.arrow_splits")
+    import spark.implicits._
+    // three commits of 7 rows, one file each; pre-epoch instants with
+    // fractional seconds among them
+    (0 until 3).foreach { c =>
+      val wb = t.newBatchWriteBuilder(); val w = wb.newWrite()
+      w.write((0 until 7).map { i =>
+        val k = c * 7L + i
+        (k, java.sql.Timestamp.from(
+          java.time.Instant.ofEpochSecond(k * 3600L - 43200L, 250000000L)))
+      }.toDF("k", "ts").coalesce(1))
+      wb.newCommit().commit(w.prepareCommit())
+    }
+    assert(t.newReadBuilder().newScan().plan().splits.size >= 3)
+    val read = t.newReadBuilder().newRead()
+    // Spark's converter reads a limit <= 0 as "no limit"
+    intercept[IllegalArgumentException](read.toArrow(maxRowsPerBatch = 0))
+
+    val (fields, batches) = decodeArrow(read.toArrow(maxRowsPerBatch = 3))
+    assert(batches.forall(_.size <= 3), batches.map(_.size))
+    val expected = read.toDF().collect().toSeq.map(r => Seq[Any](r.getLong(0),
+      org.apache.spark.sql.catalyst.util.DateTimeUtils
+        .fromJavaTimestamp(r.getTimestamp(1))))
+    assert(expected.size == 21)
+    assert(batches.flatten == expected)
+    assert(fields.map(_.getType) == Seq(new ArrowType.Int(64, true),
+      new ArrowType.Timestamp(TimeUnit.MICROSECOND, "UTC")))
+
+    // the stream's zone is UTC, not the session's
+    val zoneKey = "spark.sql.session.timeZone"
+    val zone = spark.conf.get(zoneKey)
+    spark.conf.set(zoneKey, "America/Los_Angeles")
+    val la = try read.toArrow(maxRowsPerBatch = 3)
+      finally spark.conf.set(zoneKey, zone)
+    assert(decodeArrow(la) == ((fields, batches)))
+
+    // no rows: the schema alone, with Spark's ArrowUtils field types
+    catalog.createTable("default.arrow_empty", Schema(StructType(Seq(
+      StructField("c_byte", ByteType), StructField("c_short", ShortType),
+      StructField("c_int", IntegerType), StructField("c_long", LongType),
+      StructField("c_float", FloatType), StructField("c_double", DoubleType),
+      StructField("c_bool", BooleanType), StructField("c_str", StringType),
+      StructField("c_bin", BinaryType), StructField("c_date", DateType),
+      StructField("c_ts", TimestampType)))))
+    val (emptyFields, emptyBatches) = decodeArrow(
+      catalog.getTable("default.arrow_empty").newReadBuilder().newRead().toArrow())
+    assert(emptyBatches.isEmpty)
+    assert(emptyFields.map(f => (f.getName, f.getType)) == Seq(
+      "c_byte" -> new ArrowType.Int(8, true),
+      "c_short" -> new ArrowType.Int(16, true),
+      "c_int" -> new ArrowType.Int(32, true),
+      "c_long" -> new ArrowType.Int(64, true),
+      "c_float" -> new ArrowType.FloatingPoint(FloatingPointPrecision.SINGLE),
+      "c_double" -> new ArrowType.FloatingPoint(FloatingPointPrecision.DOUBLE),
+      "c_bool" -> ArrowType.Bool.INSTANCE,
+      "c_str" -> ArrowType.Utf8.INSTANCE,
+      "c_bin" -> ArrowType.Binary.INSTANCE,
+      "c_date" -> new ArrowType.Date(DateUnit.DAY),
+      "c_ts" -> new ArrowType.Timestamp(TimeUnit.MICROSECOND, "UTC")))
   }
 
   test("writeArrow: Arrow IPC in → commit → identical Arrow IPC out") {

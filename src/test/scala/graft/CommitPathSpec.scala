@@ -127,6 +127,60 @@ class CommitPathSpec extends AnyFunSuite with BeforeAndAfterAll {
       "COMPACT" -> None))
   }
 
+  test("manifest folding: 55 appends collapse the chain to [full, delta]; " +
+      "reads and a resumed stream stay exact across the fold") {
+    spark.sql("CREATE TABLE graft.default.fold (k BIGINT)")
+    def append(k: Int): Unit =
+      spark.sql(s"INSERT INTO graft.default.fold VALUES ($k)")
+    val ckpt = Files.createTempDirectory("graft-fold-ckpt")
+    val sink = Files.createTempDirectory("graft-fold-sink")
+    // one streaming read, resumed from its checkpoint on every call;
+    // returns every k its parquet sink holds, sorted
+    def drain(): Seq[Long] = {
+      spark.readStream.table("graft.default.fold").writeStream
+        .format("parquet").option("path", sink.toString)
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      spark.read.parquet(sink.toString).collect().map(_.getLong(0)).toSeq.sorted
+    }
+    try {
+      (1 to 45).foreach(append)
+      assert(drain() == (1L to 45L))
+      (46 to 55).foreach(append) // the 51st commit folds
+      assert(drain() == (1L to 55L))
+      append(56)
+      assert(drain() == (1L to 56L))
+    } finally {
+      graft.util.Fs.deleteRecursively(ckpt)
+      graft.util.Fs.deleteRecursively(sink)
+    }
+
+    val sm = new SnapshotManager(dir("fold"))
+    val snaps = (1L to 56L).map(sm.snapshot)
+    // each commit chains one delta manifest; a base of 50 folds into
+    // one full ADD manifest of its live set
+    assert(snaps.map(_.manifests.size) ==
+      (1 to 50) ++ (51 to 56).map(_ - 49))
+    val full = sm.readManifest(snaps(50).manifests.head)
+    assert(!snaps(49).manifests.contains(snaps(50).manifests.head))
+    assert(full.forall(_.isAdd))
+    assert(full.map(_.file.fileName).toSet ==
+      sm.liveFiles(snaps(49)).map(_.fileName).toSet)
+    // model: the live set of snapshot s is every file the delta
+    // manifests of snapshots 1..s added, and it holds k = 1..s
+    var model = Set.empty[String]
+    snaps.foreach { s =>
+      model ++= sm.readManifest(s.manifests.last).map(_.file.fileName)
+      val live = sm.liveFiles(s).map(_.fileName)
+      assert(live.size == model.size && live.toSet == model, s"snapshot ${s.id}")
+      val r = spark.sql("SELECT count(*), sum(k) FROM graft.default.fold " +
+        s"VERSION AS OF ${s.id}").collect()(0)
+      assert((r.getLong(0), r.getLong(1)) == ((s.id, s.id * (s.id + 1) / 2)),
+        s"snapshot ${s.id}")
+    }
+    checkAccounting("fold", Seq.fill(56)("APPEND" -> None))
+  }
+
   private def rowGroups(file: Path): Int = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(file.toUri),
