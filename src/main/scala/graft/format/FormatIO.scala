@@ -61,9 +61,11 @@ object FormatIO {
         override def close(): Long = {
           val n = inner.close()
           io.publishFile(tmp, path)
-          // Hadoop's local ChecksumFileSystem leaves a `.<name>.crc`
-          // sidecar next to the temp; publishFile moves only the data
-          // file, so sweep the sidecar or it leaks one per write
+          // ORC writes through Hadoop's local ChecksumFileSystem, which
+          // leaves a `.<name>.crc` sidecar next to the temp (Parquet and
+          // Avro write through java.nio and leave none); publishFile
+          // moves only the data file, so sweep the sidecar or it leaks
+          // one per ORC write
           java.nio.file.Files.deleteIfExists(
             tmp.getParent.resolve("." + tmp.getFileName + ".crc"))
           n

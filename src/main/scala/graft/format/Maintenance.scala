@@ -345,8 +345,10 @@ object Maintenance {
       "Rollback conflict: gave up after 100 snapshot publish attempts")
   }
 
-  /** Delete data files (and Hadoop .crc sidecars) no manifest of any
-    * existing snapshot references — aborted-write leftovers. Only files
+  /** Delete data files no manifest of any existing snapshot references
+    * — aborted-write leftovers — with their Hadoop .crc sidecars (local
+    * ORC files have one, and so do local Parquet files written before
+    * Parquet moved to `java.nio` writes). Only files
     * older than `olderThanMillis` are touched, so in-flight writers
     * (whose files precede their commit) are never raced.
     */
@@ -396,8 +398,9 @@ object Maintenance {
         io.delete(p.getParent.resolve("." + p.getFileName + ".crc"))
       }
     }
-    // sidecars whose data file is gone (local format writers leave
-    // Hadoop .crc files; stores simply have none)
+    // sidecars whose data file is gone (local ORC writers leave Hadoop
+    // .crc files, and so did local Parquet writers before they moved to
+    // java.nio; stores simply have none)
     entries.foreach { e =>
       val segs = segments(e.relPath)
       val n = segs.last

@@ -97,6 +97,18 @@ object ParquetBatchReader {
     * in `storedOf`) of the file at `hadoopPath`, through Spark's own
     * split path: it skips the row groups, and inside them the pages
     * (column and offset indexes), that `pred` rules out.
+    *
+    * Two fixed read options:
+    *  - no vectored IO: column chunks are fetched by synchronous
+    *    positioned reads. Vectored IO over a local file runs its
+    *    ranges as `CompletableFuture` stages, and where the common pool
+    *    has parallelism 1 (two cores or fewer) each stage starts a new
+    *    thread; `graftio://` streams have no vectored override, so they
+    *    lose nothing.
+    *  - page CRCs verified: a page whose bytes do not match the CRC
+    *    its writer stored fails the read with parquet-mr's
+    *    `ParquetDecodingException`, on every store. This is the data
+    *    files' integrity check; they carry no Hadoop `.crc` sidecar.
     */
   def initialize(reader: VectorizedParquetRecordReader, hadoopPath: String,
       fileCols: Seq[String], storedOf: Map[String, DataType],
@@ -111,6 +123,8 @@ object ParquetBatchReader {
     Seq(SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
       SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
       SQLConf.LEGACY_PARQUET_NANOS_AS_LONG).foreach(e => conf.setBoolean(e.key, false))
+    conf.setBoolean(ParquetInputFormat.HADOOP_VECTORED_IO_ENABLED, false)
+    conf.setBoolean(ParquetInputFormat.PAGE_VERIFY_CHECKSUM_ENABLED, true)
     pred.foreach(ParquetInputFormat.setFilterPredicate(conf, _))
     val in = HadoopInputFile.fromPath(new HPath(hadoopPath), conf)
     reader.initialize(new FileSplit(in.getPath, 0, in.getLength, Array.empty[String]),

@@ -4,8 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.parquet.io.OutputFile
+import org.apache.parquet.io.{LocalOutputFile, OutputFile}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema._
@@ -102,10 +101,18 @@ object ParquetIO {
   }
 
   /** Streaming writer of InternalRow (ordinals match `schema`): SNAPPY,
-    * `blockSize` row groups, parquet-mr's default page size, over the
-    * shared [[hadoopDefaults]]. Columns in `plainColumns` are written
-    * without a dictionary attempt; every other column keeps parquet-mr's
-    * (dictionary first, PLAIN when the first page does not shrink).
+    * `blockSize` row groups, parquet-mr's default page size, with the
+    * shared [[hadoopDefaults]] as the writer's conf. Columns in
+    * `plainColumns` are written without a dictionary attempt; every
+    * other column keeps parquet-mr's (dictionary first, PLAIN when the
+    * first page does not shrink).
+    *
+    * `path` is a local file in an existing directory (remote stores
+    * stage one, see [[FormatIO.writer]]), created exclusively through
+    * `java.nio` ([[LocalOutputFile]]), not a Hadoop filesystem: no
+    * `.crc` sidecar and no forked `chmod` per file. Integrity rides in
+    * the file instead, as parquet-mr's page CRCs, which every read
+    * verifies ([[ParquetBatchReader.initialize]]).
     */
   final class RowWriter(path: java.nio.file.Path, schema: StructType,
       ids: Map[String, Int] = Map.empty,
@@ -113,8 +120,7 @@ object ParquetIO {
       plainColumns: Set[String] = Set.empty)
       extends FormatIO.RowFileWriter {
     private val writer: ParquetWriter[InternalRow] = {
-      val b = new RowWriterBuilder(HadoopOutputFile.fromPath(
-        new HPath(path.toUri), hadoopDefaults), schema, ids)
+      val b = new RowWriterBuilder(new LocalOutputFile(path), schema, ids)
         .withConf(hadoopDefaults)
         .withCompressionCodec(CompressionCodecName.SNAPPY)
         .withRowGroupSize(blockSize.toLong)
@@ -175,10 +181,11 @@ object ParquetIO {
     * re-reads every default resource (~13 ms on a 4-core host, more
     * than writing or decoding a small file). Read it, or copy it to
     * change it — never set a key on it. Its users: every Parquet data
-    * file written ([[RowWriter]]), every footer read ([[footerFields]]),
-    * every Parquet open ([[ParquetBatchReader.initialize]], one
-    * `JobConf` copy) and the ORC codec ([[OrcIO]], one copy with
-    * `orc.use.utc.timestamp`).
+    * file written ([[RowWriter]], as the writer's conf; the file itself
+    * is not opened through a Hadoop filesystem), every footer read
+    * ([[footerFields]]), every Parquet open
+    * ([[ParquetBatchReader.initialize]], one `JobConf` copy) and the
+    * ORC codec ([[OrcIO]], one copy with `orc.use.utc.timestamp`).
     */
   private[format] lazy val hadoopDefaults: Configuration = {
     val c = new Configuration()
