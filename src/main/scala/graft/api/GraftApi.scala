@@ -3,7 +3,7 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
-import graft.connector.{GraftCommitMessage, GraftWriteSupport, Values}
+import graft.connector.{GraftCommitMessage, GraftWriteSupport, ScanPlanner}
 import graft.core.{RowKind, TableSchema}
 import graft.format.{DataFileMeta, FileStoreCommit, SnapshotManager}
 import java.nio.file.{Files, Path, Paths}
@@ -326,18 +326,16 @@ final class ReadBuilder(table: GraftTableHandle, spark: SparkSession,
 /** Split metadata ≙ `pypaimon/api/split.py:24-35`. */
 final case class Split(rowCount: Long, fileSize: Long, filePaths: Seq[String])
 
-/** ≙ `TableScan.plan().splits()` — snapshot-consistent enumeration of
-  * split metadata (grouped per merge unit for PK tables).
+/** ≙ `TableScan.plan().splits()`: the latest snapshot's files, picked
+  * by the connector's [[graft.connector.ScanPlanner]] (the files the
+  * read itself touches), one split per merge unit for PK tables and per
+  * file for append tables.
   */
 final class TableScan(table: GraftTableHandle,
     filter: Option[Predicate] = None, limit: Option[Int] = None) {
-  /** Snapshot-consistent splits, PRUNED by the builder's pushdown like
-    * the reference planner: partition conjuncts evaluate exactly on
-    * partition values, everything else prunes on file zone maps
-    * (PK tables: trimmed-pk bounds only — non-key pruning below the
-    * merge would resurrect overwritten rows), and `with_limit` keeps
-    * whole splits until their rowCount covers n (the reference's
-    * split-granular limit, §2.3).
+  /** Splits pruned by the builder's filter exactly like the DSv2 scan
+    * prunes, and `with_limit` keeps whole splits until their rowCount
+    * covers n (the reference's split-granular limit, §2.3).
     */
   def plan(): Plan = {
     val ts = table.tableSchema
@@ -347,29 +345,11 @@ final class TableScan(table: GraftTableHandle,
     // only over-approximates)
     val srcFilters = filter.toSeq.flatMap(p =>
       org.apache.spark.sql.GraftShims.sourceFilters(p.column))
-    val pTypes = ts.partitionKeys
-      .map(k => k -> ts.fields(ts.fields.fieldIndex(k)).dataType).toMap
-    val statCols =
-      if (ts.isPrimaryKeyTable) ts.trimmedPrimaryKeys
-      else ts.fields.fieldNames.toSeq.filterNot(ts.partitionKeys.contains)
-    val keyTypes = statCols
-      .map(k => k -> ts.fields(ts.fields.fieldIndex(k)).dataType).toMap
-    val files = table.snapshotManager.liveFilesLatest
-      .filter { f =>
-        val pValue: String => Option[Any] = c =>
-          ts.partitionKeys.indexOf(c) match {
-            case -1 => None
-            case i => Some(Values.parse(pTypes(c), f.partition(i)))
-          }
-        srcFilters.forall(flt =>
-          Values.evalExact(flt, pTypes.get, pValue).getOrElse(true)) &&
-          srcFilters.forall(flt =>
-            Values.evalRange(flt, keyTypes.get,
-              c => f.keyStats.get(c)).getOrElse(true))
-      }
+    val files = ScanPlanner.prune(ts,
+      ScanPlanner.liveFiles(table.snapshotManager, None), srcFilters)
     val all =
       if (ts.isPrimaryKeyTable)
-        files.groupBy(f => (f.partition, f.bucket)).map { case (_, fs) =>
+        ScanPlanner.groups(files).values.map { fs =>
           Split(fs.map(_.rowCount).sum, fs.map(_.fileSize).sum,
             fs.map(f => table.tableDir.resolve(f.fileName).toString))
         }.toSeq

@@ -68,45 +68,17 @@ class GraftChangelogStream(tableDir: Path, schema: TableSchema,
   }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val from = start.asInstanceOf[GraftOffset].snapshotId
-    val to = end.asInstanceOf[GraftOffset].snapshotId
-    ((from + 1) to to).flatMap { id =>
-      val snap =
-        try sm.snapshot(id)
-        catch {
-          case _: java.nio.file.NoSuchFileException =>
-            throw new IllegalStateException(s"Snapshot $id needed by this " +
-              "changelog stream was expired from the table's retention; " +
-              "restart from a retained snapshot (fromSnapshot option)")
-        }
-      if (snap.commitKind != "APPEND") Seq.empty
-      else {
-        val delta = snap.manifests.lastOption.toSeq.flatMap(sm.readManifest)
-          .filter(_.isAdd).map(_.file)
-        val baseline =
-          if (id == 1) Seq.empty
-          else sm.liveFiles(
-            // same retention guard as the delta read above: the
-            // BASELINE (id - 1) may be the snapshot just past the
-            // retention cutoff, and a raw NoSuchFileException here
-            // would replace the friendly restart instruction
-            try sm.snapshot(id - 1)
-            catch {
-              case _: java.nio.file.NoSuchFileException =>
-                throw new IllegalStateException(s"Snapshot ${id - 1} " +
-                  "(the retraction baseline) was expired from the " +
-                  "table's retention; restart from a retained snapshot " +
-                  "(fromSnapshot option)")
-            })
-        delta.groupBy(f => (f.partition, f.bucket)).map {
-          case ((part, bucket), deltaFiles) =>
-            val base = baseline.filter(f =>
-              f.partition == part && f.bucket == bucket)
-            GraftChangelogPartition(
-              deltaFiles.map(f => tableDir.resolve(f.fileName).toString).toArray,
-              base.map(f => tableDir.resolve(f.fileName).toString).toArray,
-              part.toArray, bucket)
-        }
+    def paths(fs: Seq[graft.format.DataFileMeta]): Array[String] =
+      fs.map(f => tableDir.resolve(f.fileName).toString).toArray
+    ScanPlanner.appendDeltas(sm, start.asInstanceOf[GraftOffset].snapshotId,
+      end.asInstanceOf[GraftOffset].snapshotId).flatMap { case (id, delta) =>
+      // the pre-commit state (id - 1) the delta's retractions are
+      // computed against, under the same retention guard as the delta
+      val baseline = ScanPlanner.groups(
+        if (id == 1) Seq.empty else sm.liveFiles(ScanPlanner.retained(sm, id - 1)))
+      ScanPlanner.groups(delta).map { case (group @ (part, bucket), deltaFiles) =>
+        GraftChangelogPartition(paths(deltaFiles),
+          paths(baseline.getOrElse(group, Seq.empty)), part.toArray, bucket)
       }
     }.toArray
   }

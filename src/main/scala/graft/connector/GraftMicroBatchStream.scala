@@ -178,28 +178,11 @@ class GraftMicroBatchStream(tableDir: Path, schema: TableSchema,
     GraftOffset(id)
   }
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val from = start.asInstanceOf[GraftOffset].snapshotId
-    val to = end.asInstanceOf[GraftOffset].snapshotId
-    ((from + 1) to to).flatMap { id =>
-      val snap =
-        try sm.snapshot(id)
-        catch {
-          case _: java.nio.file.NoSuchFileException =>
-            throw new IllegalStateException(s"Snapshot $id needed by this " +
-              "stream was expired from the table's retention; restart the " +
-              "stream from a retained snapshot (fromSnapshot option)")
-        }
-      if (snap.commitKind != "APPEND") Seq.empty
-      else {
-        // the snapshot's own delta manifest is the last in its list
-        val delta = snap.manifests.lastOption.toSeq.flatMap(sm.readManifest)
-        delta.filter(_.isAdd).map(_.file).map(f =>
-          GraftInputPartition(Array(tableDir.resolve(f.fileName).toString),
-            f.partition.toArray, f.bucket))
-      }
-    }.toArray
-  }
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    ScanPlanner.appendDeltas(sm, start.asInstanceOf[GraftOffset].snapshotId,
+      end.asInstanceOf[GraftOffset].snapshotId).flatMap(_._2).map(f =>
+      GraftInputPartition(Array(tableDir.resolve(f.fileName).toString),
+        f.partition.toArray, f.bucket)).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     // per-file raw reads: PK tables stream upsert rows without

@@ -18,11 +18,10 @@ import scala.collection.mutable
   *  - `pushFilters` keeps every conjunct as a post-scan filter (the
   *    reference's pushdown is best-effort too: "it is not guaranteed
   *    that it is a complete filter", `pypaimon/api/read_builder.py:30-34`)
-  *    and uses them for *pruning only*: partition values exactly,
-  *    key-column min/max per file, and bucket pruning when every
-  *    trimmed-pk field is equality-constrained. Pruning on NON-key
-  *    columns of PK tables is deliberately absent — that would
-  *    resurrect overwritten rows (`predicate_utils.py:22-56`).
+  *    except the partition-only ones [[ScanPlanner.enforceable]]
+  *    accepts, and hands them all to [[ScanPlanner]] for file pruning
+  *    (partition values, zone maps, buckets — the same selection the
+  *    facade's `TableScan.plan()` reports).
   *  - `pushLimit` is split-granular: planning stops adding append-table
   *    splits once their row count covers the limit; Spark's own
   *    GlobalLimit trims exactly (`test_pynative_reader.py:166-181`).
@@ -54,28 +53,6 @@ class GraftScanBuilder(tableDir: Path, schema: TableSchema,
   // planned state)
   private var pushedAgg
       : Option[(Seq[GraftAggScan.Spec], StructType, Option[Long])] = None
-
-  /** Shapes `Values.evalExact` decides under Kleene 3VL. A conjunct of
-    * such a shape referencing ONLY partition columns is enforced
-    * exactly by partition pruning (all rows of a file share the
-    * partition value; an undecided comparison means NULL semantics fail
-    * every row, so dropping the file is exact) — Spark then plans no
-    * residual Filter for it, and partition-restricted aggregates stay
-    * metadata-only.
-    */
-  private def decidable(f: Filter): Boolean = {
-    import org.apache.spark.sql.sources._
-    f match {
-      case _: EqualTo | _: EqualNullSafe | _: LessThan | _: LessThanOrEqual |
-           _: GreaterThan | _: GreaterThanOrEqual | _: In | _: IsNull |
-           _: IsNotNull | _: StringStartsWith | _: StringEndsWith |
-           _: StringContains => true
-      case And(l, r) => decidable(l) && decidable(r)
-      case Or(l, r) => decidable(l) && decidable(r)
-      case Not(c) => decidable(c)
-      case _ => false
-    }
-  }
 
   /** COUNT(*)/MIN/MAX over an append table are answered entirely from
     * manifest metadata (row counts + zone maps) — zero data files read,
@@ -148,11 +125,9 @@ class GraftScanBuilder(tableDir: Path, schema: TableSchema,
     // concurrent commits whose files may lack the checked stats.
     lazy val sm = new SnapshotManager(tableDir,
       io = graft.format.FileIO.resolve(schema.ioSpec))
-    lazy val aggSnapshot: Option[Long] =
-      pinnedSnapshot.orElse(sm.latestSnapshotId)
+    lazy val aggSnapshot = ScanPlanner.snapshot(sm, pinnedSnapshot)
     lazy val liveFiles: Seq[DataFileMeta] =
-      aggSnapshot.map(id => sm.liveFiles(sm.snapshotOrTagged(id)))
-        .getOrElse(Seq.empty)
+      aggSnapshot.map(sm.liveFiles).getOrElse(Seq.empty)
     def countable(e: org.apache.spark.sql.connector.expressions.Expression)
         : Option[String] = e match {
       case nr: NamedReference if nr.fieldNames().length == 1 =>
@@ -188,7 +163,7 @@ class GraftScanBuilder(tableDir: Path, schema: TableSchema,
       Some(((groupCols.map(GraftAggScan.GroupBy.apply) ++
         specs.flatten.map(_._1)),
         StructType(groupFields ++ specs.flatten.map(_._2)),
-        if (needsPin) aggSnapshot else pinnedSnapshot))
+        if (needsPin) aggSnapshot.map(_.id) else pinnedSnapshot))
     }
   }
 
@@ -206,22 +181,14 @@ class GraftScanBuilder(tableDir: Path, schema: TableSchema,
     val acceptable = rowLevelOp.isEmpty && !changelogView && incremental.isEmpty
     accepted =
       if (!acceptable) Array.empty
-      else f.filter(flt => flt.references.nonEmpty &&
-        flt.references.forall(schema.partitionKeys.contains) && decidable(flt))
+      else f.filter(ScanPlanner.enforceable(schema, _))
     // partition-only decidable conjuncts are enforced by pruning; the
     // rest are re-evaluated by Spark post-scan (defense in depth)
     f.filterNot(accepted.contains)
   }
 
-  override def pushedFilters(): Array[Filter] = {
-    // Report the prunable subset: partition/key columns for PK tables;
-    // append tables carry any-column zone maps, so everything prunes.
-    val prunable =
-      if (schema.isPrimaryKeyTable)
-        (schema.partitionKeys ++ schema.trimmedPrimaryKeys).toSet
-      else schema.fields.fieldNames.toSet
-    filters.filter(_.references.forall(prunable.contains))
-  }
+  override def pushedFilters(): Array[Filter] =
+    ScanPlanner.prunable(schema, filters.toSeq).toArray
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
@@ -415,24 +382,46 @@ class GraftScan(tableDir: Path, schema: TableSchema, required: StructType,
   }
 
   override def description(): String = {
-    val snap = pinnedSnapshot.orElse(
-      new SnapshotManager(tableDir, io = graft.format.FileIO.resolve(schema.ioSpec)).latestSnapshotId).getOrElse(-1L)
-    val pin = if (pinnedSnapshot.isDefined) " (time travel)" else ""
-    s"GraftScan(snapshot=$snap$pin, pruneBy=[${filters.mkString(", ")}], limit=$limit)"
+    val read = range match {
+      case Some((from, to)) => s"snapshots=($from, $to]"
+      case None =>
+        val pin = if (pinnedSnapshot.isDefined) " (time travel)" else ""
+        s"snapshot=${snapshot.fold(-1L)(_.id)}$pin"
+    }
+    s"GraftScan($read, pruneBy=[${filters.mkString(", ")}], limit=$limit)"
   }
 
-  /** Live files at the scan's snapshot, after partition / key-stats /
-    * bucket pruning. Memoized per runtime-filter state: Spark calls
-    * estimateStatistics, outputPartitioning, AND planInputPartitions
-    * on the same Scan, and each ride this — uncached, one query paid
-    * the snapshot + full manifest read three times (multiplied on the
-    * manifest counts the 100 TB case carries). Runtime filters
-    * (dynamic partition pruning, row-level _file groups) arrive AFTER
-    * the first call, so the key is that mutable state; a changed key
-    * recomputes. Caching also pins planning to ONE snapshot
-    * resolution per state — re-resolving per call could let a racing
-    * commit desync the partition count outputPartitioning advertised
-    * from the partitions actually planned.
+  private lazy val sm =
+    new SnapshotManager(tableDir, io = graft.format.FileIO.resolve(schema.ioSpec))
+
+  /** The scan's snapshot, resolved once, on first use, through
+    * [[ScanPlanner]]; [[live]] holds its files. Statistics, partitioning,
+    * planning and the description all see this one snapshot, and
+    * runtime filters that arrive later re-prune the same live set, so a
+    * commit racing the scan cannot make it advertise the partitions of
+    * one snapshot and read those of the next.
+    */
+  private lazy val snapshot: Option[graft.format.Snapshot] =
+    ScanPlanner.snapshot(sm, pinnedSnapshot)
+
+  /** An incremental read's (from, to], `to` clamped to the latest id. */
+  private lazy val range: Option[(Long, Long)] = incremental.map {
+    case (from, to) => (from, math.min(to, sm.latestSnapshotId.getOrElse(0L)))
+  }
+
+  /** The files the scan may read before pruning: the snapshot's live
+    * files, or the APPEND deltas of an incremental read's range.
+    */
+  private lazy val live: Seq[DataFileMeta] = range match {
+    case Some((from, to)) => ScanPlanner.appendDeltas(sm, from, to).flatMap(_._2)
+    case None => snapshot.map(sm.liveFiles).getOrElse(Seq.empty)
+  }
+
+  /** Files after pruning and the runtime filters. Memoized per
+    * runtime-filter state: Spark calls estimateStatistics,
+    * outputPartitioning AND planInputPartitions on the same Scan, and
+    * runtime filters (dynamic partition pruning, row-level _file groups)
+    * arrive after the first call, so the key is that mutable state.
     */
   @volatile private var filesCache
       : Option[(Seq[Filter], Option[Set[String]], Seq[DataFileMeta])] = None
@@ -449,112 +438,22 @@ class GraftScan(tableDir: Path, schema: TableSchema, required: StructType,
     }
   }
 
+  private def abs(f: DataFileMeta): String = tableDir.resolve(f.fileName).toString
+
   private def computePrunedFiles(): Seq[DataFileMeta] = {
-    val sm = new SnapshotManager(tableDir, io = graft.format.FileIO.resolve(schema.ioSpec))
-    val files = incremental match {
-      case Some((from, to)) =>
-        // snapshot-range diff: the delta manifests of APPEND commits in
-        // (from, to] — the batch counterpart of the streaming source
-        sm.existingSnapshotIds.filter(id => id > from && id <= to)
-          .map(sm.snapshot).filter(_.commitKind == "APPEND")
-          .flatMap(s => s.manifests.lastOption.toSeq.flatMap(sm.readManifest)
-            .filter(_.isAdd).map(_.file))
-      case None => pinnedSnapshot match {
-        case Some(id) => sm.liveFiles(sm.snapshotOrTagged(id))
-        case None => sm.liveFilesLatest
-      }
-    }
-    val pTypes = schema.partitionKeys
-      .map(k => k -> schema.fields(schema.fields.fieldIndex(k)).dataType).toMap
-
-    // 1. partition pruning (exact evaluation on partition values),
-    // including any runtime (DPP) filters delivered after planning
-    val partFilters = filters ++ runtimeFilters
-    val afterPartition = files.filter { f =>
-      val value: String => Option[Any] = c =>
-        schema.partitionKeys.indexOf(c) match {
-          case -1 => None
-          case i => Some(Values.parse(pTypes(c), f.partition(i)))
-        }
-      partFilters.forall(flt =>
-        Values.evalExact(flt, pTypes.get, value).getOrElse(true)) &&
-        // accepted conjuncts carry no residual Filter above the scan —
-        // enforcement is HERE and must be strict: undecided ⇒ NULL
-        // semantics ⇒ no row qualifies ⇒ drop the file
-        acceptedFilters.forall(flt =>
-          Values.evalExact(flt, pTypes.get, value).contains(true))
-    }
-
-    // 2. zone-map pruning: PK tables may prune only on trimmed-pk
-    // bounds (anything else would resurrect overwritten rows); append
-    // tables carry bounds for every primitive column, so any filtered
-    // column can skip files
-    val statCols =
-      if (schema.isPrimaryKeyTable) schema.trimmedPrimaryKeys
-      else schema.fields.fieldNames.toSeq.filterNot(schema.partitionKeys.contains)
-    val keyTypes = statCols
-      .map(k => k -> schema.fields(schema.fields.fieldIndex(k)).dataType).toMap
-    def statsAdmit(f: DataFileMeta): Boolean =
-      filters.forall(flt =>
-        Values.evalRange(flt, keyTypes.get,
-          c => f.keyStats.get(c)).getOrElse(true)) &&
-        (schema.isPrimaryKeyTable || filters.forall {
-          // exact null counts (top-level conjuncts only; nested shapes
-          // fall through to true — pruning is an optimization)
-          case org.apache.spark.sql.sources.IsNull(c) =>
-            f.nullCounts.get(c).forall(_ > 0)
-          case org.apache.spark.sql.sources.IsNotNull(c) =>
-            f.nullCounts.get(c).forall(_ < f.rowCount)
-          case _ => true
-        })
-    // A PK COPY-ON-WRITE rewrite scan re-merges and REPLACES whole
-    // (partition, bucket) groups: FILE-granular zone-map pruning here
-    // would drop group-mates holding OTHER keys' newest versions from
-    // the re-merge, while the replacement rows carry fresh top
-    // sequences — the pruned files' newer rows would silently lose the
-    // read-time merge forever after (sequence rewind = data loss;
-    // caught by the lifecycle fuzz's sequence-group walks;
-    // CowGroupRewriteSpec). Such scans prune at GROUP granularity
-    // instead: a (partition, bucket) group survives when ANY member
-    // file's stats admit the predicate, and it survives or drops as a
-    // unit — so a key-predicated COW DML still skips every untouched
-    // group even when Spark's runtime _file group filter is disabled
-    // or its filter shape doesn't arrive, without ever re-merging a
-    // subset of a group. Plain reads keep file-granular pruning — the
-    // merge winner for any surviving key never lives in a file the
-    // key predicate pruned.
-    val afterStats =
-      if (rowLevelOp.isDefined && schema.isPrimaryKeyTable) {
-        val keep = afterPartition.filter(statsAdmit)
-          .map(f => (f.partition, f.bucket)).toSet
-        afterPartition.filter(f => keep.contains((f.partition, f.bucket)))
-      } else afterPartition.filter(statsAdmit)
-
-    // 3. bucket pruning: all trimmed-pk fields fixed by EqualTo conjuncts
-    val eqs = topLevelEqualities(filters)
-    val targetBucket: Option[Int] =
-      if (schema.isPrimaryKeyTable &&
-        schema.trimmedPrimaryKeys.forall(eqs.contains)) {
-        val keyStrs = schema.trimmedPrimaryKeys.map { k =>
-          Values.encode(keyTypes(k), Values.toInternal(keyTypes(k), eqs(k)))
-        }
-        Some(Values.bucketOf(keyStrs, schema.numBuckets))
-      } else None
-    val afterBucket0 = targetBucket match {
-      case Some(b) => afterStats.filter(_.bucket == b)
-      case None => afterStats
-    }
-    // 4. row-level runtime group filter: keep the groups that own the
+    // DPP filters are partition-only, so they prune like pushed ones
+    val pruned = ScanPlanner.prune(schema, live, filters ++ runtimeFilters,
+      acceptedFilters, groupGranular = rowLevelOp.isDefined && schema.isPrimaryKeyTable)
+    // row-level runtime group filter: keep the groups that own the
     // named files (whole buckets for PK tables — the merge unit)
     runtimeFiles match {
       case Some(named) =>
-        def abs(f: DataFileMeta): String = tableDir.resolve(f.fileName).toString
         if (schema.isPrimaryKeyTable && !changelogView) {
-          val groups = afterBucket0.filter(f => named.contains(abs(f)))
+          val groups = pruned.filter(f => named.contains(abs(f)))
             .map(f => (f.partition, f.bucket)).toSet
-          afterBucket0.filter(f => groups.contains((f.partition, f.bucket)))
-        } else afterBucket0.filter(f => named.contains(abs(f)))
-      case None => afterBucket0
+          pruned.filter(f => groups.contains((f.partition, f.bucket)))
+        } else pruned.filter(f => named.contains(abs(f)))
+      case None => pruned
     }
   }
 
@@ -585,15 +484,12 @@ class GraftScan(tableDir: Path, schema: TableSchema, required: StructType,
         "the $changelog view; the base table always reads a full snapshot " +
         "(for streaming, fromSnapshot sets the start offset on any table)")
     val afterBucket = prunedFiles()
-
-    def abs(f: DataFileMeta): String = tableDir.resolve(f.fileName).toString
+    val pTypes = schema.partitionKeys.map(schema.fields(_).dataType)
     // record the replaced-group file set for the row-level commit
     rowLevelOp.foreach(_.planned.set(afterBucket.map(abs)))
 
     if (schema.isPrimaryKeyTable && !changelogView) {
-      val pTypes = schema.partitionKeys.map(k =>
-        schema.fields(schema.fields.fieldIndex(k)).dataType)
-      afterBucket.groupBy(f => (f.partition, f.bucket)).map {
+      ScanPlanner.groups(afterBucket).map {
         case ((part, bucket), fs) =>
           val keyVals: Array[Any] = (part.zip(pTypes).map { case (v, dt) =>
             Values.parse(dt, v)
@@ -610,8 +506,6 @@ class GraftScan(tableDir: Path, schema: TableSchema, required: StructType,
           }
         case None => afterBucket
       }
-      val pTypes = schema.partitionKeys.map(k =>
-        schema.fields(schema.fields.fieldIndex(k)).dataType)
       // bin-pack small files into target-sized splits (Spark's
       // FilePartition sizing rule): a small-file-heavy table must not
       // cost one task per file at 100 TB, and a small corpus must not
@@ -630,7 +524,7 @@ class GraftScan(tableDir: Path, schema: TableSchema, required: StructType,
       // cluster-parallelism floor
       val target = schema.splitTargetSize.getOrElse(math.min(MaxSplit,
         math.max(OpenCost, totalCost / parallelism + 1)))
-      selected.groupBy(f => (f.partition, f.bucket)).iterator.flatMap {
+      ScanPlanner.groups(selected).iterator.flatMap {
         case ((part, bucket), fs) =>
           val keyVals: Array[Any] = part.zip(pTypes).map {
             case (v, dt) => Values.parse(dt, v)
@@ -654,9 +548,6 @@ class GraftScan(tableDir: Path, schema: TableSchema, required: StructType,
     }
   }
 
-  private def topLevelEqualities(fs: Array[Filter]): Map[String, Any] =
-    fs.collect { case org.apache.spark.sql.sources.EqualTo(c, v) => c -> v }.toMap
-
   override def createReaderFactory(): PartitionReaderFactory =
     GraftReaderFactory(schema.fields.json, schema.partitionKeys,
       schema.trimmedPrimaryKeys, schema.isPrimaryKeyTable, required.json,
@@ -667,9 +558,10 @@ class GraftScan(tableDir: Path, schema: TableSchema, required: StructType,
       // A row-level rewrite scan must surface EVERY row of the groups
       // it reads — its pushed condition selects which rows get
       // DELETED/UPDATED, so it may only prune whole groups (files),
-      // never records. All other scans pass their conjuncts down for
-      // row-group + record skipping.
-      dataFilters = if (rowLevelOp.isDefined) Seq.empty else filters.toSeq)
+      // never records. All other scans pass their prunable conjuncts
+      // down for row-group and page skipping.
+      dataFilters =
+        if (rowLevelOp.isDefined) Seq.empty else ScanPlanner.prunable(schema, filters.toSeq))
 }
 
 /** Executor-side reader ≙ the pynative operator pipeline: concat of
@@ -686,6 +578,8 @@ final case class GraftReaderFactory(
     requiredJson: String,
     merge: Boolean = true,
     fieldIds: Map[String, Int] = Map.empty,
+    // row-group and page skipping only: [[ScanPlanner.prunable]]
+    // conjuncts, which are sound below the merge
     dataFilters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty,
     ioSpec: String = "local",
     sortEngine: String = "min-heap",
@@ -783,19 +677,6 @@ final case class GraftReaderFactory(
         f.name == "_VALUE_KIND" || requiredData.contains(f.name)))
     else StructType(dataFields.fields.filter(f => requiredData.contains(f.name)))
 
-    // Sub-file skipping must never see VALUE-column conjuncts on a PK
-    // table: dropping an old key version whose value matches while its
-    // newer overwrite doesn't would resurrect the old row through the
-    // merge (the scan keeps such conjuncts in `filters` for zone-map
-    // stats, they are NOT safe below the merge). Key/partition
-    // conjuncts keep every version of a surviving key — safe. Rows of
-    // surviving pages are not filtered here; Spark re-applies every
-    // conjunct above the scan.
-    val safeFilters =
-      if (isPk) dataFilters.filter(_.references.forall(r =>
-        trimmedPk.contains(r) || partitionKeys.contains(r)))
-      else dataFilters
-
     // one run per file, tagged with its path (`_file`). Every opened
     // run is kept so PartitionReader.close() can release it on EARLY
     // termination (limit/take, join short-circuit, task kill) — runs
@@ -803,7 +684,7 @@ final case class GraftReaderFactory(
     val opened = mutable.ArrayBuffer.empty[graft.format.SortMergeReader.Run]
     def open(f: String) = opened.addOne(graft.format.SortMergeReader.open(f,
       if (isPk) kvFileSchema else dataFields, readSchema, fieldIds, ioSpec,
-      safeFilters)).last
+      dataFilters)).last
     val seqIdx = readSchema.fieldNames.indexOf("_SEQUENCE_NUMBER")
     val kindIdx = readSchema.fieldNames.indexOf("_VALUE_KIND")
     val rows: Iterator[(String, InternalRow)] =
@@ -928,22 +809,9 @@ final class GraftAggScan(tableDir: Path, schema: TableSchema,
 
   override def planInputPartitions(): Array[InputPartition] = {
     val sm = new SnapshotManager(tableDir, io = graft.format.FileIO.resolve(schema.ioSpec))
-    val allFiles = pinnedSnapshot match {
-      case Some(id) => sm.liveFiles(sm.snapshotOrTagged(id))
-      case None => sm.liveFilesLatest
-    }
-    // accepted partition-only conjuncts (strict: undecided ⇒ drop)
-    val pTypes = schema.partitionKeys
-      .map(k => k -> schema.fields(schema.fields.fieldIndex(k)).dataType).toMap
-    val files = allFiles.filter { f =>
-      val value: String => Option[Any] = c =>
-        schema.partitionKeys.indexOf(c) match {
-          case -1 => None
-          case i => Some(Values.parse(pTypes(c), f.partition(i)))
-        }
-      acceptedFilters.forall(flt =>
-        Values.evalExact(flt, pTypes.get, value).contains(true))
-    }
+    // the accepted partition-only conjuncts, enforced strictly
+    val files = ScanPlanner.prune(schema,
+      ScanPlanner.liveFiles(sm, pinnedSnapshot), Seq.empty, acceptedFilters)
     val groupCols = specs.collect { case GraftAggScan.GroupBy(c) => c }
     val groupIdx = groupCols.map(schema.partitionKeys.indexOf)
     // one output row per distinct combination of the grouped partition

@@ -87,25 +87,10 @@ class GraftTable(ident: Identifier, val tableDir: Path, val tableSchema: TableSc
   override def deleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
     val sm = new graft.format.SnapshotManager(tableDir,
       io = graft.format.FileIO.resolve(tableSchema.ioSpec))
-    val live = sm.liveFilesLatest
-    val pTypes = tableSchema.partitionKeys
-      .map(k => k -> tableSchema.fields(tableSchema.fields.fieldIndex(k)).dataType).toMap
-    val doomed = live.filter { f =>
-      val value: String => Option[Any] = c =>
-        tableSchema.partitionKeys.indexOf(c) match {
-          case -1 => None
-          case i => Some(Values.parse(pTypes(c), f.partition(i)))
-        }
-      filters.forall {
-        // unconditional DELETE FROM t arrives as [AlwaysTrue]
-        // (references empty → canDeleteWhere accepts it); evalExact has
-        // no case for it, and getOrElse(false) would skip every file —
-        // a DELETE that reports success and deletes nothing
-        case _: org.apache.spark.sql.sources.AlwaysTrue => true
-        case _: org.apache.spark.sql.sources.AlwaysFalse => false
-        case flt => Values.evalExact(flt, pTypes.get, value).getOrElse(false)
-      }
-    }
+    // strict: a file goes only when its partition decides every conjunct
+    // true (an unconditional DELETE FROM t arrives as [AlwaysTrue])
+    val doomed = ScanPlanner.liveFiles(sm, None)
+      .filter(ScanPlanner.partitionAdmits(tableSchema, filters.toSeq, strict = true))
     if (doomed.nonEmpty)
       graft.format.FileStoreCommit.commitFileDeletes(sm, tableSchema.id,
         doomed.map(_.fileName).toSet)

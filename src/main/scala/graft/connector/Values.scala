@@ -159,6 +159,8 @@ object Values {
           case _ => None
         }
       case Not(c) => evalExact(c, dt, value).map(!_)
+      case _: AlwaysTrue => Some(true)
+      case _: AlwaysFalse => Some(false)
       case _ => None
     }
   }

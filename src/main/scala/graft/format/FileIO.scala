@@ -17,9 +17,9 @@ import scala.jdk.CollectionConverters._
   *  - [[writeAtomic]] must never expose a partial file (temp + rename
   *    locally, single PUT on a store).
   *  - [[putIfAbsent]] is the commit primitive (create-exclusive link
-  *    locally, conditional PUT on a store) — see [[AtomicPublisher]],
-  *    whose standalone implementations ([[S3Publisher]]) plug into
-  *    [[SnapshotManager]] unchanged.
+  *    locally, conditional PUT on a store) — see [[AtomicPublisher]];
+  *    [[SnapshotManager]] publishes through it unless handed an explicit
+  *    publisher.
   *  - [[stageForRead]]/[[publishFile]] bridge format libraries
   *    (parquet/orc/avro) that require real local files: local IO is
   *    zero-copy, remote IO stages through a temp file.

@@ -5,12 +5,11 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.{Files, Path}
 
-/** [[FileIO]] over any S3-compatible object store — the data-path end
-  * of the object-store story ([[S3Publisher]] being the commit end,
-  * now subsumed by [[putIfAbsent]] here). Built, like the publisher,
-  * on public protocol specifications only: the S3 REST API (GET/PUT/
-  * HEAD/DELETE + ListObjectsV2) signed with AWS Signature V4, on the
-  * bare JDK. No vendor SDK ships in this container, so the contract
+/** [[FileIO]] over any S3-compatible object store: the data path and
+  * the commit primitive ([[putIfAbsent]], a conditional PUT with
+  * `If-None-Match: *`). Built on public protocol specifications only:
+  * the S3 REST API (GET/PUT/HEAD/DELETE + ListObjectsV2) signed with
+  * AWS Signature V4, on the bare JDK. No vendor SDK ships in this container, so the contract
   * test drives it against a local in-memory HTTP stub; the protocol
   * surface used (conditional PUT, list-type=2 with prefix+delimiter)
   * is the stable, documented core that AWS S3, GCS XML, MinIO and

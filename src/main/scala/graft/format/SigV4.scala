@@ -8,9 +8,9 @@ import javax.crypto.spec.SecretKeySpec
 
 /** AWS Signature Version 4 request signing on the bare JDK — a public
   * protocol specification (the "Authenticating Requests (AWS Signature
-  * Version 4)" chapter of the S3 API reference), shared by
-  * [[S3Publisher]] (snapshot pointer swap) and [[S3FileIO]] (the full
-  * data path). No vendor SDK.
+  * Version 4)" chapter of the S3 API reference), used by [[S3FileIO]]
+  * for every request, its conditional-PUT snapshot publish included.
+  * No vendor SDK.
   */
 private[format] object SigV4 {
 

@@ -71,7 +71,7 @@ final class SnapshotManager(val tableDir: Path,
 
   // default publisher = the FileIO's own commit primitive, so a
   // non-local io commits through its conditional PUT; an explicit
-  // publisher ([[S3Publisher]], test doubles) still overrides it
+  // publisher (a test double) still overrides it
   private val pub: AtomicPublisher =
     if (publisher != null) publisher
     else (target: Path, content: String) => io.putIfAbsent(target, content)

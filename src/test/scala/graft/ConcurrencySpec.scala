@@ -115,7 +115,7 @@ class ConcurrencySpec extends AnyFunSuite {
     })
     server.start()
     try {
-      val pub = new graft.format.S3Publisher(
+      val pub = new graft.format.S3FileIO(
         endpoint = java.net.URI.create(
           s"http://127.0.0.1:${server.getAddress.getPort}"),
         region = "us-east-1", bucket = "lake",

@@ -525,6 +525,34 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("changelog"))
   }
 
+  test("incremental batch read over an expired range fails like the streams") {
+    spark.sql("CREATE TABLE graft.default.s_inc_exp (k BIGINT, v STRING) " +
+      "TBLPROPERTIES ('primary-key'='k','bucket'='1')")
+    (1 to 3).foreach(i =>
+      spark.sql(s"INSERT INTO graft.default.s_inc_exp VALUES ($i,'v$i')"))
+    val expired = spark.sql(
+      "CALL graft.sys.expire_snapshots('default.s_inc_exp', 1)")
+      .collect()(0).getInt(0)
+    assert(expired == 2, s"retaining 1 of 3 snapshots expires 2: $expired")
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty
+      else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    // (1, 3] needs snapshot 2: the batch read must not silently return
+    // snapshot 3's rows alone
+    val e = intercept[Exception] {
+      spark.read.option("fromSnapshot", "1")
+        .table("graft.default.`s_inc_exp$changelog`").collect()
+    }
+    assert(messages(e).exists(_.contains(
+      "Snapshot 2 needed by this read was expired from the table's retention")),
+      s"expected a retention error, got: ${messages(e).mkString(" | ")}")
+    // the retained suffix still reads
+    val tail = spark.read.option("fromSnapshot", "2")
+      .table("graft.default.`s_inc_exp$changelog`")
+      .collect().map(_.getLong(0))
+    assert(tail.toSeq == Seq(3L))
+  }
+
   test("fromSnapshot=-1 streams only new commits (scan-from-latest)") {
     spark.sql("CREATE TABLE graft.default.s_latest (k BIGINT)")
     spark.sql("INSERT INTO graft.default.s_latest VALUES (1)")
