@@ -342,9 +342,9 @@ final class TableScan(table: GraftTableHandle,
     // Spark 4 Columns are ColumnNode trees; the shim walks the exact
     // unresolved shapes PredicateBuilder constructs into
     // sources.Filter conjuncts (unknown shapes → nothing: pruning
-    // only over-approximates)
-    val srcFilters = filter.toSeq.flatMap(p =>
-      org.apache.spark.sql.GraftShims.sourceFilters(p.column))
+    // only over-approximates), their literals coerced to column types
+    val srcFilters = ScanPlanner.coerced(ts, filter.toSeq.flatMap(p =>
+      org.apache.spark.sql.GraftShims.sourceFilters(p.column)))
     val files = ScanPlanner.prune(ts,
       ScanPlanner.liveFiles(table.snapshotManager, None), srcFilters)
     val all =

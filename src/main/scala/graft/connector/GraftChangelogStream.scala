@@ -4,10 +4,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow,
   JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.Offset
 import org.apache.spark.sql.types._
 import graft.core.{RowKind, TableSchema}
-import graft.format.{DataFileWriter, SnapshotManager, SortMergeReader}
+import graft.format.{DataFileWriter, SortMergeReader}
 import java.nio.file.Path
 import scala.collection.mutable
 
@@ -23,49 +23,19 @@ import scala.collection.mutable
   * of the touched buckets only; baseline state is a bucket-local map
   * (the lookup producer's classic trade — bounded by bucket size, no
   * shuffle).
+  *
+  * Consumer progress shares the plain stream's offset space (snapshot
+  * ids) and `consumers/` directory. Expiry keeps `floor - 1` precisely
+  * so this stream's pre-commit BASELINE (snapshot id-1 of the first
+  * unread id) survives retention.
   */
 class GraftChangelogStream(tableDir: Path, schema: TableSchema,
     required: StructType,
     startSnapshot: Option[Long] = None,
     consumerId: Option[String] = None,
     maxPerTrigger: Option[Long] = None)
-  extends MicroBatchStream with GraftAvailableNowStream {
-
-  private val io = graft.format.FileIO.resolve(schema.ioSpec)
-  private val sm = new SnapshotManager(tableDir, io = io)
-
-  override protected def currentLatestSnapshotId: Long =
-    sm.latestSnapshotId.getOrElse(0L)
-
-  override protected def maxSnapshotsPerTrigger: Option[Long] = maxPerTrigger
-
-  // consumer seeding/advancement ≙ GraftMicroBatchStream (shared in
-  // GraftAvailableNowStream): same offset space (snapshot ids), same
-  // consumers/ directory. A consumer-id names ONE logical pipeline
-  // across its restarts — progress is a monotonic max, so two
-  // CONCURRENT streams sharing an id would let the faster one unpin
-  // the laggard's unread range; run each concurrent stream under its
-  // own id. Expiry keeps `floor - 1` precisely so this stream's
-  // pre-commit BASELINE (snapshot id-1 of the first unread id)
-  // survives retention.
-  override protected def consumerContext
-      : Option[(java.nio.file.Path, graft.format.FileIO, String)] =
-    consumerId.map(id => (tableDir, io, id))
-
-  override def initialOffset(): Offset = GraftOffset(startSnapshot match {
-    case Some(-1L) => sm.latestSnapshotId.getOrElse(0L)
-    case Some(id) => id
-    case None => consumerSeed.getOrElse(0L)
-  })
-  // not called once SupportsAdmissionControl is implemented; Spark
-  // routes through latestOffset(start, limit)
-  override def latestOffset(): Offset = GraftOffset(currentLatestSnapshotId)
-  override def deserializeOffset(json: String): Offset = {
-    val id = "\"snapshotId\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(json)
-      .map(_.group(1).toLong)
-      .getOrElse(throw new IllegalArgumentException(s"Bad offset: $json"))
-    GraftOffset(id)
-  }
+  extends GraftAvailableNowStream(tableDir, schema, startSnapshot,
+    consumerId, maxPerTrigger) {
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     def paths(fs: Seq[graft.format.DataFileMeta]): Array[String] =
@@ -98,8 +68,6 @@ class GraftChangelogStream(tableDir: Path, schema: TableSchema,
       ioSpec = schema.ioSpec,
       sortEngine = schema.options.getOrElse("sort-engine", "min-heap"))
   }
-
-  override def stop(): Unit = ()
 }
 
 final case class GraftChangelogPartition(

@@ -7,24 +7,45 @@ import graft.core.TableSchema
 import graft.format.SnapshotManager
 import java.nio.file.Path
 
-/** AvailableNow contract for snapshot-offset streams: pin the latest
-  * committed snapshot id when the trigger starts, then report the pinned
-  * id as the latest offset until the stream drains it and stops. Without
-  * this, Spark logs "does not support Trigger.AvailableNow. Falling back
-  * to single batch execution" and the drain-everything-then-stop
-  * guarantee rests on there being no concurrent commits — with it, a
-  * commit landing mid-stream is deterministically excluded (it belongs
-  * to the next trigger).
+/** Base of both snapshot-offset streams (the plain table stream and the
+  * retraction changelog): offsets are snapshot ids ([[GraftOffset]]),
+  * read through one `SnapshotManager`, optionally recorded as consumer
+  * progress. Subclasses supply only `planInputPartitions` and
+  * `createReaderFactory`.
+  *
+  * AvailableNow contract: pin the latest committed snapshot id when the
+  * trigger starts, then report the pinned id as the latest offset until
+  * the stream drains it and stops. Without this, Spark logs "does not
+  * support Trigger.AvailableNow. Falling back to single batch
+  * execution" and the drain-everything-then-stop guarantee rests on
+  * there being no concurrent commits — with it, a commit landing
+  * mid-stream is deterministically excluded (it belongs to the next
+  * trigger).
+  *
+  * A consumer-id names ONE logical pipeline across its restarts —
+  * progress is a monotonic max, so two CONCURRENT streams sharing an id
+  * would let the faster one unpin the laggard's unread range; run each
+  * concurrent stream under its own id.
+  *
+  * @param maxSnapshotsPerTrigger `max-snapshots-per-trigger` read
+  *   option: cap each micro-batch at this many snapshot ids past its
+  *   start. At scale a catch-up read over a long snapshot history must
+  *   not plan one giant batch (task count and shuffle state
+  *   proportional to the WHOLE backlog); capping turns the drain into
+  *   bounded batches, each committing its own offset — which also makes
+  *   an AvailableNow drain multi-batch, with per-batch durable consumer
+  *   progress instead of all-or-nothing. None = drain everything.
   */
-trait GraftAvailableNowStream extends SupportsTriggerAvailableNow {
-  /** Current latest committed snapshot id (0 when the table is empty). */
-  protected def currentLatestSnapshotId: Long
+abstract class GraftAvailableNowStream(tableDir: Path, schema: TableSchema,
+    startSnapshot: Option[Long], consumerId: Option[String],
+    maxSnapshotsPerTrigger: Option[Long])
+  extends MicroBatchStream with SupportsTriggerAvailableNow {
 
-  /** `(tableDir, io, consumerId)` when this stream records consumer
-    * progress ([[graft.format.Consumers]]); None = no bookkeeping.
-    */
-  protected def consumerContext
-      : Option[(Path, graft.format.FileIO, String)] = None
+  private val io = graft.format.FileIO.resolve(schema.ioSpec)
+  protected val sm = new SnapshotManager(tableDir, io = io)
+
+  /** Current latest committed snapshot id (0 when the table is empty). */
+  private def currentLatestSnapshotId: Long = sm.latestSnapshotId.getOrElse(0L)
 
   /** Durable-progress hook for consumer files: `consumedThrough` is the
     * snapshot id everything at or below which has been committed to
@@ -49,31 +70,40 @@ trait GraftAvailableNowStream extends SupportsTriggerAvailableNow {
     * the pin — rewinding is `CALL sys.reset_consumer`.
     */
   @volatile private var lastRecorded: (Long, Long) = (Long.MinValue, 0L)
-  protected final def onDurableProgress(consumedThrough: Long): Unit =
-    consumerContext.foreach { case (dir, io, id) =>
+  private def onDurableProgress(consumedThrough: Long): Unit =
+    consumerId.foreach { id =>
       val next = consumedThrough + 1
       val now = System.currentTimeMillis()
       if (next > lastRecorded._1 || now - lastRecorded._2 >= 60000L) {
-        graft.format.Consumers.record(dir, io, id, next)
+        graft.format.Consumers.record(tableDir, io, id, next)
         lastRecorded = (math.max(next, lastRecorded._1), now)
       }
     }
 
-  /** Consumer-recorded start offset for a FRESH checkpoint (pipeline
-    * checkpoint relocation without history replay); None without a
-    * consumer or a recorded file.
+  /** First offset: 0 (full replay), a specific snapshot id, or -1 for
+    * "latest" (only new commits stream — the scan-from-now mode a
+    * large table needs; replaying 100 TB of history is not a default
+    * anyone wants by accident, but 0 preserves batch/stream parity).
+    * A registered consumer's recorded progress seeds a FRESH
+    * checkpoint (this method is only consulted when the checkpoint has
+    * no offsets) unless an explicit fromSnapshot overrides it — so a
+    * pipeline can relocate its checkpoint without replaying history,
+    * exactly what the consumer file is for.
     */
-  protected final def consumerSeed: Option[Long] =
-    consumerContext.flatMap { case (dir, io, id) =>
-      graft.format.Consumers.get(dir, io, id).map(_.nextSnapshot - 1)
-    }
+  override def initialOffset(): Offset = GraftOffset(startSnapshot match {
+    case Some(-1L) => currentLatestSnapshotId
+    case Some(id) => id
+    case None => consumerId
+      .flatMap(id => graft.format.Consumers.get(tableDir, io, id))
+      .fold(0L)(_.nextSnapshot - 1)
+  })
 
   /** Fires only while a further batch is being constructed (never
     * after an AvailableNow drain — onDurableProgress via latestOffset
     * covers that); kept for the freshest possible pin on
     * continuously-triggered streams.
     */
-  def commit(end: Offset): Unit =
+  override def commit(end: Offset): Unit =
     onDurableProgress(end.asInstanceOf[GraftOffset].snapshotId)
 
   @volatile private var pinned: Option[Long] = None
@@ -83,21 +113,14 @@ trait GraftAvailableNowStream extends SupportsTriggerAvailableNow {
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
-  /** `max-snapshots-per-trigger` read option: cap each micro-batch at
-    * this many snapshot ids past its start. At scale a catch-up read
-    * over a long snapshot history must not plan one giant batch (task
-    * count and shuffle state proportional to the WHOLE backlog);
-    * capping turns the drain into bounded batches, each committing its
-    * own offset — which also makes an AvailableNow drain multi-batch,
-    * with per-batch durable consumer progress instead of
-    * all-or-nothing. None = drain everything (the default).
-    */
-  protected def maxSnapshotsPerTrigger: Option[Long] = None
+  // not called once SupportsAdmissionControl is implemented; Spark
+  // routes through latestOffset(start, limit)
+  override def latestOffset(): Offset = GraftOffset(currentLatestSnapshotId)
 
   /** Admission-control latestOffset: the pinned id under AvailableNow,
     * live otherwise (micro-batch triggers also route through this once
     * the source implements SupportsAdmissionControl), capped by
-    * [[maxSnapshotsPerTrigger]].
+    * `maxSnapshotsPerTrigger`.
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[GraftOffset].snapshotId
@@ -108,6 +131,20 @@ trait GraftAvailableNowStream extends SupportsTriggerAvailableNow {
       case _ => target
     })
   }
+
+  override def deserializeOffset(json: String): Offset = {
+    val id = "\"snapshotId\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(json)
+      .map(_.group(1).toLong)
+      .getOrElse(throw new IllegalArgumentException(s"Bad offset: $json"))
+    GraftOffset(id)
+  }
+
+  override def stop(): Unit = ()
+}
+
+/** A stream offset: everything up to and including this snapshot id. */
+final case class GraftOffset(snapshotId: Long) extends Offset {
+  override def json(): String = s"""{"snapshotId":$snapshotId}"""
 }
 
 /** Incremental streaming read over the snapshot chain: offsets are
@@ -128,55 +165,13 @@ trait GraftAvailableNowStream extends SupportsTriggerAvailableNow {
   *    (-U/-D) are NOT surfaced — deletes are invisible here by
   *    contract; consume `$changelog` with `retractions` to see them.
   */
-final case class GraftOffset(snapshotId: Long) extends Offset {
-  override def json(): String = s"""{"snapshotId":$snapshotId}"""
-}
-
 class GraftMicroBatchStream(tableDir: Path, schema: TableSchema,
     required: StructType,
     startSnapshot: Option[Long] = None,
     consumerId: Option[String] = None,
     maxPerTrigger: Option[Long] = None)
-  extends MicroBatchStream with GraftAvailableNowStream {
-
-  private val io = graft.format.FileIO.resolve(schema.ioSpec)
-  private val sm = new SnapshotManager(tableDir, io = io)
-
-  override protected def currentLatestSnapshotId: Long =
-    sm.latestSnapshotId.getOrElse(0L)
-
-  override protected def maxSnapshotsPerTrigger: Option[Long] = maxPerTrigger
-
-  override protected def consumerContext
-      : Option[(Path, graft.format.FileIO, String)] =
-    consumerId.map(id => (tableDir, io, id))
-
-  /** First offset: 0 (full replay), a specific snapshot id, or -1 for
-    * "latest" (only new commits stream — the scan-from-now mode a
-    * large table needs; replaying 100 TB of history is not a default
-    * anyone wants by accident, but 0 preserves batch/stream parity).
-    * A registered consumer's recorded progress seeds a FRESH
-    * checkpoint (this method is only consulted when the checkpoint has
-    * no offsets) unless an explicit fromSnapshot overrides it — so a
-    * pipeline can relocate its checkpoint without replaying history,
-    * exactly what the consumer file is for.
-    */
-  override def initialOffset(): Offset = GraftOffset(startSnapshot match {
-    case Some(-1L) => sm.latestSnapshotId.getOrElse(0L)
-    case Some(id) => id
-    case None => consumerSeed.getOrElse(0L)
-  })
-
-  // not called once SupportsAdmissionControl is implemented; Spark
-  // routes through latestOffset(start, limit)
-  override def latestOffset(): Offset = GraftOffset(currentLatestSnapshotId)
-
-  override def deserializeOffset(json: String): Offset = {
-    val id = "\"snapshotId\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(json)
-      .map(_.group(1).toLong)
-      .getOrElse(throw new IllegalArgumentException(s"Bad offset: $json"))
-    GraftOffset(id)
-  }
+  extends GraftAvailableNowStream(tableDir, schema, startSnapshot,
+    consumerId, maxPerTrigger) {
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
     ScanPlanner.appendDeltas(sm, start.asInstanceOf[GraftOffset].snapshotId,
@@ -195,6 +190,4 @@ class GraftMicroBatchStream(tableDir: Path, schema: TableSchema,
       schema.trimmedPrimaryKeys, isPk = schema.isPrimaryKeyTable,
       required.json, merge = false, fieldIds = schema.idMap,
       ioSpec = schema.ioSpec, dropNonAdd = true)
-
-  override def stop(): Unit = ()
 }

@@ -107,7 +107,7 @@ class GraftReplaceBatchWrite(tableDir: Path, schema: TableSchema,
   * single clustering expression covers both), so a large MERGE writes
   * up to tasks × buckets delta files. Commit-triggered compaction
   * bounds every bucket's live file count at O(trigger) right after
-  * (ScaleChecks' merge canary measures it), so read amplification
+  * (ConnectorSpec's spill test pins the fold), so read amplification
   * never accumulates.
   *
   * Mechanics: Spark's delta rewrite (`SupportsDelta`) projects the

@@ -127,7 +127,7 @@ class GraftScanBuilder(tableDir: Path, schema: TableSchema,
       io = graft.format.FileIO.resolve(schema.ioSpec))
     lazy val aggSnapshot = ScanPlanner.snapshot(sm, pinnedSnapshot)
     lazy val liveFiles: Seq[DataFileMeta] =
-      aggSnapshot.map(sm.liveFiles).getOrElse(Seq.empty)
+      aggSnapshot.map(sm.liveFiles(_)).getOrElse(Seq.empty)
     def countable(e: org.apache.spark.sql.connector.expressions.Expression)
         : Option[String] = e match {
       case nr: NamedReference if nr.fieldNames().length == 1 =>
@@ -414,7 +414,7 @@ class GraftScan(tableDir: Path, schema: TableSchema, required: StructType,
     */
   private lazy val live: Seq[DataFileMeta] = range match {
     case Some((from, to)) => ScanPlanner.appendDeltas(sm, from, to).flatMap(_._2)
-    case None => snapshot.map(sm.liveFiles).getOrElse(Seq.empty)
+    case None => snapshot.map(sm.liveFiles(_)).getOrElse(Seq.empty)
   }
 
   /** Files after pruning and the runtime filters. Memoized per

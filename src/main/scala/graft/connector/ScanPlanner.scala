@@ -34,7 +34,7 @@ object ScanPlanner {
 
   /** The live files of [[snapshot]]. */
   def liveFiles(sm: SnapshotManager, pinned: Option[Long]): Seq[DataFileMeta] =
-    snapshot(sm, pinned).map(sm.liveFiles).getOrElse(Seq.empty)
+    snapshot(sm, pinned).map(sm.liveFiles(_)).getOrElse(Seq.empty)
 
   /** A snapshot a range read needs. Ids go missing only through expiry
     * (a rollback publishes a new snapshot and removes none), so a missing
@@ -121,6 +121,31 @@ object ScanPlanner {
       filters.forall(flt =>
         Values.evalExact(flt, pTypes.get, value).getOrElse(!strict))
     }
+  }
+
+  /** `filters` with each literal coerced to its column's type
+    * ([[Values.coerce]]). A conjunct holding a lossy literal is dropped:
+    * undecided, it keeps every file.
+    */
+  def coerced(schema: TableSchema, filters: Seq[Filter]): Seq[Filter] = {
+    def lit(c: String, v: Any): Option[Any] =
+      schema.fields.find(_.name == c).fold[Option[Any]](Some(v))(f =>
+        Values.coerce(f.dataType, v))
+    def go(f: Filter): Option[Filter] = f match {
+      case EqualTo(c, v) => lit(c, v).map(EqualTo(c, _))
+      case LessThan(c, v) => lit(c, v).map(LessThan(c, _))
+      case LessThanOrEqual(c, v) => lit(c, v).map(LessThanOrEqual(c, _))
+      case GreaterThan(c, v) => lit(c, v).map(GreaterThan(c, _))
+      case GreaterThanOrEqual(c, v) => lit(c, v).map(GreaterThanOrEqual(c, _))
+      case In(c, vs) =>
+        val xs = vs.toSeq.flatMap(lit(c, _))
+        if (xs.length == vs.length) Some(In(c, xs.toArray)) else None
+      case And(l, r) => for (a <- go(l); b <- go(r)) yield And(a, b)
+      case Or(l, r) => for (a <- go(l); b <- go(r)) yield Or(a, b)
+      case Not(c) => go(c).map(Not)
+      case other => Some(other)
+    }
+    filters.flatMap(go)
   }
 
   /** The files of `live` that `filters` can touch. `accepted` conjuncts

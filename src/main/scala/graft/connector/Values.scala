@@ -48,6 +48,52 @@ object Values {
       case other => throw new IllegalArgumentException(s"partition type $other")
     }
 
+  /** A filter literal as an external value of `dt` that [[toInternal]]
+    * maps exactly: a number converts only when the conversion loses
+    * nothing (Int→Long, a whole Double→Long, a Long→Double that round-
+    * trips). None for a lossy or mistyped literal, whose conjunct then
+    * stays undecided. Spark coerces DSv2 pushdown literals itself; the
+    * facade's `PredicateBuilder` passes on whatever the caller wrote.
+    */
+  def coerce(dt: DataType, v: Any): Option[Any] = v match {
+    case null => Some(null)
+    case n: java.lang.Number =>
+      // the literal's exact value; NaN, infinities and other Number
+      // classes have none, so only a same-typed float passes
+      val exact: Option[java.math.BigDecimal] = n match {
+        case _: java.lang.Byte | _: java.lang.Short | _: java.lang.Integer |
+             _: java.lang.Long => Some(java.math.BigDecimal.valueOf(n.longValue))
+        case _: java.lang.Float | _: java.lang.Double =>
+          Some(n.doubleValue).filter(d => !d.isNaN && !d.isInfinite)
+            .map(new java.math.BigDecimal(_))
+        case _ => None
+      }
+      def integral(lo: Long, hi: Long): Option[Long] = exact.flatMap(x =>
+        scala.util.Try(x.longValueExact).toOption.filter(l => l >= lo && l <= hi))
+      def roundTrips(d: Double): Boolean =
+        exact.exists(new java.math.BigDecimal(d).compareTo(_) == 0)
+      (dt, n) match {
+        case (ByteType, _) => integral(Byte.MinValue, Byte.MaxValue).map(_.toByte)
+        case (ShortType, _) => integral(Short.MinValue, Short.MaxValue).map(_.toShort)
+        case (IntegerType, _) => integral(Int.MinValue, Int.MaxValue).map(_.toInt)
+        case (LongType, _) => integral(Long.MinValue, Long.MaxValue)
+        case (FloatType, f: java.lang.Float) => Some(f)
+        case (FloatType, _) =>
+          exact.map(_.floatValue).filter(f => roundTrips(f.toDouble))
+        case (DoubleType, d: java.lang.Double) => Some(d)
+        case (DoubleType, _) => exact.map(_.doubleValue).filter(roundTrips)
+        case _ => None
+      }
+    case _ => Some(v).filter(x => (dt, x) match {
+      case (StringType, _: String | _: UTF8String) => true
+      case (BooleanType, _: java.lang.Boolean) => true
+      case (DateType, _: java.sql.Date | _: java.time.LocalDate) => true
+      case (TimestampType, _: java.sql.Timestamp | _: java.time.Instant) => true
+      case (BinaryType, _: Array[Byte]) => true
+      case _ => false
+    })
+  }
+
   /** External (Filter literal) value → Catalyst-internal comparable. */
   def toInternal(dt: DataType, v: Any): Any = v match {
     case null => null

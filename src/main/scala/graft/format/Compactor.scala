@@ -163,11 +163,10 @@ object Compactor extends Serializable {
 
   /** Straggler guidance: a (partition, bucket) is one merge task, so a
     * hot bucket caps read parallelism and becomes the straggler at
-    * scale (ScaleChecks' hot-bucket canary quantifies it; README
-    * "Bucket sizing"). Warn — once per table per process — when any
-    * bucket's live pre-merge rows exceed `bucket.rows-warning-
-    * threshold` (default 64M ≈ tens of seconds of single-task merge;
-    * <= 0 disables). Metadata-only: the counts come from the manifest
+    * scale (README "Bucket sizing"). Warn — once per table per
+    * process — when any bucket's live pre-merge rows exceed
+    * `bucket.rows-warning-threshold` (default 64M ≈ tens of seconds
+    * of single-task merge; <= 0 disables). Metadata-only: the counts come from the manifest
     * entries the compaction check already folded; tables that opt out
     * of compaction (`write-only`, disabled trigger) audit only every
     * 16th snapshot so bulk-load commits stay free of the fold.

@@ -27,8 +27,8 @@ import scala.jdk.CollectionConverters._
 trait FileIO {
   def readString(path: Path): String
   def readBytes(path: Path): Array[Byte]
-  /** Atomic publish, replace-ok (manifests are UUID-named; LATEST hint
-    * is replaced). */
+  /** Atomic publish, replace-ok (manifests are UUID-named; consumer
+    * files are replaced). */
   def writeAtomic(path: Path, bytes: Array[Byte]): Unit
   /** True iff `path` did not exist and now holds `content` (the
     * optimistic-commit primitive). */

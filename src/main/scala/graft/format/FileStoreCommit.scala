@@ -109,7 +109,7 @@ object FileStoreCommit {
     while (attempt < 100) {
       val base = sm.latestSnapshot
       MergeRuleFence.check(sm.tableDir, schemaId)
-      val live = base.map(sm.liveFiles).getOrElse(Seq.empty)
+      val live = base.map(sm.liveFiles(_)).getOrElse(Seq.empty)
       val (deletes, adds) = plan(base, live) match {
         case Some(entries) => entries
         case None => return None

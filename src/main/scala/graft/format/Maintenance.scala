@@ -125,18 +125,12 @@ object Maintenance {
     val mcache = scala.collection.mutable.HashMap.empty[String, Seq[ManifestEntry]]
     def readM(name: String): Seq[ManifestEntry] =
       mcache.getOrElseUpdate(name, sm.readManifest(name))
-    def liveOf(s: Snapshot): Seq[DataFileMeta] = {
-      val entries = s.manifests.flatMap(readM)
-      val deleted = entries.filterNot(_.isAdd).map(_.file.fileName).toSet
-      entries.filter(e => e.isAdd && !deleted.contains(e.file.fileName))
-        .map(_.file)
-    }
     // reachable data files = union of the retained snapshots' LIVE
     // sets (ADDs folded against DELETEs per snapshot) — files dropped
     // by compaction/overwrite before the cutoff become garbage even
     // though old manifests still mention them
     val reachable = retained.flatMap(s =>
-      liveOf(s).map(_.fileName)).toSet
+      sm.liveFiles(s, readM).map(_.fileName)).toSet
 
     // Expiry is purely METADATA-DRIVEN: the deletable universe is what
     // THIS table's known snapshots (expired + retained, read above)
@@ -184,7 +178,8 @@ object Maintenance {
     val lateKeep = keepManifests ++ lateTags.flatMap(_.manifests) ++
       lateConsumerSnaps.flatMap(_.manifests)
     val lateReachable = reachable ++
-      (lateTags ++ lateConsumerSnaps).flatMap(s => liveOf(s).map(_.fileName))
+      (lateTags ++ lateConsumerSnaps).flatMap(s =>
+        sm.liveFiles(s, readM).map(_.fileName))
 
     val snapshotDir = tableDir.resolve("snapshot")
     val manifestDir = tableDir.resolve("manifest")

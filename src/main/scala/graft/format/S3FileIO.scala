@@ -24,7 +24,7 @@ import java.nio.file.{Files, Path}
   * 100 TB note: data/manifest objects are immutable and written once
   * (UUID names), so eventual LIST consistency only matters for the
   * snapshot listing, where S3's strong read-after-write (since 2020)
-  * plus the LATEST hint keep commits visible; retries stay the
+  * keeps commits visible; retries stay the
   * caller's concern as with the local implementation.
   */
 final class S3FileIO(

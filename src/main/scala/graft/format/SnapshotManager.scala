@@ -52,7 +52,6 @@ object AtomicPublisher {
   * {{{
   * <table>/schema/schema-<i>        table schema versions
   * <table>/snapshot/snapshot-<n>    snapshot JSON (create-exclusive publish)
-  * <table>/snapshot/LATEST          current snapshot id hint
   * <table>/manifest/manifest-<uuid> immutable manifest (ADD/DELETE entries)
   * <table>/[<k>=<v>/…]bucket-<b>/<data|compact>-<uuid>.<ext>
   *                                  data files ([[DataFileWriter]])
@@ -87,9 +86,9 @@ final class SnapshotManager(val tableDir: Path,
       // every read and commit with NumberFormatException
       .flatMap(_.stripPrefix("snapshot-").toLongOption)
 
+  /** The highest listed snapshot id: the listing is the only record of
+    * the latest snapshot. */
   def latestSnapshotId: Option[Long] = {
-    // LATEST is a hint; the listing is authoritative (hint write races
-    // are benign).
     val ids = snapshotIds
     if (ids.isEmpty) None else Some(ids.max)
   }
@@ -257,27 +256,25 @@ final class SnapshotManager(val tableDir: Path,
     } else (baseManifests :+ delta, Seq.empty)
   }
 
-  /** Fold the manifest chain of a snapshot into the live file set. */
-  def liveFiles(s: Snapshot): Seq[DataFileMeta] = {
-    val entries = s.manifests.flatMap(readManifest)
+  /** Fold the manifest chain of a snapshot into the live file set,
+    * reading each manifest through `read` (a caller's per-run cache). */
+  def liveFiles(s: Snapshot,
+      read: String => Seq[ManifestEntry] = readManifest): Seq[DataFileMeta] = {
+    val entries = s.manifests.flatMap(read)
     val deleted = entries.filterNot(_.isAdd).map(_.file.fileName).toSet
     entries.filter(e => e.isAdd && !deleted.contains(e.file.fileName)).map(_.file)
   }
 
   def liveFilesLatest: Seq[DataFileMeta] =
-    latestSnapshot.map(liveFiles).getOrElse(Seq.empty)
+    latestSnapshot.map(liveFiles(_)).getOrElse(Seq.empty)
 
   /** Publish via the [[AtomicPublisher]]; returns false on id collision
-    * (caller re-plans against the newer snapshot and retries). The
-    * LATEST hint is best-effort (readers treat the listing as
-    * authoritative), so its non-atomicity on object stores is benign.
+    * (caller re-plans against the newer snapshot and retries).
     */
   def tryCommitSnapshot(s: Snapshot): Boolean = {
     io.createDirectories(snapshotDir)
     val target = snapshotDir.resolve(s"snapshot-${s.id}")
     if (io.exists(target)) return false // fast path; the publish decides
-    if (!pub.putIfAbsent(target, s.toJson)) return false
-    io.writeAtomicString(snapshotDir.resolve("LATEST"), s.id.toString)
-    true
+    pub.putIfAbsent(target, s.toJson)
   }
 }

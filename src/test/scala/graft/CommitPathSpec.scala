@@ -47,14 +47,17 @@ class CommitPathSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Every snapshot of the table: its record count is the sum over its
     * live files, its sequence high-water mark covers every live file
-    * and never decreases, ids run 1..n, and (kind, identifier) are as
-    * expected.
+    * and never decreases, ids run 1..n, `snapshot/` holds nothing but
+    * their files, and (kind, identifier) are as expected.
     */
   private def checkAccounting(name: String,
       expected: Seq[(String, Option[String])]): Unit = {
     val sm = new SnapshotManager(dir(name))
     val snaps = sm.existingSnapshotIds.map(sm.snapshot)
     assert(snaps.map(_.id) == (1L to snaps.size.toLong), name)
+    val listed = dir(name).resolve("snapshot").toFile.list().toSet
+    assert(listed == snaps.map(s => s"snapshot-${s.id}").toSet,
+      s"$name: snapshot/ lists $listed")
     var prevSeq = 0L
     snaps.foreach { s =>
       val live = sm.liveFiles(s)

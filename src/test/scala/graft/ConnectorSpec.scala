@@ -476,7 +476,7 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("write-buffer-rows spills sorted L0 runs; merged read stays LWW") {
     spark.sql("CREATE TABLE graft.default.t_spill (k BIGINT, v BIGINT) " +
       "TBLPROPERTIES ('primary-key'='k', 'bucket'='1', " +
-      "'write-buffer-rows'='25')")
+      "'write-buffer-rows'='25', 'compaction.trigger-file-count'='5')")
     // ONE insert of 100 rows with a 25-row buffer: the single bucket's
     // task flushes ≥4 sorted L0 runs inside a single commit
     spark.sql("INSERT INTO graft.default.t_spill " +
@@ -486,9 +486,18 @@ class ConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(files > 1, s"expected multiple spilled runs, got $files file(s)")
     // keys split across runs must still merge to one row each
     assert(spark.table("graft.default.t_spill").count() == 100)
-    // second commit overwrites even keys — LWW across spilled runs
+    val sm = new graft.format.SnapshotManager(
+      warehouse.resolve("default.db/t_spill"))
+    def kinds = sm.existingSnapshotIds.map(sm.snapshot(_).commitKind)
+    assert(kinds == Seq("APPEND") && sm.liveFilesLatest.size == 4,
+      s"100 rows / 25-row buffer: 4 runs, under the trigger: $kinds")
+    // second commit overwrites even keys — LWW across spilled runs. Its
+    // 2 runs take the bucket to 6 >= 5 live files: the same commit
+    // publishes a COMPACT snapshot leaving one file per bucket
     spark.sql("INSERT INTO graft.default.t_spill " +
       "SELECT id * 2, id * 2 + 1000 FROM range(50)")
+    assert(kinds == Seq("APPEND", "APPEND", "COMPACT"), kinds)
+    assert(sm.liveFilesLatest.groupBy(_.bucket).values.forall(_.size == 1))
     val got = spark.sql(
       "SELECT count(*), " +
         "sum(CASE WHEN k % 2 = 0 AND v = k + 1000 THEN 1 ELSE 0 END), " +

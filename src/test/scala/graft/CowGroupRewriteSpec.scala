@@ -98,5 +98,35 @@ class CowGroupRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"partition 1's group must survive unrewritten: $before -> $after")
     assert(spark.sql("SELECT k FROM graft.default.cowp ORDER BY k")
       .collect().map(_.getLong(0)).toSeq == Seq(10L, 11L, 90L))
+
+    // a point DELETE rewrites exactly one of 16 (partition, bucket)
+    // groups, with Spark's runtime _file group filter and without it
+    // (then the scan's own partition/bucket pruning alone bounds it)
+    spark.sql("CREATE TABLE graft.default.cowg " +
+      "(p INT, k BIGINT, v STRING) PARTITIONED BY (p) " +
+      "TBLPROPERTIES ('primary-key'='p,k','bucket'='4'," +
+      "'merge-engine'='first-row')")
+    spark.sql("INSERT INTO graft.default.cowg " +
+      "SELECT CAST(id % 4 AS INT), id, 'x' FROM range(0, 400)")
+    val gsm = new graft.format.SnapshotManager(
+      warehouse.resolve("default.db/cowg"))
+    def groups(): Map[(Seq[String], Int), Set[String]] =
+      gsm.liveFilesLatest.groupBy(f => (f.partition, f.bucket))
+        .map { case (g, fs) => g -> fs.map(_.fileName).toSet }
+    assert(groups().size == 16)
+    def pointDelete(k: Long): Set[(Seq[String], Int)] = {
+      val before = groups()
+      spark.sql(s"DELETE FROM graft.default.cowg WHERE p = ${k % 4} AND k = $k")
+      val after = groups()
+      (before.keySet ++ after.keySet).filter(g => before.get(g) != after.get(g))
+    }
+    val on = pointDelete(123L)
+    assert(on.size == 1 && on.head._1 == Seq("3"), on)
+    val groupFilter =
+      "spark.sql.optimizer.runtime.rowLevelOperationGroupFilter.enabled"
+    spark.conf.set(groupFilter, "false")
+    val off = try pointDelete(205L) finally spark.conf.unset(groupFilter)
+    assert(off.size == 1 && off.head._1 == Seq("1"), off)
+    assert(spark.table("graft.default.cowg").count() == 398)
   }
 }

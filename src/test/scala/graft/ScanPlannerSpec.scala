@@ -114,6 +114,37 @@ class ScanPlannerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(facade.size == 1 && facade.head.contains(s"bucket-$bucket/"), facade)
   }
 
+  test("facade literals are coerced to the column type, lossy ones keep files") {
+    spark.sql("CREATE TABLE graft.default.pk_lit (k BIGINT, v STRING) " +
+      "TBLPROPERTIES ('primary-key'='k','bucket'='2')")
+    spark.sql("INSERT INTO graft.default.pk_lit SELECT id, 'a' FROM range(0, 10, 1, 1)")
+    val low = liveFiles("pk_lit")
+    spark.sql("INSERT INTO graft.default.pk_lit " +
+      "SELECT id, 'b' FROM range(100, 110, 1, 1)")
+    def holding(files: Set[String], k: Long): String = {
+      val bucket = graft.connector.Values.bucketOf(Seq(k.toString), 2)
+      files.find(_.contains(s"bucket-$bucket/")).get
+    }
+    def check(p: PredicateBuilder => Predicate, keys: Seq[Long],
+        mustKeep: Set[String]): Set[String] = {
+      val rb = catalog.getTable("default.pk_lit").newReadBuilder()
+      rb.withFilter(p(rb.newPredicateBuilder()))
+      val planned = rb.newScan().plan().splits.flatMap(_.filePaths).toSet
+      assert(rb.newRead().toLocalRows().map(_.getLong(0)).sorted.toSeq == keys)
+      assert(mustKeep.subsetOf(planned), s"dropped ${mustKeep -- planned}")
+      planned
+    }
+    // Int literals on a BIGINT key: exact, so they prune (and bucket-route)
+    assert(check(_.equal("k", 5), Seq(5L), Set(holding(low, 5))) ==
+      Set(holding(low, 5)))
+    val high = liveFiles("pk_lit") -- low
+    check(_.isIn("k", Seq(5, 103)), Seq(5L, 103L),
+      Set(holding(low, 5), holding(high, 103)))
+    // 5.5 has no BIGINT equal: the conjunct is undecided, nothing pruned
+    assert(check(_.lessThan("k", 5.5), (0L to 5L),
+      (0L to 5L).map(holding(low, _)).toSet) == liveFiles("pk_lit"))
+  }
+
   test("copy-on-write rewrite scans keep a surviving group whole") {
     spark.sql("CREATE TABLE graft.default.cow (k BIGINT, v STRING) " +
       "TBLPROPERTIES ('primary-key'='k','bucket'='1','merge-engine'='first-row')")

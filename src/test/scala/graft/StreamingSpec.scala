@@ -692,6 +692,32 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val idents = sm.existingSnapshotIds.map(sm.snapshot)
       .flatMap(_.commitIdentifier)
     assert(idents.nonEmpty, "streaming commits must carry epoch identifiers")
+
+    // an aggregation sink folds at ingest: one epoch per source commit
+    // trips commit-triggered compaction, and the sums stay exact
+    spark.sql("CREATE TABLE graft.default.sw_sum " +
+      "(k BIGINT, total BIGINT, n BIGINT) " +
+      "TBLPROPERTIES ('primary-key'='k','bucket'='1'," +
+      "'merge-engine'='aggregation'," +
+      "'fields.total.aggregate-function'='sum'," +
+      "'fields.n.aggregate-function'='sum'," +
+      "'compaction.trigger-file-count'='2')")
+    spark.readStream.option("max-snapshots-per-trigger", "1")
+      .table("graft.default.sw_src")
+      .selectExpr("k", "v AS total", "CAST(1 AS BIGINT) AS n")
+      .writeStream
+      .option("checkpointLocation",
+        Files.createTempDirectory("graft-swsum").toString)
+      .trigger(Trigger.AvailableNow())
+      .toTable("graft.default.sw_sum")
+      .awaitTermination()
+    assert(spark.sql("SELECT k, total, n FROM graft.default.sw_sum ORDER BY k")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq ==
+      Seq((1L, 21L, 2L), (2L, 45L, 2L), (3L, 30L, 1L)))
+    val sumSm = new graft.format.SnapshotManager(
+      warehouse.resolve("default.db/sw_sum"))
+    assert(sumSm.existingSnapshotIds.map(sumSm.snapshot(_).commitKind)
+      .contains("COMPACT"))
   }
 
   test("streaming WRITE: a replayed epoch commit is skipped, not doubled") {
